@@ -401,13 +401,20 @@ def churn_step(rng, tables: list[CatalogTable], n_changes: int) -> ChurnStep:
 STOPWORDS = ["the", "and", "of", "to", "in", "is", "that", "with", "for", "as"]
 
 
-def corpus(seed: int, base_docs: int, replicas: int) -> pa.Table:
+@dataclass
+class Corpus:
+    table: pa.Table
+    base: dict  # doc_id -> index of the document it is a copy of
+    edits: dict  # doc_id -> number of words that differ from that document
+
+
+def corpus(seed: int, base_docs: int, replicas: int) -> Corpus:
     """``base_docs`` seeded documents, each copied ``replicas`` times.
     Copy 0 is the original; every other copy gets 0-3 word edits, so
     the corpus holds exact duplicates (0 edits) and near duplicates."""
     rng = np.random.default_rng([seed, 3])
     vocab = np.array([f"w{i:04d}" for i in range(4000)] + STOPWORDS * 40)
-    ids, texts, sources = [], [], []
+    ids, texts, sources, base, edits = [], [], [], {}, {}
     doc_id = 0
     for b in range(base_docs):
         words = vocab[rng.integers(0, len(vocab), int(rng.integers(40, 120)))].tolist()
@@ -420,10 +427,12 @@ def corpus(seed: int, base_docs: int, replicas: int) -> pa.Table:
             ids.append(doc_id)
             texts.append(" ".join(w))
             sources.append(f"src{b % 7}")
+            base[doc_id] = b
+            edits[doc_id] = sum(1 for x, y in zip(w, words) if x != y)
     order = rng.permutation(len(ids))
     ids = np.array(ids)[order]
     texts = [texts[i] for i in order]
-    return pa.table(
+    table = pa.table(
         {
             "doc_id": pa.array(ids, pa.int64()),
             "text": texts,
@@ -432,3 +441,4 @@ def corpus(seed: int, base_docs: int, replicas: int) -> pa.Table:
             "n_chars": pa.array([len(t) for t in texts], pa.int64()),
         }
     )
+    return Corpus(table, base, edits)

@@ -4,15 +4,16 @@
 
 Run from the repository root. The run builds a local Spark session with
 one core per available CPU, generates its inputs from ``--seed``, sets
-the workload up several times (``setup_s`` is the median), then runs
-operations back to back for ``--seconds`` seconds (at least three of the
-workload's primary kind) and checks each one. The last line of standard
-output is one JSON object: ``correct``, ``attempted``, ``failed`` and
-``metrics``. With ``--trace 0`` the metrics are the end-to-end ones;
-with ``--trace 1`` every other cycle of the workload's op pattern runs
-traced and the metrics are the per-layer ones (see ``tracing.py``),
-plus the tracing overhead measured against the untraced operations of
-the same run.
+the workload up (several times where set-up is cheap; ``setup_s`` is the
+median), then runs operations back to back for ``--seconds`` seconds (at
+least two of the workload's primary kind) and checks each one. The last
+line of standard output is one JSON object: ``correct``, ``attempted``,
+``failed`` and ``metrics``, named and with units as BENCHMARK.json lists
+them. With ``--trace 0`` the metrics are the end-to-end ones; with
+``--trace 1`` every other cycle of the workload's op pattern runs traced
+and the metrics are the per-layer ones (see ``tracing.py``), plus the
+tracing overhead measured against the untraced operations of the same
+run.
 
 Everything the run writes stays under ``.perfbench/`` in the repository
 root: a scratch directory (removed at exit) and
@@ -43,56 +44,20 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-END_TO_END_UNITS = {
-    "setup_s": "s",
-    "op_p50_s": "s",
-    "rows_per_s": "1/s",
-    "peak_rss_mb": "MB",
-}
-MIN_PRIMARY_OPS = 3
-# set-ups per run (setup_s is their median): a vault deploy is seconds
-# of work, pinning the corpus a fraction of a second
-SETUPS = {"dv_incremental": 2, "corpus_dedup": 7, "catalog_churn": 3}
-SMOKE_OPS = {"dv_incremental": 5, "corpus_dedup": 1, "catalog_churn": 3}
+MIN_PRIMARY_OPS = 2
+# set-ups per run (setup_s is their median): pinning the corpus takes a
+# fraction of a second; a vault deploy or a catalog include+classify
+# takes seconds, so those set up once to keep a run within its budget
+SETUPS = {"dv_incremental": 1, "corpus_dedup": 7, "catalog_churn": 1}
+SMOKE_OPS = {"dv_incremental": 6, "corpus_dedup": 1, "catalog_churn": 3}
 
 
-def per_layer_units() -> dict[str, str]:
-    from tracing import LAYERS
-
-    units = {"busy_s": "s/op", "calls": "count/op", "jobs": "count/op",
-             "executor_cpu_ms": "ms/op", "shuffle_write_bytes": "B/op", "spill_bytes": "B/op"}
-    out = {f"{layer}.{k}": u for layer in LAYERS for k, u in units.items()}
-    out.update(
-        {
-            "catalog.snapshot_rows": "count/op",
-            "catalog.change_ratio": "ratio",
-            "classify.prompts": "count/op",
-            "classify.transport_calls": "count/op",
-            "classify.transport_wait_s": "s/op",
-            "classify.retry_calls": "count/op",
-            "model.status_rows": "count/op",
-            "api.log_appends": "count/op",
-            "build.rows_staged": "count/op",
-            "build.rows_appended": "count/op",
-            "build.append_ratio": "ratio",
-            "warehouse.files_written": "count/op",
-            "warehouse.bytes_written": "B/op",
-            "warehouse.live_files": "count",
-            "warehouse.vault_bytes_per_row": "B",
-            "functions.lsh_pairs": "count/op",
-            "pipeline.stage_rows.input": "count/op",
-            "pipeline.stage_rows.gopher_rules": "count/op",
-            "pipeline.stage_rows.exact_dedup": "count/op",
-            "pipeline.stage_rows.sharded": "count/op",
-            "spark.job_floor_ms": "ms",
-            "spark.jobs_per_op": "count/op",
-            "spark.driver_gap_ms": "ms/op",
-            "trace.untraced_op_p50_s": "s",
-            "trace.traced_op_p50_s": "s",
-            "trace.overhead_ratio": "ratio",
-        }
-    )
-    return out
+def metric_units(trace: int) -> dict[str, str]:
+    """Name -> unit of every metric a run prints, as BENCHMARK.json lists
+    them: the end-to-end ones, or with ``--trace 1`` the per-layer ones."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    return {m["name"]: m["unit"] for m in bench["per_layer" if trace else "end_to_end"]}
 
 
 def parse_args(argv):
@@ -107,18 +72,14 @@ def parse_args(argv):
 
 
 def quantiles(values: list[float]) -> dict:
-    """Median and, when at least ten samples lie beyond it, p90; with
-    the sample count they rest on."""
-    out = {"n": len(values), "p50": statistics.median(values) if values else None, "p90": None}
-    if len(values) >= 100:
-        out["p90"] = statistics.quantiles(values, n=10)[-1]
-    return out
+    """Median with the sample count it rests on."""
+    return {"n": len(values), "p50": statistics.median(values) if values else None}
 
 
 def job_floor_ms(spark) -> float:
     """Median latency of a trivial one-task job (every Spark job pays it)."""
     runs = []
-    for _ in range(15):
+    for _ in range(5):
         t0 = time.perf_counter()
         spark.range(10, numPartitions=1).count()
         runs.append((time.perf_counter() - t0) * 1e3)
@@ -251,7 +212,9 @@ def run(args, spark, work: str) -> tuple[dict, dict, list]:
     metrics = {
         "setup_s": setup["setup_s"],
         "op_p50_s": statistics.median(prim_s) if prim_s else 0.0,
-        "rows_per_s": statistics.median(o.rows / o.seconds for o in primary) if primary else 0.0,
+        # rows the pushes appended (dv_incremental), documents in
+        # (corpus_dedup) or status rows read (catalog_churn), per second
+        "rows_per_s": sum(o.rows for o in primary) / sum(prim_s) if primary else 0.0,
     }
     if args.trace:
         metrics = layer_metrics(wl, tracer, ops, op_gaps, calibration, n_setup_spans)
@@ -270,7 +233,7 @@ def layer_metrics(wl, tracer, ops, op_gaps, calibration, n_setup_spans) -> dict:
     for layer, fields in tracing.layer_totals(spans).items():
         for field, total in fields.items():
             out[f"{layer}.{field}"] = total / n
-    units = per_layer_units()
+    units = metric_units(1)
     c = tracer.counts
     for name in units:
         if name not in out and name.split(".")[0] in tracing.LAYERS:
@@ -321,7 +284,7 @@ def main(argv=None) -> int:
         "python": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss,
         "jvm": resource.getrusage(resource.RUSAGE_CHILDREN).ru_maxrss,
     }
-    units = per_layer_units() if args.trace else END_TO_END_UNITS
+    units = metric_units(args.trace)
     if not args.trace:
         metrics["peak_rss_mb"] = sum(rss_kb.values()) / 1024
     failed = sum(1 for o in ops if not o.ok)

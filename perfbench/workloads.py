@@ -143,12 +143,12 @@ DV_TABLES = ("customer", "orders")
 class DvIncremental(Workload):
     """Deploy the raw vault for customer and orders (the other five
     sources are registered and crawled but not included), then alternate
-    push and read: a push loads a delta into both tables, reads alternate
-    between their business views. Only the data is seeded; the op
-    pattern is fixed, so every seed runs the same mix, and every
-    measured push follows a read (a push right after a read is
-    consistently slower than one after a push, so mixing the two would
-    make the push median depend on how many ops fit in the run)."""
+    read and push: reads alternate between the two business views, a
+    push loads a delta into both tables. Only the data is seeded; the op
+    pattern is fixed, so every seed runs the same mix, and every push
+    follows a read (a push right after a read is consistently slower
+    than one after a push, so mixing the two would make the push median
+    depend on how many ops fit in the run)."""
 
     name = "dv_incremental"
     primary = "push"
@@ -199,18 +199,10 @@ class DvIncremental(Workload):
             got = self._view_fingerprint(table)
             if got != self.exp[table].fingerprint():
                 raise RuntimeError(f"deployed {table} view {got} != {self.exp[table].fingerprint()}")
-        # one checked, untimed push and read compile the push path, so
-        # the first measured push is neither a JVM warm-up sample nor the
-        # only one that does not follow a read
-        warm = [self._push(-1), self._read(DV_TABLES[-1])]
-        for w in warm:
-            if not w.ok:
-                raise RuntimeError(f"warm-up {w.kind} failed: {w.note}")
         return {
             "setup_s": prep_s + statistics.median(deploy_s),
             "catalog_prep_s": prep_s,
             "deploy_s": deploy_s,
-            "warmup_s": [w.seconds for w in warm],
         }
 
     def _autodw(self, root: str):
@@ -239,8 +231,8 @@ class DvIncremental(Workload):
 
     def op(self, i: int) -> OpResult:
         if i % 2:
-            return self._read(DV_TABLES[(i // 2) % len(DV_TABLES)])
-        return self._push(i)
+            return self._push(i)
+        return self._read(DV_TABLES[(i // 2) % len(DV_TABLES)])
 
     def _push(self, i: int) -> OpResult:
         """One load cycle: a seeded delta for every deployed table, each
@@ -256,7 +248,7 @@ class DvIncremental(Workload):
         t0 = time.perf_counter()
         msgs = {t: self.adw.go("Push-Table", f"main.{t}", load_ts=load_ts) for t in DV_TABLES}
         seconds = time.perf_counter() - t0
-        ok, notes = True, []
+        ok, notes, appended = True, [], 0
         for table, d in deltas.items():
             sats = {
                 k: [x.descriptor_link.alias for x in v]
@@ -266,9 +258,10 @@ class DvIncremental(Workload):
             m = re.search(r"hub \+(\d+), sats (\{.*\})", msgs[table])
             got = (int(m.group(1)), ast.literal_eval(m.group(2))) if m else None
             ok = ok and got == want
+            if got:
+                appended += got[0] + sum(got[1].values())
             notes.append(f"{msgs[table]} want {want}")
-        rows = sum(d.data.num_rows for d in deltas.values())
-        return OpResult("push", seconds, ok, rows, "; ".join(notes))
+        return OpResult("push", seconds, ok, appended, "; ".join(notes))
 
     def _read(self, table: str) -> OpResult:
         t0 = time.perf_counter()
@@ -304,20 +297,25 @@ class CorpusDedup(Workload):
 
     name = "corpus_dedup"
     primary = "corpus"
+    # share of planted near-duplicate pairs (a copy with at most one word
+    # edited, beside its original) that must end up in one cluster;
+    # MinHash-LSH is probabilistic, so a rare miss is allowed
+    MIN_NEAR_DUP_RECALL = 0.9
 
     def setup(self) -> dict:
         base, replicas = (40, 3) if self.smoke else (250, 4)
-        table = inputs.corpus(self.seed, base, replicas)
-        self.n_docs = table.num_rows
-        path = inputs.write_table(table, os.path.join(self.work, "docs.parquet"))
+        self.corpus = inputs.corpus(self.seed, base, replicas)
+        self.n_docs = self.corpus.table.num_rows
+        path = inputs.write_table(self.corpus.table, os.path.join(self.work, "docs.parquet"))
         pins = []
         for _ in range(self.setups):
             t0 = time.perf_counter()
             self.docs = self.spark.read.parquet(path).localCheckpoint(eager=True)
             pins.append(time.perf_counter() - t0)
-        # one checked, untimed op compiles the operators' code paths, so
-        # the first measured op is not a JVM warm-up sample (the first op
-        # takes about three times as long as the next)
+        # one checked, untimed op starts the Python workers, compiles the
+        # operators' code paths and fixes the reference fingerprints, so
+        # the first measured op is not a warm-up sample (it takes about
+        # three times as long as the next)
         self.reference = None
         warm = self.op(-1)
         if not warm.ok:
@@ -360,8 +358,11 @@ class CorpusDedup(Workload):
     def _check(self, surv, pairs, clusters, keep, fps) -> list[str]:
         """Cluster structure of the first op: every survivor has exactly
         one cluster, no candidate pair crosses clusters, each cluster's
-        id is its minimum member, and each cluster has one keep row that
-        is one of its members."""
+        id is its minimum member, each cluster has one keep row that is
+        one of its members, and the planted near duplicates were found:
+        fewer clusters than survivors, and the surviving copies with at
+        most one word edited share their original's cluster (up to
+        ``MIN_NEAR_DUP_RECALL``)."""
         problems = []
         n_surv = fps["sharded"][0]
         ids = surv.select("doc_id")
@@ -372,6 +373,16 @@ class CorpusDedup(Workload):
         ).collect()[0]
         if not (stats["n"] == stats["docs"] == n_surv):
             problems.append(f"clusters cover {stats['docs']} docs in {stats['n']} rows, want {n_surv}")
+        if not stats["clusters"] < n_surv:
+            problems.append(f"{stats['clusters']} clusters for {n_surv} survivors: no near duplicates")
+        near: dict = {}  # original -> clusters of its surviving near copies
+        for r in clusters.select("doc_id", "cluster_id").collect():
+            if self.corpus.edits[r["doc_id"]] <= 1:
+                near.setdefault(self.corpus.base[r["doc_id"]], []).append(r["cluster_id"])
+        planted = sum(len(c) - 1 for c in near.values())
+        found = sum(len(c) - len(set(c)) for c in near.values())
+        if not planted or found < self.MIN_NEAR_DUP_RECALL * planted:
+            problems.append(f"{found} of {planted} planted near-duplicate pairs clustered")
         if ids.join(clusters, "doc_id", "left_anti").limit(1).count():
             problems.append("a survivor has no cluster")
         lab = clusters.select(F.col("doc_id").alias("i"), F.col("cluster_id").alias("c"))
@@ -425,7 +436,7 @@ class CatalogChurn(Workload):
     CHANGES_PER_CYCLE = 4
 
     def setup(self) -> dict:
-        n_tables = 12 if self.smoke else 200
+        n_tables = 12 if self.smoke else 60
         self.transport = SimulatedLLM(self.tracer)
         times = []
         for k in range(self.setups):
