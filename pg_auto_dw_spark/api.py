@@ -119,6 +119,8 @@ class AutoDW:
         ):
             self.wh.create_table(name, schema)
         self._context: dict[str, dict] = {}
+        # (dv_repo listing, DVSchema JSON) of the last latest_dv_schema read
+        self._dv_cache: tuple | None = None
 
     # -- source registration (stand-in for "tables living in Postgres") --
     def register_source(self, schema_name: str, table_name: str, df: DataFrame) -> None:
@@ -190,7 +192,7 @@ class AutoDW:
                     r.category = "Descriptor"
                     r.confidence_score = "1.00"
                     r.reason = "Context override: marked not sensitive."
-        max_pk = tr.agg(F.max("pk_transformer_responses")).collect()[0][0] or 0
+        max_pk = self.wh.max_value("auto_dw.transformer_responses", "pk_transformer_responses") or 0
         now = self._clock()
         data = [
             (
@@ -205,10 +207,7 @@ class AutoDW:
             )
             for i, r in enumerate(all_rows)
         ]
-        self.wh.append(
-            "auto_dw.transformer_responses",
-            self.spark.createDataFrame(data, TRANSFORMER_RESPONSES_SCHEMA),
-        )
+        self.wh.append_rows("auto_dw.transformer_responses", data)
         self._log("transformer_client", "INFO", f"Inserted {len(data)} responses.")
         return len(data)
 
@@ -253,10 +252,7 @@ class AutoDW:
         so = self.wh.read("auto_dw.source_objects")
         tr = self.wh.read("auto_dw.transformer_responses")
         bc_rows = ready_build_call_rows(so, tr, self.confidence_threshold, build_id)
-        max_pk = (
-            self.wh.read("auto_dw.build_call").agg(F.max("pk_build_call")).collect()[0][0]
-            or 0
-        )
+        max_pk = self.wh.max_value("auto_dw.build_call", "pk_build_call") or 0
         from .functions.sequence import global_row_number
 
         bc = (
@@ -275,12 +271,7 @@ class AutoDW:
         dv = DVSchema(dw_schema=self.dw_schema, business_keys=business_keys)
         add_target_columns(dv)
 
-        self.wh.append(
-            "auto_dw.dv_repo",
-            self.spark.createDataFrame(
-                [(build_id, self._clock(), dv.to_json())], DV_REPO_SCHEMA
-            ),
-        )
+        self.wh.append_rows("auto_dw.dv_repo", [(build_id, self._clock(), dv.to_json())])
         build_and_load(
             self.wh,
             self.resolve_source,
@@ -479,20 +470,22 @@ class AutoDW:
             self.registry.register(meta)
         if "description" in ctx and len(parts) == 1:
             self.registry.schema_descriptions[parts[0]] = str(ctx["description"])
-        self.wh.append(
-            "auto_dw.context",
-            self.spark.createDataFrame(
-                [(key, json.dumps(ctx, sort_keys=True), self._clock())], CONTEXT_SCHEMA
-            ),
+        self.wh.append_rows(
+            "auto_dw.context", [(key, json.dumps(ctx, sort_keys=True), self._clock())]
         )
         self._log("update_context", "INFO", f"Context updated for {object_name}.")
         return "Context Updated"
 
     def latest_dv_schema(self) -> DVSchema | None:
-        rows = (
-            self.wh.read("auto_dw.dv_repo").orderBy(F.col("insert_time").desc()).limit(1).collect()
-        )
-        return DVSchema.from_json(rows[0]["schema"]) if rows else None
+        """The most recently deployed DVSchema. Its JSON is cached on the
+        dv_repo live-file listing, so a Push-Table queries the repo only
+        after a deploy (from any writer) has changed it."""
+        name = "auto_dw.dv_repo"
+        key = (self.wh.path(name), sorted(self.wh.data_files(name).items()))
+        if self._dv_cache is None or self._dv_cache[0] != key:
+            rows = self.wh.read(name).orderBy(F.col("insert_time").desc()).limit(1).collect()
+            self._dv_cache = (key, rows[0]["schema"] if rows else None)
+        return DVSchema.from_json(self._dv_cache[1]) if self._dv_cache[1] else None
 
     def create_views(self) -> list[str]:
         """Register the auto_dw tables and status functions as temp views
@@ -523,11 +516,5 @@ class AutoDW:
         return hashlib.sha256(text.encode()).hexdigest()
 
     def _log(self, process: str, level: str, message: str) -> None:
-        log = self.wh.read("auto_dw.log")
-        max_pk = log.agg(F.max("pk_log")).collect()[0][0] or 0
-        self.wh.append(
-            "auto_dw.log",
-            self.spark.createDataFrame(
-                [(max_pk + 1, self._clock(), process, level, message)], LOG_SCHEMA
-            ),
-        )
+        pk = (self.wh.max_value("auto_dw.log", "pk_log") or 0) + 1
+        self.wh.append_rows("auto_dw.log", [(pk, self._clock(), process, level, message)])

@@ -116,16 +116,11 @@ def load_link(
     dw_schema: str = "dw",
     load_ts: datetime.datetime | None = None,
 ) -> int:
-    """Create-if-missing + anti-join insert of new link keys."""
+    """Create-if-missing + anti-join insert of new link keys. Returns
+    rows appended, as the append observes them on the write."""
     table = f"{dw_schema}.link_{spec.name}"
     hk = f"link_{spec.name}_hk"
     wh.create_table(table, link_schema(spec))
     staged = link_stage_df(source, spec, load_ts=load_ts)
-    new_rows = staged.join(wh.read(table).select(hk), on=hk, how="left_anti").persist()
-    try:
-        n = new_rows.count()
-        if n:
-            wh.append(table, new_rows.select(*[f.name for f in link_schema(spec).fields]))
-    finally:
-        new_rows.unpersist()
-    return n
+    new_rows = staged.join(wh.read(table).select(hk), on=hk, how="left_anti")
+    return wh.append(table, new_rows.select(*link_schema(spec).names))

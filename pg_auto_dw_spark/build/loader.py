@@ -20,8 +20,13 @@ Scale notes (100 TB posture):
   prunes to nothing on first load.
 - Everything stays in whole-stage codegen: sha2/concat_ws are JVM
   built-ins; there is no Python in the load path.
+- Each load leg is ONE write action, like the reference's one
+  INSERT...SELECT: the appended-row count is observed on the write
+  (``Warehouse.append``), so nothing is persisted or counted first, and
+  the ghost check reads parquet footers instead of running a job.
 - Idempotency is structural: re-running a load anti-joins everything
-  away and appends 0 rows, matching the reference's re-run semantics.
+  away and appends 0 rows -- leaving no file or commit behind --
+  matching the reference's re-run semantics.
 """
 
 from __future__ import annotations
@@ -193,34 +198,25 @@ def load_hub(
     writer=None,
 ) -> int:
     """Ghost-init + anti-join insert of new hub keys. Returns rows
-    appended. ``writer`` overrides the append sink (a transaction's
-    ``txn.append`` for atomic whole-load commits); anti-joins always
-    read the LIVE table -- correct inside a transaction because hub
-    appends are key-novel by construction."""
+    appended, as the sink observes them on the write. ``writer``
+    overrides the append sink (a transaction's ``txn.append`` for
+    atomic whole-load commits); anti-joins always read the LIVE table
+    -- correct inside a transaction because hub appends are key-novel
+    by construction."""
     table = f"{dw_schema}.hub_{business_key.name}"
     sink = writer or wh.append
     hk = f"hub_{business_key.name}_hk"
-    existing = wh.read(table)
     appended = 0
     # Ghost init only when the hub is empty (dv_loader.rs:111-118 A4).
-    if existing.limit(1).count() == 0:
+    if wh.row_count(table) == 0:
         ghosts = _with_partition_cols(wh, table, ghost_records_df(source, business_key))
-        sink(table, ghosts)
-        appended += 2
+        appended += sink(table, ghosts)
     staged = _with_partition_cols(
         wh, table, hub_stage_df(source, business_key, load_ts=load_ts)
     )
-    new_rows = staged.join(wh.read(table).select(hk), on=hk, how="left_anti").persist()
-    try:
-        # persist so count + append execute the scan/hash/anti-join once
-        n = new_rows.count()
-        if n:
-            sink(
-                table, new_rows.select(*[f.name for f in wh.read(table).schema.fields])
-            )
-    finally:
-        new_rows.unpersist()
-    return appended + n
+    existing = wh.read(table)
+    new_rows = staged.join(existing.select(hk), on=hk, how="left_anti")
+    return appended + sink(table, new_rows.select(*existing.columns))
 
 
 def load_satellite(
@@ -242,18 +238,9 @@ def load_satellite(
     staged = _with_partition_cols(
         wh, table, satellite_stage_df(source, business_key, satellite_key, load_ts=load_ts)
     )
-    new_rows = staged.join(
-        wh.read(table).select(hk, hd), on=[hk, hd], how="left_anti"
-    ).persist()
-    try:
-        n = new_rows.count()
-        if n:
-            sink(
-                table, new_rows.select(*[f.name for f in wh.read(table).schema.fields])
-            )
-    finally:
-        new_rows.unpersist()
-    return n
+    existing = wh.read(table)
+    new_rows = staged.join(existing.select(hk, hd), on=[hk, hd], how="left_anti")
+    return sink(table, new_rows.select(*existing.columns))
 
 
 def load_dv_atomic(
@@ -307,14 +294,12 @@ def load_hub_multi(
     """
     table = f"{dw_schema}.hub_{business_key.name}"
     hk = f"hub_{business_key.name}_hk"
-    existing = wh.read(table)
     appended = 0
-    if existing.limit(1).count() == 0:
+    if wh.row_count(table) == 0:
         ghosts = _with_partition_cols(
             wh, table, ghost_records_df(sources[0][0], business_key)
         )
-        wh.append(table, ghosts)
-        appended += 2
+        appended += wh.append(table, ghosts)
 
     staged_parts = []
     for priority, (source, src_idx) in enumerate(sources):
@@ -349,14 +334,6 @@ def load_hub_multi(
         .drop("__rn", "__prio")
     )
     staged = _with_partition_cols(wh, table, staged)
-    new_rows = staged.join(wh.read(table).select(hk), on=hk, how="left_anti").persist()
-    try:
-        # persist so count + append execute the scan/hash/anti-join once
-        n = new_rows.count()
-        if n:
-            wh.append(
-                table, new_rows.select(*[f.name for f in wh.read(table).schema.fields])
-            )
-    finally:
-        new_rows.unpersist()
-    return appended + n
+    existing = wh.read(table)
+    new_rows = staged.join(existing.select(hk), on=hk, how="left_anti")
+    return appended + wh.append(table, new_rows.select(*existing.columns))

@@ -54,7 +54,6 @@ import os
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..warehouse import Warehouse
 
@@ -112,26 +111,6 @@ def with_bucket(
     merges, streaming merges -- must use the same bucketing."""
     return df.withColumn(
         bucket_col, F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets))
-    )
-
-
-def dim_schema(
-    key_fields: list[T.StructField],
-    tracked_fields: list[T.StructField],
-    bucket_col: str = "key_bucket",
-) -> T.StructType:
-    """Target-table schema: keys + tracked descriptors + bucket +
-    SCD2 metadata columns."""
-    return T.StructType(
-        list(key_fields)
-        + list(tracked_fields)
-        + [
-            T.StructField(bucket_col, T.LongType(), False),
-            T.StructField("valid_from", T.TimestampType(), True),
-            T.StructField("valid_to", T.TimestampType(), True),
-            T.StructField("current_flag", T.StringType(), False),
-            T.StructField("deleted_flag", T.StringType(), False),
-        ]
     )
 
 

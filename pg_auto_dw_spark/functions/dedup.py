@@ -39,13 +39,6 @@ def shingles_of(norm: Column, k: int = 5) -> Column:
     )
 
 
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct k-character shingles of the normalized text. NOTE:
-    single-expression form; hot paths bind the normalization first and
-    call ``shingles_of`` (see minhash_signatures_wide)."""
-    return shingles_of(F.regexp_replace(F.lower(text), r"\s+", " "), k)
-
-
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup via sha256 groupBy: canonical (min id) + group size.
 
@@ -109,51 +102,12 @@ def minhash_signatures_wide(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """(id, seed, minhash) long form of minhash_signatures_wide."""
-    wide = minhash_signatures_wide(df, text_col, id_col, num_hashes, shingle_k)
-    pairs = F.array(
-        *[
-            F.struct(F.lit(seed).alias("seed"), F.col(f"g{seed}").alias("minhash"))
-            for seed in range(num_hashes)
-        ]
-    )
-    return wide.select(id_col, F.explode(pairs).alias("p")).select(
-        id_col, F.col("p.seed").alias("seed"), F.col("p.minhash").alias("minhash")
-    )
-
-
-def lsh_band_keys(
-    signatures: DataFrame, id_col: str = "doc_id", band_size: int = 4
-) -> DataFrame:
-    """(id, band, band_key) from long-form signatures: band_key = md5 of
-    the band's minhashes in seed order. Kept for long-form inputs; the
-    candidate pipeline uses lsh_band_keys_wide (no extra shuffle)."""
-    banded = signatures.withColumn("band", (F.col("seed") / band_size).cast("int"))
-    agg = banded.groupBy(id_col, "band").agg(
-        F.array_sort(F.collect_list(F.struct("seed", "minhash"))).alias("sigs")
-    )
-    return agg.select(
-        id_col,
-        "band",
-        F.md5(
-            F.array_join(F.transform("sigs", lambda s: s["minhash"].cast("string")), ",")
-        ).alias("band_key"),
-    )
-
-
 def lsh_band_keys_wide(
     wide: DataFrame, id_col: str = "doc_id", band_size: int = 4
 ) -> DataFrame:
     """(id, band, band_key) straight from the wide signature -- pure
-    projection + explode, NO shuffle (vs. the long-form path's
-    groupBy(id, band) re-aggregation)."""
+    projection + explode, NO shuffle: band_key = md5 of the band's
+    minhashes in seed order."""
     seeds = [c for c in wide.columns if c.startswith("g")]
     bands = F.array(
         *[

@@ -64,12 +64,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    """Register every test table as a temp view (for spark.sql queries)."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_source(
     spark: SparkSession,
     path: str,

@@ -41,7 +41,9 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -513,10 +515,11 @@ class Warehouse:
         self._save_meta()
         # Zero-partition empty frame: createDataFrame([], schema)
         # parallelizes over defaultParallelism, so the metadata-only
-        # CREATE was a 32-empty-task write job (~0.5s each; four of
-        # them per fresh index warehouse). An emptyRDD writes just the
-        # directory + _SUCCESS with no tasks at all (guide section 5:
-        # metadata work should not fan out).
+        # CREATE was a 32-empty-task write job. An emptyRDD write runs
+        # one task instead, which still lands ONE zero-row part file
+        # (Spark keeps a schema-carrying file for an empty write) next
+        # to _SUCCESS -- so "is this table empty" must sum footer
+        # ``num_rows`` (``row_count``), never count files.
         empty = self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema)
         writer = empty.write.mode("overwrite")
         if partition_by:
@@ -728,32 +731,95 @@ class Warehouse:
             self._commit_generation(name, d, action=f"rollback(to={version})")
 
     # -- writes ---------------------------------------------------------
-    def append(self, name: str, df: DataFrame) -> None:
-        """INSERT...SELECT sink. With the default retention (1) this is
-        an in-place parquet append -- the cheap hot path for hub/sat
-        loads. Under ``retain_generations > 1`` the append becomes a
-        copy-on-write commit (hardlink live files into a fresh
-        generation, append there, pointer-swap) so that every retained
-        snapshot stays immutable -- an in-place append would leak new
-        files into the generation dir an older version still names."""
-        if self.retain_generations > 1:
-            with self.lock(name):
-                live = self.path(name)
-                gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-                if os.path.isdir(live):
-                    self._link_tree(live, gen)
-                else:
-                    os.makedirs(gen, exist_ok=True)
-                writer = df.write.mode("append")
-                if name in self._partitioning:
-                    writer = writer.partitionBy(*self._partitioning[name])
-                writer.parquet(gen)
+    def append(self, name: str, df: DataFrame) -> int:
+        """INSERT...SELECT sink; returns the rows appended. The count is
+        an ``Observation`` on the written frame, so it rides the write
+        job itself -- callers never need a separate count (or the
+        persist that would make one cheap).
+
+        With the default retention (1) this is an in-place parquet
+        append -- the cheap hot path for hub/sat loads. Under
+        ``retain_generations > 1`` the append becomes a copy-on-write
+        commit (hardlink live files into a fresh generation, append
+        there, pointer-swap) so that every retained snapshot stays
+        immutable -- an in-place append would leak new files into the
+        generation dir an older version still names.
+
+        A 0-row append into an existing table leaves no trace: the
+        zero-row part file Spark writes for an empty write is removed,
+        and no generation or commit-log entry is made."""
+        return self._append(name, self._frame_write(name, df))
+
+    def append_rows(self, name: str, rows: list[tuple]) -> int:
+        """Append rows the driver already holds (log lines, classifier
+        responses, a build's DVSchema) as ONE parquet file written on
+        the driver -- no Spark job. Values convert exactly as
+        ``createDataFrame(rows, schema)`` converts them: timestamps go
+        through ``TimestampType.toInternal``, so naive datetimes are
+        read in the driver's local time zone. Same lock, copy-on-write
+        and transaction rules as ``append``; needs a registered schema
+        and an unpartitioned table. Returns ``len(rows)``."""
+        return self._append(name, self._rows_write(name, rows))
+
+    def _append(self, name: str, write) -> int:
+        if self.retain_generations == 1:
+            return write(self.path(name))
+        with self.lock(name):
+            gen, n = self._append_generation(name, self.path(name), write)
+            if gen is not None:
                 self._commit_generation(name, gen, action="append")
-            return
-        writer = df.write.mode("append")
+        return n
+
+    def _append_generation(self, name: str, base: str, write) -> tuple[str | None, int]:
+        """Copy-on-write append: hardlink ``base`` into a fresh
+        generation and ``write`` the new rows there. Returns
+        (generation, rows appended); the generation is None -- and
+        removed again -- when a 0-row write would only copy ``base``."""
+        gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
+        existed = os.path.isdir(base)
+        if existed:
+            self._link_tree(base, gen)
+        else:
+            os.makedirs(gen, exist_ok=True)
+        n = write(gen)
+        if n == 0 and existed:
+            shutil.rmtree(gen, ignore_errors=True)
+            return None, 0
+        return gen, n
+
+    def _frame_write(self, name: str, df: DataFrame):
+        """``write(target) -> rows`` for a Spark append of ``df``."""
+        obs = Observation()
+        writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append")
         if name in self._partitioning:
             writer = writer.partitionBy(*self._partitioning[name])
-        writer.parquet(self.path(name))
+
+        def write(target: str) -> int:
+            before = set(_data_files(target))
+            writer.parquet(target)
+            _drop_empty_files(target, before)
+            return obs.get["n"]
+
+        return write
+
+    def _rows_write(self, name: str, rows: list[tuple]):
+        """``write(target) -> rows`` for a driver-side append of ``rows``."""
+        if name not in self._schemas or name in self._partitioning:
+            raise ValueError(
+                f"append_rows needs a registered, unpartitioned table; {name} is not"
+            )
+        table = _arrow_table(self._schemas[name], rows)
+
+        def write(target: str) -> int:
+            if rows:
+                os.makedirs(target, exist_ok=True)
+                fname = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+                tmp = os.path.join(target, f".{fname}.tmp")  # hidden from scans
+                pq.write_table(table, tmp, compression="snappy")
+                os.replace(tmp, os.path.join(target, fname))
+            return len(rows)
+
+        return write
 
     def _link_tree(self, src: str, dst: str) -> None:
         """Hardlink every file under ``src`` into ``dst`` preserving the
@@ -904,16 +970,50 @@ class Warehouse:
     def data_files(self, name: str) -> dict[str, int]:
         """Live data files (path relative to the live dir -> bytes);
         metadata (`_*`, `.*`) excluded. O(file count) listing."""
+        return _data_files(self.path(name))
+
+    # -- footer reads ---------------------------------------------------
+    # Table-level numbers the parquet footers already hold, read on the
+    # driver: metadata-sized work, no Spark job (the same kind of read
+    # ``prune_files`` does).
+    def _footers(self, name: str):
         live = self.path(name)
-        out: dict[str, int] = {}
-        for walk_root, _dirs, files in os.walk(live):
-            rel_dir = os.path.relpath(walk_root, live)
-            for fn in files:
-                if fn.startswith(("_", ".")):
+        for rel in self.data_files(name):
+            yield rel, pq.read_metadata(os.path.join(live, rel))
+
+    def row_count(self, name: str) -> int:
+        """Rows in the live table: the sum of footer ``num_rows``."""
+        return sum(md.num_rows for _, md in self._footers(name))
+
+    def max_value(self, name: str, column: str) -> int | None:
+        """Largest value of an integer column from the footers' min/max
+        statistics (None when the column holds no value). Raises when a
+        file holding rows has no usable statistics for the column --
+        never falls back silently to a guess or a scan."""
+        best = None
+        for rel, md in self._footers(name):
+            if md.num_rows == 0:
+                continue
+            names = md.schema.names
+            if column not in names:
+                raise ValueError(f"{name}: {rel} has rows but no column {column}")
+            j = names.index(column)
+            for i in range(md.num_row_groups):
+                rg = md.row_group(i)
+                st = rg.column(j).statistics
+                if rg.num_rows == 0:
                     continue
-                rel = fn if rel_dir == "." else os.path.join(rel_dir, fn)
-                out[rel] = os.path.getsize(os.path.join(walk_root, fn))
-        return out
+                if st is not None and st.physical_type in ("INT32", "INT64"):
+                    if st.has_min_max:
+                        best = st.max if best is None else max(best, st.max)
+                        continue
+                    if st.has_null_count and st.null_count == rg.num_rows:
+                        continue  # all NULL
+                raise ValueError(
+                    f"{name}: {rel} row group {i} has no integer min/max statistics "
+                    f"for {column}"
+                )
+        return best
 
     def prune_files(self, name: str, ranges: dict[str, tuple]) -> list[str]:
         """Data-skipping file list: the live files whose parquet footer
@@ -924,8 +1024,6 @@ class Warehouse:
         format does from its metadata layer, and it composes with
         ``compact(cluster_by=...)``: a z-ordered table yields tight
         per-file boxes, so multi-column predicates skip most files."""
-        import pyarrow.parquet as pq
-
         live = self.path(name)
         keep: list[str] = []
         for rel in self.data_files(name):
@@ -1136,25 +1234,27 @@ class _Transaction:
         writer.parquet(gen)
         self._swap_staged(name, gen)
 
-    def append(self, name: str, df) -> None:
+    def append(self, name: str, df) -> int:
         """Stage an append (commits with the transaction): the current
         staged-or-live files hardlink into a fresh generation, new rows
         append there -- the INSERT...SELECT leg of a whole-load
         transaction, so hub+sat appends and a dimension merge can land
         atomically together (reference parity: the entire load script
-        in one transaction, dv_loader.rs:59-64)."""
+        in one transaction, dv_loader.rs:59-64). Returns the rows
+        appended; a 0-row append stages nothing."""
         self._check(name)
-        gen = self._fresh_gen(name)
-        base = self._base_dir(name)
-        if os.path.isdir(base):
-            self._wh._link_tree(base, gen)
-        else:
-            os.makedirs(gen, exist_ok=True)
-        writer = df.write.mode("append")
-        if name in self._wh._partitioning:
-            writer = writer.partitionBy(*self._wh._partitioning[name])
-        writer.parquet(gen)
-        self._swap_staged(name, gen)
+        return self._stage_append(name, self._wh._frame_write(name, df))
+
+    def append_rows(self, name: str, rows: list[tuple]) -> int:
+        """``Warehouse.append_rows`` staged into the transaction."""
+        self._check(name)
+        return self._stage_append(name, self._wh._rows_write(name, rows))
+
+    def _stage_append(self, name: str, write) -> int:
+        gen, n = self._wh._append_generation(name, self._base_dir(name), write)
+        if gen is not None:
+            self._swap_staged(name, gen)
+        return n
 
     def overwrite_partitions(self, name: str, df) -> None:
         """Stage a partition-pruned rewrite (CoW hardlink + dynamic
@@ -1215,3 +1315,52 @@ class _Transaction:
         with contextlib.suppress(OSError):
             os.unlink(jpath)
         self._staged = {}
+
+
+def _data_files(root: str) -> dict[str, int]:
+    """Data files under ``root`` (relative path -> bytes), skipping
+    what Spark's scans skip: `_*`/`.*` files and directories."""
+    out: dict[str, int] = {}
+    for walk_root, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        rel_dir = os.path.relpath(walk_root, root)
+        for fn in files:
+            if fn.startswith(("_", ".")):
+                continue
+            rel = fn if rel_dir == "." else os.path.join(rel_dir, fn)
+            out[rel] = os.path.getsize(os.path.join(walk_root, fn))
+    return out
+
+
+def _drop_empty_files(root: str, before: set[str]) -> None:
+    """Unlink the zero-row part files a Spark write just added under
+    ``root`` (Spark writes one whenever the write's first task has no
+    rows, so every empty write leaves one), checking each footer first.
+    They stay only when nothing else under ``root`` would carry the
+    table's schema."""
+    new = [rel for rel in _data_files(root) if rel not in before]
+    empty = [rel for rel in new if pq.read_metadata(os.path.join(root, rel)).num_rows == 0]
+    if not before and len(empty) == len(new):
+        return
+    for rel in empty:
+        path = os.path.join(root, rel)
+        os.unlink(path)
+        crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(crc)
+
+
+def _arrow_table(schema: T.StructType, rows: list[tuple]):
+    """``rows`` as an Arrow table of ``schema``'s Arrow types, values
+    converted as ``createDataFrame`` converts them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for f, values, af in zip(schema.fields, columns, arrow_schema):
+        if isinstance(f.dataType, T.TimestampType):
+            values = [f.dataType.toInternal(v) for v in values]
+        arrays.append(pa.array(values, type=af.type))
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)

@@ -32,11 +32,33 @@ def _slow_tests() -> set:
         return set()
 
 
+def _stale_slow_entries(config, items, slow: set) -> list[str]:
+    """slow_tests.txt entries naming no collected test. Only modules
+    collected whole are checked, so single-file and single-test runs
+    still work."""
+    collected = {item.nodeid.split("[")[0] for item in items}
+    modules = {nodeid.split("::")[0] for nodeid in collected}
+    partial = {
+        os.path.relpath(os.path.abspath(arg.split("::")[0]), config.rootpath)
+        for arg in config.args
+        if "::" in arg
+    }
+    return sorted(
+        e for e in slow
+        if e.split("::")[0] in modules - partial and e not in collected
+    )
+
+
+# tryfirst: judge staleness on the full collection, before -k/-m deselect
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
-    if os.environ.get("RUN_SLOW"):
-        return
     slow = _slow_tests()
-    if not slow:
+    stale = _stale_slow_entries(config, items, slow)
+    if stale:
+        raise pytest.UsageError(
+            "tests/slow_tests.txt names tests that no longer exist: " + ", ".join(stale)
+        )
+    if os.environ.get("RUN_SLOW") or not slow:
         return
     marker = pytest.mark.skip(
         reason="slow tier (tests/slow_tests.txt); set RUN_SLOW=1 to run"
