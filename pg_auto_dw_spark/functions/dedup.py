@@ -313,11 +313,15 @@ def _partition_local_labels(edges: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+# Round cap of connected_components. Pointer jumping converges in
+# O(log diameter) rounds, so hitting it means a pathological graph.
+CC_MAX_ROUNDS = 25
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
     id_col: str = "doc_id",
-    max_iters: int = 25,
 ) -> DataFrame:
     """(id, cluster_id) from candidate near-dup pairs: cluster_id = the
     minimum id in each connected component -- the canonical-document
@@ -353,7 +357,11 @@ def connected_components(
     union-find pass (``_partition_local_labels``) and the per-round
     neighbor-min carries the node's own label through the same
     aggregation -- one join per round, typically one round total on
-    small-component graphs. Same fixpoint, same output rows."""
+    small-component graphs. Same fixpoint, same output rows.
+
+    Raises RuntimeError when ``CC_MAX_ROUNDS`` rounds end without a
+    zero-change round: unconverged labels would silently split
+    clusters."""
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -374,10 +382,8 @@ def connected_components(
     # the seed is already exact and the loop needs ONE confirming
     # round -- this trades ~2 propagation rounds for one cheap map
     # pass.
-    labels: DataFrame | None = None
-    if max_iters >= 1:
-        labels = _partition_local_labels(edges, id_col)
-    for _ in range(max_iters):
+    labels = _partition_local_labels(edges, id_col)
+    for _ in range(CC_MAX_ROUNDS):
         # min label among graph neighbors AND self in ONE
         # join+aggregation (r16, guide section 2.4): the node's own
         # previous label rides the aggregation as extra union rows
@@ -426,10 +432,11 @@ def connected_components(
         labels = jumped.select(F.col(id_col), F.col("label"))
         if changed == 0:
             break
-    if labels is None:  # max_iters < 1: every active node keeps its own id
-        labels = edges.select(
-            F.col("src").alias(id_col), F.col("src").alias("label")
-        ).distinct()
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {CC_MAX_ROUNDS} rounds "
+            f"({changed} labels still changed in the last round)"
+        )
     if nodes is None:
         out = labels
     else:

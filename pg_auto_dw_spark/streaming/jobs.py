@@ -3,24 +3,36 @@
 The reference has no true streaming -- two background workers poll on a
 10 s latch (bgw_source_objects.rs:18, bgw_transformer_client.rs:29).
 Both of its jobs are idempotent by construction (SCD2 merge; anti-join
-loads), so the Spark-native equivalents are:
+loads), so a replayed cycle is a no-op. This module keeps that
+property in three families, all started through ``_start_stream``
+under ``trigger(availableNow=True)`` (catch-up batch semantics the
+tests can drive):
 
 - ``run_polling_worker``: the literal analog -- call a job function on
-  a cadence. Cadence is free because every job is a no-op when nothing
-  changed, exactly like the reference.
-- ``events_stream_rollup``: a real Structured Streaming pipeline over
-  the events table (file source -> watermark -> windowed agg ->
-  append/update sink). This is the shape the reference *would* need on
-  a stream source; ``trigger(availableNow=True)`` gives the
-  batch-equivalent semantics the driver can test.
-- ``incremental_hub_stream``: streaming hub load -- new source files
-  become hub rows via the same hash+dedup logic; idempotency comes
-  from ``dropDuplicates`` on the hash key with state, mirroring the
-  anti-join of the batch loader.
+  a cadence.
+- Event-stream operators (``events_stream_*``, ``rollup_stream``,
+  ``scd2_dim_stream``, the hub/satellite/vector-index streams,
+  ``drift_monitor_stream``): idempotent through stream state
+  (``dropDuplicates``), watermarks, or the merge/anti-join semantics
+  of the sink they feed.
+- Transactional landing zones, six of them: plain / quality-gated
+  JSONL, Bloom decontam, exact dedup, MinHash near-dup, semantic
+  decontam and media. All six run on one skeleton:
 
-Scale: watermark bounds state; the windowed agg shuffles on
-(window, event_type) which is low-cardinality -> AQE coalesces; the
-streaming hub dedup keys on the uniform hash -> no skew.
+  1. ``_zone_stream`` skips an empty micro-batch;
+  2. ``_land`` checks the batch id against ``<table>.ingest_log`` and
+     no-ops a replay;
+  3. ``_commit`` appends every table the zone writes PLUS the ledger
+     row in ONE ``wh.transaction`` (tables that do not exist yet are
+     created first), so a crash leaves the whole batch or none of it;
+  4. after the commit ``_zone_stream`` runs the zone's hooks (bloom
+     absorb, NDV sketches) and then the ``maintenance_every`` cadence
+     of ``wh.maybe_compact``.
+
+  The ledger lives INSIDE the transaction, so it can never disagree
+  with the tables. The ledger and the stream checkpoint must live and
+  die together: wiping the checkpoint restarts batch numbering at 0,
+  which the surviving ledger would treat as already ingested.
 """
 
 from __future__ import annotations
@@ -193,6 +205,27 @@ def read_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     return legacy.unionByName(modern)
 
 
+def _start_stream(
+    staged: DataFrame,
+    checkpoint_dir: str,
+    *,
+    sink: Callable[[DataFrame, int], object] | None = None,
+    output_dir: str | None = None,
+    output_mode: str = "append",
+):
+    """Start ``staged`` as a catch-up (availableNow) query: into
+    ``sink`` through foreachBatch, else as parquet under
+    ``output_dir``. Returns the query."""
+    writer = (
+        staged.writeStream.outputMode(output_mode)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if sink is not None:
+        return writer.foreachBatch(sink).start()
+    return writer.format("parquet").option("path", output_dir).start()
+
+
 def events_stream_rollup(
     spark: SparkSession,
     events_dir: str,
@@ -218,14 +251,7 @@ def events_stream_rollup(
             "total_value",
         )
     )
-    return (
-        agg.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("parquet")
-        .option("path", output_dir)
-        .start()
-    )
+    return _start_stream(agg, checkpoint_dir, output_dir=output_dir)
 
 
 def events_stream_sessions(
@@ -257,14 +283,7 @@ def events_stream_sessions(
             "total_value",
         )
     )
-    return (
-        agg.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("parquet")
-        .option("path", output_dir)
-        .start()
-    )
+    return _start_stream(agg, checkpoint_dir, output_dir=output_dir)
 
 
 def events_stream_user_stats(
@@ -316,13 +335,7 @@ def events_stream_user_stats(
             output_dir
         )
 
-    return (
-        staged.writeStream.outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _start_stream(staged, checkpoint_dir, sink=sink, output_mode="update")
 
 
 def events_stream_dedup(
@@ -349,14 +362,7 @@ def events_stream_dedup(
     deduped = ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    return (
-        deduped.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("parquet")
-        .option("path", output_dir)
-        .start()
-    )
+    return _start_stream(deduped, checkpoint_dir, output_dir=output_dir)
 
 
 def events_stream_click_attribution(
@@ -412,7 +418,7 @@ def events_stream_click_attribution(
         & (F.col("click_ts") <= F.col("ts")),
         join_type,
     ).select("event_id", "ts", "user_id", "click_ts", "click_value")
-    return _start_stream_sink(joined, checkpoint_dir, output_dir)
+    return _start_stream(joined, checkpoint_dir, output_dir=output_dir)
 
 
 def rollup_stream(
@@ -437,13 +443,7 @@ def rollup_stream(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         rollup.apply_batch(batch_df)
 
-    return (
-        ev.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _start_stream(ev, checkpoint_dir, sink=sink)
 
 
 def scd2_dim_stream(
@@ -530,13 +530,7 @@ def scd2_dim_stream(
             as_of=as_of,
         )
 
-    return (
-        staged.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _start_stream(staged, checkpoint_dir, sink=sink)
 
 
 def _hash_cols(schema: T.StructType, cols: list[str]):
@@ -548,17 +542,6 @@ def _hash_cols(schema: T.StructType, cols: list[str]):
 
     types = {f.name: f.dataType.simpleString() for f in schema.fields}
     return hash_key([F.col(c) for c in cols], [types[c] for c in cols])
-
-
-def _start_stream_sink(staged, checkpoint_dir: str, output_dir: str):
-    return (
-        staged.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("parquet")
-        .option("path", output_dir)
-        .start()
-    )
 
 
 def incremental_hub_stream(
@@ -581,7 +564,7 @@ def incremental_hub_stream(
         F.lit(record_source).alias("record_source"),
         *[F.col(c).cast("string").alias(f"{c}_bk") for c in key_cols],
     ).dropDuplicates(["hub_hk"])
-    return _start_stream_sink(staged, checkpoint_dir, output_dir)
+    return _start_stream(staged, checkpoint_dir, output_dir=output_dir)
 
 
 def incremental_satellite_stream(
@@ -647,7 +630,7 @@ def incremental_satellite_stream(
         )
     else:
         staged = staged.dropDuplicates(["hub_hk", "sat_hd"])
-    return _start_stream_sink(staged, checkpoint_dir, output_dir)
+    return _start_stream(staged, checkpoint_dir, output_dir=output_dir)
 
 
 def vector_index_ingest_stream(
@@ -697,13 +680,96 @@ def vector_index_ingest_stream(
             wh, batch_df, index_name, id_col, vec_col, probe_touched_cells_only=True
         )
 
-    return (
-        stream.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _start_stream(stream, checkpoint_dir, sink=sink)
+
+
+# -- landing-zone skeleton (see the module docstring) -------------------
+
+
+def _commit(wh, appends: list) -> list[int]:
+    """Append every ``(table, frame)`` in ONE warehouse transaction;
+    returns the rows each append wrote. Tables that do not exist yet
+    are created first from their frame's schema (a ``__bucket`` column
+    marks a hash-bucket-partitioned sidecar), so an empty frame still
+    creates its table -- an empty audit table means healthy, never
+    switched off -- while committing nothing."""
+    for table, df in appends:
+        if not wh.exists(table):
+            parts = ["__bucket"] if "__bucket" in df.columns else None
+            wh.create_table(table, df.schema, partition_by=parts)
+    with wh.transaction([t for t, _ in appends]) as txn:
+        counts = [txn.append(t, df) for t, df in appends]
+    return counts
+
+
+def _land(wh, table: str, batch_id: int, stage: Callable[[list], object]):
+    """Replay guard: None when ``batch_id`` is already in
+    ``<table>.ingest_log``; otherwise ``stage(ledger_appends)``, which
+    must hand the ledger appends to its ``_commit``, and its result."""
+    ledger = f"{table}.ingest_log"
+    if wh.exists(ledger) and wh.read(ledger).filter(F.col("batch_id") == batch_id).count():
+        return None
+    row = wh.spark.createDataFrame([(int(batch_id),)], "batch_id bigint")
+    return stage([(ledger, row)])
+
+
+def _zone_counts(keys: tuple, counts: list[int] | None) -> dict:
+    """The dict a ``batch_id``-taking zone apply returns: rows per
+    output table in ``keys`` order, all zero on a replay."""
+    return {**dict(zip(keys, counts or [0] * len(keys))), "replay": counts is None}
+
+
+def _zone_stream(
+    source: DataFrame,
+    wh,
+    checkpoint_dir: str,
+    land: Callable[[DataFrame, int], object],
+    hooks=(),
+    maintain=(),
+    maintenance_every: int = 0,
+    maintenance_kwargs: dict | None = None,
+):
+    """Start a landing zone over ``source``. Per micro-batch: skip it
+    when empty; ``land(batch_df, batch_id)`` replay-checks and commits
+    it (``_land``) and returns None for a replay. After a commit each
+    hook runs on land's result, then every ``maintenance_every``
+    committed batches ``wh.maybe_compact`` runs on each ``maintain``
+    table. Both are post-commit on purpose: a crash there loses a
+    rewrite or a sketch merge, never rows."""
+    since = 0
+
+    def sink(batch_df, batch_id):
+        nonlocal since
+        if batch_df.isEmpty():
+            return
+        landed = land(batch_df, batch_id)
+        if landed is None:
+            return
+        for hook in hooks:
+            hook(landed)
+        if maintenance_every > 0:
+            since += 1
+            if since >= maintenance_every:
+                since = 0
+                for t in maintain:
+                    wh.maybe_compact(t, **(maintenance_kwargs or {}))
+
+    return _start_stream(source, checkpoint_dir, sink=sink)
+
+
+def _ndv_hooks(wh, corpus_table: str, ndv_cols: list[str] | None) -> list:
+    """Post-commit hook maintaining the ingest-offered NDV ledger
+    ``<corpus_table>.ndv`` over each batch's typed rows (none without
+    ``ndv_cols``). Grain: every well-formed value presented at the
+    front door, so a rejected resubmission still registers its side
+    columns; register-max merge is idempotent, so a replay re-merges
+    to the same registers and a crash before the merge only
+    under-estimates until a later batch carries those values."""
+    if not ndv_cols:
+        return []
+    from ..functions.sketch import update_ndv_sketches
+
+    return [lambda typed: update_ndv_sketches(wh, f"{corpus_table}.ndv", typed, ndv_cols)]
 
 
 def jsonl_ingest_apply(
@@ -751,16 +817,11 @@ def jsonl_ingest_apply(
     adds one batch-sized pass -- the LEDGER is never scanned or
     shuffled by it.
 
-    The ledger (``<clean_table>.ingest_log``) and the stream checkpoint
-    must live and die together: wiping the checkpoint restarts batch
-    numbering at 0, which the surviving ledger would treat as already
-    ingested. That is the standard transactional-foreachBatch contract,
-    stated here so operators don't discover it in production.
+    The ledger is ``<clean_table>.ingest_log``; it and the stream
+    checkpoint must live and die together (module docstring).
 
     Returns {"clean": n, "quarantined": n[, "rejected": n],
     "replay": bool}."""
-    from pyspark.sql import functions as F
-
     if (quality_gopher or quality_weights is not None) and rejected_table is None:
         # a silently-disabled gate is a quiet data-quality failure in
         # a landing zone (r12 ADVICE): fail loudly instead
@@ -771,86 +832,53 @@ def jsonl_ingest_apply(
     gate_on = rejected_table is not None and (
         quality_gopher or quality_weights is not None
     )
-    ledger = f"{clean_table}.ingest_log"
-    if not wh.exists(ledger):
-        wh.create_table(ledger, T.StructType([T.StructField("batch_id", T.LongType())]))
-    if wh.read(ledger).filter(F.col("batch_id") == batch_id).count() > 0:
-        out = {"clean": 0, "quarantined": 0, "replay": True}
+
+    def stage(ledger_row):
+        from ..sources import split_jsonl_lines
+
+        clean, quarantined = split_jsonl_lines(
+            batch_df.localCheckpoint(),  # parsed once, read by 2 appends
+            schema,
+            corrupt_col,
+        )
+        appends = [(quarantine_table, quarantined)]
         if gate_on:
-            out["rejected"] = 0
-        return out
+            verdict = F.lit(True)
+            frame = clean
+            if quality_gopher:
+                from ..functions.text import gopher_exprs
 
-    from ..sources import split_jsonl_lines
+                _c, _r, gv = gopher_exprs(F.col(text_col), **(gopher_kwargs or {}))
+                verdict = verdict & gv
+            if quality_weights is not None:
+                from ..functions.selection import hashed_linear_score
 
-    clean, quarantined = split_jsonl_lines(
-        batch_df.localCheckpoint(),  # parsed once, read by 2 appends + counts
-        schema,
-        corrupt_col,
-    )
-
-    rejected = None
-    if gate_on:
-        verdict = F.lit(True)
-        frame = clean
-        if quality_gopher:
-            from ..functions.text import gopher_exprs
-
-            _c, _r, gv = gopher_exprs(F.col(text_col), **(gopher_kwargs or {}))
-            verdict = verdict & gv
-        if quality_weights is not None:
-            from ..functions.selection import hashed_linear_score
-
-            # checkpoint-pinned synthetic row key: the gate must route
-            # every row by its OWN text (NULL or colliding doc ids
-            # would misfile under an id join, the decontam-zone rule)
-            frame = frame.withColumn(
-                "__qrk", F.monotonically_increasing_id()
+                # checkpoint-pinned synthetic row key: the gate must route
+                # every row by its OWN text (NULL or colliding doc ids
+                # would misfile under an id join, the decontam-zone rule)
+                frame = frame.withColumn(
+                    "__qrk", F.monotonically_increasing_id()
+                ).localCheckpoint()
+                scores = hashed_linear_score(
+                    frame.select("__qrk", text_col),
+                    weights=quality_weights,
+                    text_col=text_col,
+                    id_col="__qrk",
+                ).select("__qrk", F.col("score").alias("__qscore"))
+                frame = frame.join(scores, "__qrk", "left")
+                verdict = verdict & (F.col("__qscore") >= F.lit(min_quality_score))
+            flagged = frame.withColumn(
+                "__qpass", F.coalesce(verdict, F.lit(False))
             ).localCheckpoint()
-            scores = hashed_linear_score(
-                frame.select("__qrk", text_col),
-                weights=quality_weights,
-                text_col=text_col,
-                id_col="__qrk",
-            ).select("__qrk", F.col("score").alias("__qscore"))
-            frame = frame.join(scores, "__qrk", "left")
-            verdict = verdict & (F.col("__qscore") >= F.lit(min_quality_score))
-        flagged = frame.withColumn(
-            "__qpass", F.coalesce(verdict, F.lit(False))
-        ).localCheckpoint()
-        helper_cols = [c for c in ("__qrk", "__qscore", "__qpass") if c in flagged.columns]
-        clean = flagged.filter(F.col("__qpass")).drop(*helper_cols)
-        rejected = flagged.filter(~F.col("__qpass")).drop(*helper_cols)
+            helper_cols = [c for c in ("__qrk", "__qscore", "__qpass") if c in flagged.columns]
+            clean = flagged.filter(F.col("__qpass")).drop(*helper_cols)
+            appends.append(
+                (rejected_table, flagged.filter(~F.col("__qpass")).drop(*helper_cols))
+            )
+        return _commit(wh, [(clean_table, clean), *appends, *ledger_row])
 
-    if not wh.exists(clean_table):
-        wh.create_table(clean_table, schema)
-    if not wh.exists(quarantine_table):
-        wh.create_table(
-            quarantine_table,
-            T.StructType([T.StructField("raw_line", T.StringType())]),
-        )
-    if gate_on and not wh.exists(rejected_table):
-        wh.create_table(rejected_table, schema)
-    spark = wh.spark
-    tables = [clean_table, quarantine_table, ledger]
-    if gate_on:
-        tables.insert(2, rejected_table)
-    with wh.transaction(tables) as txn:
-        txn.append(clean_table, clean)
-        txn.append(quarantine_table, quarantined)
-        if gate_on:
-            txn.append(rejected_table, rejected)
-        txn.append(
-            ledger,
-            spark.createDataFrame([(int(batch_id),)], "batch_id bigint"),
-        )
-    out = {
-        "clean": clean.count(),
-        "quarantined": quarantined.count(),
-        "replay": False,
-    }
-    if gate_on:
-        out["rejected"] = rejected.count()
-    return out
+    keys = ("clean", "quarantined", "rejected") if gate_on else ("clean", "quarantined")
+    return _zone_counts(keys, _land(wh, clean_table, batch_id, stage))
 
 
 def jsonl_ingest_stream(
@@ -882,22 +910,13 @@ def jsonl_ingest_stream(
     evaluated per batch; pass a localCheckpoint-pinned frame so a
     restarted stream serves the same model bytes."""
 
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        jsonl_ingest_apply(
+    def land(batch_df, batch_id):
+        return jsonl_ingest_apply(
             wh, clean_table, quarantine_table, schema, batch_df, batch_id,
             corrupt_col, **quality_gate,
         )
 
-    return (
-        spark.readStream.text(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _zone_stream(spark.readStream.text(source_dir), wh, checkpoint_dir, land)
 
 
 def jsonl_decontam_ingest_apply(
@@ -926,50 +945,26 @@ def jsonl_decontam_ingest_apply(
     ``jsonl_ingest_apply``; the bloom row is FROZEN bytes built once at
     stream start, so every batch probes the same filter and a restart
     cannot shift verdicts."""
-    from pyspark.sql import functions as F
-
     from ..functions.corpus import _with_bloom_hit
-
-    ledger = f"{clean_table}.ingest_log"
-    if not wh.exists(ledger):
-        wh.create_table(ledger, T.StructType([T.StructField("batch_id", T.LongType())]))
-    if wh.read(ledger).filter(F.col("batch_id") == batch_id).count() > 0:
-        return {"clean": 0, "contaminated": 0, "quarantined": 0, "replay": True}
-
     from ..sources import split_jsonl_lines
 
-    typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
-    # route each row by its own in-place probe verdict -- no id joins,
-    # so NULL-id rows route by their text like any other row (an
-    # id-keyed semi join would misfile every NULL id as contaminated)
-    flagged = _with_bloom_hit(typed, bloom, text_col).localCheckpoint()
-    clean = flagged.filter(~F.col("bloom_hit")).drop("bloom_hit")
-    contaminated = flagged.filter(F.col("bloom_hit")).drop("bloom_hit")
+    def stage(ledger_row):
+        typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
+        # route each row by its own in-place probe verdict -- no id joins,
+        # so NULL-id rows route by their text like any other row (an
+        # id-keyed semi join would misfile every NULL id as contaminated)
+        flagged = _with_bloom_hit(typed, bloom, text_col).localCheckpoint()
+        return _commit(wh, [
+            (clean_table, flagged.filter(~F.col("bloom_hit")).drop("bloom_hit")),
+            (contaminated_table, flagged.filter(F.col("bloom_hit")).drop("bloom_hit")),
+            (quarantine_table, quarantined),
+            *ledger_row,
+        ])
 
-    for t in (clean_table, contaminated_table):
-        if not wh.exists(t):
-            wh.create_table(t, schema)
-    if not wh.exists(quarantine_table):
-        wh.create_table(
-            quarantine_table,
-            T.StructType([T.StructField("raw_line", T.StringType())]),
-        )
-    spark = wh.spark
-    with wh.transaction(
-        [clean_table, contaminated_table, quarantine_table, ledger]
-    ) as txn:
-        txn.append(clean_table, clean)
-        txn.append(contaminated_table, contaminated)
-        txn.append(quarantine_table, quarantined)
-        txn.append(
-            ledger, spark.createDataFrame([(int(batch_id),)], "batch_id bigint")
-        )
-    return {
-        "clean": clean.count(),
-        "contaminated": contaminated.count(),
-        "quarantined": quarantined.count(),
-        "replay": False,
-    }
+    return _zone_counts(
+        ("clean", "contaminated", "quarantined"),
+        _land(wh, clean_table, batch_id, stage),
+    )
 
 
 def jsonl_decontam_ingest_stream(
@@ -1011,18 +1006,8 @@ def jsonl_decontam_ingest_stream(
     -- same post-commit maintenance loop as
     ``jsonl_dedup_ingest_stream``."""
     import logging
+
     from ..functions.corpus import bloom_build
-
-    maint_state = {"since": 0}
-
-    def _maybe_maintain():
-        if maintenance_every <= 0:
-            return
-        maint_state["since"] += 1
-        if maint_state["since"] < maintenance_every:
-            return
-        maint_state["since"] = 0
-        wh.maybe_compact(clean_table, **(maintenance_kwargs or {}))
 
     def _build():
         return bloom_build(
@@ -1031,14 +1016,16 @@ def jsonl_decontam_ingest_stream(
 
     holder = {"bloom": _build()}
 
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
+    def apply(batch_df, batch_id):
+        out = jsonl_decontam_ingest_apply(
+            wh, clean_table, contaminated_table, quarantine_table, schema,
+            holder["bloom"], batch_df, batch_id, text_col,
+        )
+        return None if out["replay"] else out
+
+    def land(batch_df, batch_id):
         try:
-            jsonl_decontam_ingest_apply(
-                wh, clean_table, contaminated_table, quarantine_table, schema,
-                holder["bloom"], batch_df, batch_id, text_col,
-            )
+            return apply(batch_df, batch_id)
         except Exception:
             logging.getLogger(__name__).warning(
                 "decontam apply failed for batch %s; rebuilding bloom and "
@@ -1047,19 +1034,13 @@ def jsonl_decontam_ingest_stream(
                 exc_info=True,
             )
             holder["bloom"] = _build()
-            jsonl_decontam_ingest_apply(
-                wh, clean_table, contaminated_table, quarantine_table, schema,
-                holder["bloom"], batch_df, batch_id, text_col,
-            )
-        _maybe_maintain()
+            return apply(batch_df, batch_id)
 
-    return (
-        spark.readStream.text(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
+    return _zone_stream(
+        spark.readStream.text(source_dir), wh, checkpoint_dir, land,
+        maintain=(clean_table,),
+        maintenance_every=maintenance_every,
+        maintenance_kwargs=maintenance_kwargs,
     )
 
 
@@ -1125,17 +1106,10 @@ def drift_monitor_stream(
         )
         wh.append(drift_table, out)
 
-    return (
-        spark.readStream.schema(source_schema)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(wh.root, "_checkpoints", drift_table),
-        )
-        .foreachBatch(sink)
-        .start()
+    return _start_stream(
+        spark.readStream.schema(source_schema).parquet(source_dir),
+        checkpoint_dir or os.path.join(wh.root, "_checkpoints", drift_table),
+        sink=sink,
     )
 
 
@@ -1220,20 +1194,7 @@ def dedup_ingest_apply(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    if not wh.exists(ledger_table):
-        wh.create_table(
-            ledger_table,
-            T.StructType(
-                [
-                    T.StructField("digest", T.StringType()),
-                    T.StructField("first_id", canon.schema[id_col].dataType),
-                ]
-            ),
-        )
-    if not wh.exists(corpus_table):
-        wh.create_table(corpus_table, typed.schema)
     n_batch = typed.count()
-    n_nulls = nulls.count()
     n_canon = canon.count()
     if ledger_bloom is not None:
         from ..functions.corpus import with_key_bloom_hit
@@ -1244,34 +1205,32 @@ def dedup_ingest_apply(
         n_possible = possible.count()
     else:
         possible, definite, n_possible = canon, None, n_canon
-    if n_possible == 0:
+    if n_possible == 0 or not wh.exists(ledger_table):
         # every survivor is provably absent from the ledger (bloom has
-        # no false negatives) -- the ledger is never even scanned
+        # no false negatives, or there is no ledger yet) -- the ledger
+        # is never even scanned
         new = canon
     else:
         ledger = wh.read(ledger_table).select(F.col("digest").alias("__digest"))
         new = _ledger_unseen(ledger, possible)
         if definite is not None:
             new = new.unionByName(definite)
-    n_new = new.count()
     # extra_appends ride the SAME transaction (streaming composition:
     # quarantine lines + the batch-id replay guard) -- a crash anywhere
     # leaves either the whole batch or none of it, so the replay guard
     # can never disagree with the corpus (NULL-text rows are undeduped
     # and would double-append under a split-transaction replay)
-    extra = extra_appends or []
-    with wh.transaction([corpus_table, ledger_table, *[t for t, _ in extra]]) as txn:
-        txn.append(corpus_table, new.drop("__digest").unionByName(nulls))
-        txn.append(
+    ingested, n_new = _commit(wh, [
+        (corpus_table, new.drop("__digest").unionByName(nulls)),
+        (
             ledger_table,
-            new.select(
-                F.col("__digest").alias("digest"), F.col(id_col).alias("first_id")
-            ),
-        )
-        for t, df in extra:
-            txn.append(t, df)
+            new.select(F.col("__digest").alias("digest"), F.col(id_col).alias("first_id")),
+        ),
+        *(extra_appends or []),
+    ])[:2]
+    n_nulls = ingested - n_new  # NULL-text rows ride the corpus append only
     return {
-        "ingested": n_new + n_nulls,
+        "ingested": ingested,
         "dup_within_batch": (n_batch - n_nulls) - n_canon,
         "dup_vs_ledger": n_canon - n_new,
     }
@@ -1324,40 +1283,17 @@ def jsonl_dedup_ingest_stream(
     ``ndv_cols`` maintains the incremental NDV ledger
     (``sketch.update_ndv_sketches`` on ``<corpus_table>.ndv``) over
     the typed rows of every committed batch -- distinct-value
-    profiling with no rescans. Grain note: this is INGEST-OFFERED NDV
-    (every well-formed value presented at the front door), not
-    corpus-row NDV -- a REJECTED resubmission whose side columns
-    changed still registers its values. For text itself the two
-    coincide (rejection means the text digest was already ledgered);
-    for side columns ingest-offered is the monitoring-correct grain
-    (what arrived), and corpus-grain NDV is one ``ndv_sketch_rows``
-    pass over the corpus table when needed. Like the bloom absorb it
-    runs AFTER the batch transaction: the sketch merge is its own
-    generation swap, and because register-max merge is idempotent the
-    crash window is benign in BOTH directions -- a replayed batch
-    re-merges to the same registers, and a batch that committed rows
-    but crashed before the merge only under-estimates until a later
-    batch carrying those values lands (sketches are monotone; they
-    never over-count)."""
+    profiling with no rescans, after the bloom absorb (``_ndv_hooks``
+    has the grain and the crash window). For text itself
+    ingest-offered NDV equals corpus-row NDV (rejection means the text
+    digest was already ledgered); corpus-grain NDV of side columns is
+    one ``ndv_sketch_rows`` pass over the corpus table when needed."""
     import numpy as np
 
     from ..functions.corpus import _gram_hash_pair, bloom_build_keys
     from ..sources import split_jsonl_lines
 
     ledger_table = f"{corpus_table}.digests"
-    batch_log = f"{corpus_table}.ingest_log"
-    maint_state = {"since": 0}
-
-    def _maybe_maintain():
-        if maintenance_every <= 0:
-            return
-        maint_state["since"] += 1
-        if maint_state["since"] < maintenance_every:
-            return
-        maint_state["since"] = 0
-        for t in (corpus_table, ledger_table):
-            wh.maybe_compact(t, **(maintenance_kwargs or {}))
-
     bloom_state: dict | None = None
     if ledger_bloom_m_bits is not None:
         if wh.exists(ledger_table):
@@ -1404,52 +1340,28 @@ def jsonl_dedup_ingest_stream(
             "bits array<bigint>, m_bits bigint, k int, n int, n_grams bigint",
         ).localCheckpoint(eager=True)
 
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        if not wh.exists(batch_log):
-            wh.create_table(
-                batch_log, T.StructType([T.StructField("batch_id", T.LongType())])
+    def land(batch_df, batch_id):
+        def stage(ledger_row):
+            typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
+            dedup_ingest_apply(
+                wh, corpus_table, ledger_table, typed, text_col, id_col,
+                extra_appends=[(quarantine_table, quarantined), *ledger_row],
+                ledger_bloom=bloom_state["df"] if bloom_state is not None else None,
             )
-        if wh.read(batch_log).filter(F.col("batch_id") == batch_id).count() > 0:
-            return
-        typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
-        if not wh.exists(quarantine_table):
-            wh.create_table(
-                quarantine_table,
-                T.StructType([T.StructField("raw_line", T.StringType())]),
-            )
-        # ONE transaction for the whole batch: corpus, digests,
-        # quarantine, and the replay guard land together or not at all
-        stats = dedup_ingest_apply(
-            wh, corpus_table, ledger_table, typed, text_col, id_col,
-            extra_appends=[
-                (quarantine_table, quarantined),
-                (
-                    batch_log,
-                    spark.createDataFrame([(int(batch_id),)], "batch_id bigint"),
-                ),
-            ],
-            ledger_bloom=bloom_state["df"] if bloom_state is not None else None,
-        )
-        if bloom_state is not None:
-            # AFTER the commit: a crash before this point restarts with
-            # a ledger-rebuilt bloom; a crash after loses nothing
-            _absorb_batch_digests(typed)
-        if ndv_cols:
-            from ..functions.sketch import update_ndv_sketches
+            return typed
 
-            update_ndv_sketches(wh, f"{corpus_table}.ndv", typed, ndv_cols)
-        _maybe_maintain()
-        return stats
+        return _land(wh, corpus_table, batch_id, stage)
 
-    return (
-        spark.readStream.text(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
+    # the bloom absorb runs AFTER the commit and BEFORE the NDV merge: a
+    # crash before it restarts with a ledger-rebuilt bloom, a crash
+    # after it loses nothing
+    absorb = [_absorb_batch_digests] if bloom_state is not None else []
+    return _zone_stream(
+        spark.readStream.text(source_dir), wh, checkpoint_dir, land,
+        hooks=absorb + _ndv_hooks(wh, corpus_table, ndv_cols),
+        maintain=(corpus_table, ledger_table),
+        maintenance_every=maintenance_every,
+        maintenance_kwargs=maintenance_kwargs,
     )
 
 
@@ -1463,16 +1375,19 @@ def _ledger_hits(ledger: DataFrame, keys: DataFrame, on: list[str]) -> DataFrame
     return ledger.join(F.broadcast(keys.select(*on)), on, "left_semi")
 
 
-def _dup_links(matched, dup_members, id_col: str):
-    """(id, matched_id) lineage rows for the dupes table: canonicals
+def _dupes_appends(dupes_table, batch, matched, dup_members, id_col: str) -> list:
+    """The ``dupes_table`` append: dropped ``batch`` rows plus their
+    (id, matched_id) lineage. Canonicals
     that cross-matched the corpus point at their corpus witness, and
     within-batch cluster MEMBERS point at the row that actually
     survived -- their canonical when it was admitted, or the
     canonical's corpus witness when the canonical itself cross-matched
     (r13 ADVICE: members were previously dropped with no lineage).
     ``matched_id`` therefore always names a row present in the corpus
-    table. Returns None when the batch produced no dup lineage at all;
-    every frame here is batch-sized."""
+    table. Empty when there is no dupes table or the batch produced no
+    dup lineage at all; every frame here is batch-sized."""
+    if dupes_table is None:
+        return []
     links = None
     if matched is not None:
         links = matched.select(F.col("id_a").alias(id_col), "matched_id")
@@ -1489,7 +1404,58 @@ def _dup_links(matched, dup_members, id_col: str):
                 id_col, F.col("cluster_id").alias("matched_id")
             )
         links = resolved if links is None else links.unionByName(resolved)
-    return links
+    return [] if links is None else [(dupes_table, batch.join(links, id_col))]
+
+
+def _check_layout(wh, tables: tuple, n_sidecar_parts: int | None) -> None:
+    """A sidecar's hash-bucket layout is fixed at first ingest: fail
+    loudly when an existing table in ``tables`` disagrees with this
+    call's ``n_sidecar_parts``."""
+    for table in tables:
+        if not wh.exists(table):
+            continue
+        has = "__bucket" in wh.read(table).columns
+        if has != (n_sidecar_parts is not None):
+            raise ValueError(
+                f"{table} layout mismatch: table is "
+                f"{'bucketed' if has else 'unpartitioned'} but this call "
+                f"passed n_sidecar_parts={n_sidecar_parts}; the sidecar "
+                f"layout is fixed at first ingest"
+            )
+
+
+def _probe_sidecar(wh, table: str, keys, on: list[str], bucket, n_sidecar_parts):
+    """``_ledger_hits`` of the batch-sized ``keys`` against sidecar
+    ``table``. On a bucketed sidecar (``bucket``: the partition
+    expression over ``keys``) the batch's bucket set is collected and
+    the scan partition-prunes to it -- but only when the batch leaves
+    most partitions untouched; a bucket set covering everything pays
+    listing/filter overhead for nothing."""
+    ledger = wh.read(table)
+    if bucket is not None:
+        buckets = [r["b"] for r in keys.select(bucket.alias("b")).distinct().collect()]
+        if len(buckets) <= n_sidecar_parts * 0.8:
+            ledger = ledger.filter(F.col("__bucket").isin(buckets))
+        ledger = ledger.drop("__bucket")
+    return _ledger_hits(ledger, keys, on)
+
+
+def _collapse_within(within: DataFrame, signed_ids: DataFrame, id_col: str):
+    """Verified within-batch pairs -> (canonical ids, cluster members
+    with their ``cluster_id`` or None, member count): connected
+    components, min-id canonical per cluster. The common batch has no
+    within-dups and skips the CC rounds entirely (they cost ~2 jobs
+    per round even on an empty edge set)."""
+    from ..functions.dedup import connected_components
+
+    if within.isEmpty():
+        return signed_ids, None, 0
+    comp = connected_components(within, nodes=signed_ids, id_col=id_col)
+    members = comp.filter(F.col(id_col) != F.col("cluster_id")).select(
+        id_col, "cluster_id"
+    ).localCheckpoint(eager=True)
+    canon = comp.filter(F.col(id_col) == F.col("cluster_id")).select(id_col)
+    return canon, members, members.count()
 
 
 def neardup_ingest_apply(
@@ -1596,7 +1562,6 @@ def neardup_ingest_apply(
     """
     from ..functions.dedup import (
         band_pair_candidates,
-        connected_components,
         lsh_band_keys_wide,
         minhash_signatures_wide,
     )
@@ -1682,61 +1647,29 @@ def neardup_ingest_apply(
         bands, id_col=id_col, max_bucket_size=max_probe_bucket
     )
     within = _sim_pairs(within_cand, wide, wide).localCheckpoint(eager=True)
-    if within.isEmpty():
-        # the common batch: no within-dups -> skip the iterative CC
-        # rounds entirely (they cost ~2 jobs per round even on an
-        # empty edge set)
-        canon_ids, n_within_dups, dup_members = signed_ids, 0, None
-    else:
-        comp = connected_components(within, nodes=signed_ids, id_col=id_col)
-        canon_ids = comp.filter(F.col(id_col) == F.col("cluster_id")).select(id_col)
-        dup_members = comp.filter(F.col(id_col) != F.col("cluster_id")).select(
-            id_col, "cluster_id"
-        ).localCheckpoint(eager=True)
-        n_within_dups = dup_members.count()
+    canon_ids, dup_members, n_within_dups = _collapse_within(within, signed_ids, id_col)
     canon_sigs = wide.join(canon_ids, id_col, "left_semi")
 
     # sidecar partition buckets (opt-in): the probe collects its
     # (batch-sized) bucket set and the scan partition-prunes to those
     use_buckets = n_sidecar_parts is not None
+    band_bucket = id_bucket = None
     if use_buckets:
         band_bucket = F.pmod(F.xxhash64(F.col("band_key")), F.lit(n_sidecar_parts))
         id_bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sidecar_parts))
-
-    def _check_layout(table: str) -> None:
-        has = "__bucket" in wh.read(table).columns
-        if has != use_buckets:
-            raise ValueError(
-                f"{table} layout mismatch: table is "
-                f"{'bucketed' if has else 'unpartitioned'} but this call "
-                f"passed n_sidecar_parts={n_sidecar_parts}; the sidecar "
-                f"layout is fixed at first ingest"
-            )
+    _check_layout(wh, (bands_table, sig_table), n_sidecar_parts)
 
     # -- cross-batch probe ----------------------------------------------
     cross_dup_canon = None
     matched = None
     if wh.exists(bands_table):
-        _check_layout(bands_table)
         canon_bands = bands.join(canon_ids, id_col, "left_semi")
         probe_keys = canon_bands.select("band", "band_key").distinct().localCheckpoint(
             eager=True
         )  # read twice: bucket-set collect + the broadcast semi
-        ledger_bands = wh.read(bands_table)
-        if use_buckets:
-            probe_buckets = [
-                r["b"]
-                for r in probe_keys.select(band_bucket.alias("b")).distinct().collect()
-            ]
-            # prune only when the batch leaves most partitions
-            # untouched -- a bucket set covering everything pays
-            # listing/filter overhead for nothing
-            if len(probe_buckets) <= n_sidecar_parts * 0.8:
-                ledger_bands = ledger_bands.filter(
-                    F.col("__bucket").isin(probe_buckets)
-                )
-            ledger_bands = ledger_bands.drop("__bucket")
-        hits = _ledger_hits(ledger_bands, probe_keys, ["band", "band_key"])
+        hits = _probe_sidecar(
+            wh, bands_table, probe_keys, ["band", "band_key"], band_bucket, n_sidecar_parts
+        )
         # hot-bucket cap: at most max_probe_bucket existing docs verify
         # per bucket (deterministic min-id order); a verified near-dup
         # only needs ONE corpus witness, so the cap trades nothing but
@@ -1760,18 +1693,9 @@ def neardup_ingest_apply(
             .localCheckpoint(eager=True)
         )
         cand_ids = cand.select(F.col("id_b").alias(id_col)).distinct()
-        ledger_sigs = wh.read(sig_table)
-        if use_buckets:
-            sig_buckets = [
-                r["b"]
-                for r in cand_ids.select(id_bucket.alias("b")).distinct().collect()
-            ]
-            if len(sig_buckets) <= n_sidecar_parts * 0.8:
-                ledger_sigs = ledger_sigs.filter(
-                    F.col("__bucket").isin(sig_buckets)
-                )
-            ledger_sigs = ledger_sigs.drop("__bucket")
-        corpus_sigs = _ledger_hits(ledger_sigs, cand_ids, [id_col])
+        corpus_sigs = _probe_sidecar(
+            wh, sig_table, cand_ids, [id_col], id_bucket, n_sidecar_parts
+        )
         verified = _sim_pairs(cand, wide, corpus_sigs)
         matched = verified.groupBy("id_a").agg(F.min("id_b").alias("matched_id"))
         cross_dup_canon = matched.select(F.col("id_a").alias(id_col))
@@ -1796,45 +1720,24 @@ def neardup_ingest_apply(
         new_sigs = new_sigs.withColumn("__bucket", id_bucket).repartition(
             "__bucket"
         )
-    n_new = new_rows.count()
 
-    if not wh.exists(corpus_table):
-        wh.create_table(corpus_table, batch.schema)
-    sidecar_parts = ["__bucket"] if use_buckets else None
-    if not wh.exists(bands_table):
-        wh.create_table(bands_table, new_bands.schema, partition_by=sidecar_parts)
-    else:
-        _check_layout(bands_table)
-    if not wh.exists(sig_table):
-        wh.create_table(sig_table, new_sigs.schema, partition_by=sidecar_parts)
-    extra = list(extra_appends or [])
-    dup_links = _dup_links(matched, dup_members, id_col)
-    if dupes_table is not None and dup_links is not None:
-        dupes = batch.join(dup_links, id_col)
-        if not wh.exists(dupes_table):
-            wh.create_table(dupes_table, dupes.schema)
-        extra.append((dupes_table, dupes))
-    if monitor is not None:
-        # created at FIRST ingest, not first saturation: empty always
-        # means healthy, never monitoring-off (r13 review fix)
-        if not wh.exists(monitor_table):
-            wh.create_table(monitor_table, monitor.schema)
-        if not monitor.isEmpty():
-            extra.append((monitor_table, monitor))
-    with wh.transaction(
-        [corpus_table, bands_table, sig_table, *[t for t, _ in extra]]
-    ) as txn:
-        txn.append(corpus_table, new_rows)
-        txn.append(bands_table, new_bands)
-        txn.append(sig_table, new_sigs)
-        for t, df in extra:
-            txn.append(t, df)
+    # an empty monitor frame still creates its table at FIRST ingest, not
+    # first saturation: empty always means healthy, never monitoring-off
+    # (r13 review fix)
+    counts = _commit(wh, [
+        (corpus_table, new_rows),
+        (bands_table, new_bands),
+        (sig_table, new_sigs),
+        *_dupes_appends(dupes_table, batch, matched, dup_members, id_col),
+        *([(monitor_table, monitor)] if monitor is not None else []),
+        *(extra_appends or []),
+    ])
     return {
         "n_batch": n_batch,
         "n_unsigned": n_unsigned,
         "n_within_dups": n_within_dups,
         "n_cross_dups": n_cross_dups,
-        "n_new": n_new,
+        "n_new": counts[0],
     }
 
 
@@ -1868,62 +1771,27 @@ def jsonl_neardup_ingest_stream(
     and crash argument as the exact-dedup zone."""
     from ..sources import split_jsonl_lines
 
-    batch_log = f"{corpus_table}.ingest_log"
-    maint_state = {"since": 0}
-
-    def _maybe_maintain():
-        if maintenance_every <= 0:
-            return
-        maint_state["since"] += 1
-        if maint_state["since"] < maintenance_every:
-            return
-        maint_state["since"] = 0
-        for t in (corpus_table, f"{corpus_table}.bands", f"{corpus_table}.minhash"):
-            wh.maybe_compact(t, **(maintenance_kwargs or {}))
-
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        if not wh.exists(batch_log):
-            wh.create_table(
-                batch_log, T.StructType([T.StructField("batch_id", T.LongType())])
+    def land(batch_df, batch_id):
+        def stage(ledger_row):
+            typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
+            neardup_ingest_apply(
+                wh, corpus_table, typed, text_col, id_col,
+                sim_threshold=sim_threshold,
+                dupes_table=dupes_table,
+                n_sidecar_parts=n_sidecar_parts,
+                monitor_table=monitor_table,
+                extra_appends=[(quarantine_table, quarantined), *ledger_row],
             )
-        if wh.read(batch_log).filter(F.col("batch_id") == batch_id).count() > 0:
-            return
-        typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
-        if not wh.exists(quarantine_table):
-            wh.create_table(
-                quarantine_table,
-                T.StructType([T.StructField("raw_line", T.StringType())]),
-            )
-        stats = neardup_ingest_apply(
-            wh, corpus_table, typed, text_col, id_col,
-            sim_threshold=sim_threshold,
-            dupes_table=dupes_table,
-            n_sidecar_parts=n_sidecar_parts,
-            monitor_table=monitor_table,
-            extra_appends=[
-                (quarantine_table, quarantined),
-                (
-                    batch_log,
-                    spark.createDataFrame([(int(batch_id),)], "batch_id bigint"),
-                ),
-            ],
-        )
-        if ndv_cols:
-            from ..functions.sketch import update_ndv_sketches
+            return typed
 
-            update_ndv_sketches(wh, f"{corpus_table}.ndv", typed, ndv_cols)
-        _maybe_maintain()
-        return stats
+        return _land(wh, corpus_table, batch_id, stage)
 
-    return (
-        spark.readStream.text(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
+    return _zone_stream(
+        spark.readStream.text(source_dir), wh, checkpoint_dir, land,
+        hooks=_ndv_hooks(wh, corpus_table, ndv_cols),
+        maintain=(corpus_table, f"{corpus_table}.bands", f"{corpus_table}.minhash"),
+        maintenance_every=maintenance_every,
+        maintenance_kwargs=maintenance_kwargs,
     )
 
 
@@ -1967,54 +1835,31 @@ def jsonl_semdecon_ingest_apply(
 
     Per batch the gate costs one embed pass + one cell-pruned probe of
     the index, both batch-sized; the ledger is never touched by it."""
-    from pyspark.sql import functions as F
-
-    ledger = f"{clean_table}.ingest_log"
-    if not wh.exists(ledger):
-        wh.create_table(ledger, T.StructType([T.StructField("batch_id", T.LongType())]))
-    if wh.read(ledger).filter(F.col("batch_id") == batch_id).count() > 0:
-        return {"clean": 0, "contaminated": 0, "quarantined": 0, "replay": True}
-
     from ..functions.semsearch import semantic_decontaminate
     from ..sources import split_jsonl_lines
 
-    typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
-    keyed = typed.withColumn(
-        "__srk", F.monotonically_increasing_id()
-    ).localCheckpoint()
-    flags = semantic_decontaminate(
-        index_wh, index_name,
-        keyed.select("__srk", text_col),
-        threshold=threshold, n_probes=n_probes,
-        eval_id_col="__srk", text_col=text_col,
-    ).select(F.col("eval_id").alias("__srk")).distinct()
-    contaminated = keyed.join(flags, "__srk", "left_semi").drop("__srk")
-    clean = keyed.join(flags, "__srk", "left_anti").drop("__srk")
+    def stage(ledger_row):
+        typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
+        keyed = typed.withColumn(
+            "__srk", F.monotonically_increasing_id()
+        ).localCheckpoint()
+        flags = semantic_decontaminate(
+            index_wh, index_name,
+            keyed.select("__srk", text_col),
+            threshold=threshold, n_probes=n_probes,
+            eval_id_col="__srk", text_col=text_col,
+        ).select(F.col("eval_id").alias("__srk")).distinct()
+        return _commit(wh, [
+            (clean_table, keyed.join(flags, "__srk", "left_anti").drop("__srk")),
+            (contaminated_table, keyed.join(flags, "__srk", "left_semi").drop("__srk")),
+            (quarantine_table, quarantined),
+            *ledger_row,
+        ])
 
-    for t in (clean_table, contaminated_table):
-        if not wh.exists(t):
-            wh.create_table(t, schema)
-    if not wh.exists(quarantine_table):
-        wh.create_table(
-            quarantine_table,
-            T.StructType([T.StructField("raw_line", T.StringType())]),
-        )
-    spark = wh.spark
-    with wh.transaction(
-        [clean_table, contaminated_table, quarantine_table, ledger]
-    ) as txn:
-        txn.append(clean_table, clean)
-        txn.append(contaminated_table, contaminated)
-        txn.append(quarantine_table, quarantined)
-        txn.append(
-            ledger, spark.createDataFrame([(int(batch_id),)], "batch_id bigint")
-        )
-    return {
-        "clean": clean.count(),
-        "contaminated": contaminated.count(),
-        "quarantined": quarantined.count(),
-        "replay": False,
-    }
+    return _zone_counts(
+        ("clean", "contaminated", "quarantined"),
+        _land(wh, clean_table, batch_id, stage),
+    )
 
 
 def jsonl_semdecon_ingest_stream(
@@ -2041,23 +1886,14 @@ def jsonl_semdecon_ingest_stream(
     decontamination posture. State is only the file-source log; the
     per-batch cost is one embed pass + one pruned index probe."""
 
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        jsonl_semdecon_ingest_apply(
+    def land(batch_df, batch_id):
+        return jsonl_semdecon_ingest_apply(
             wh, clean_table, contaminated_table, quarantine_table, schema,
             index_wh, index_name, batch_df, batch_id,
             threshold=threshold, n_probes=n_probes, text_col=text_col,
         )
 
-    return (
-        spark.readStream.text(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _zone_stream(spark.readStream.text(source_dir), wh, checkpoint_dir, land)
 
 
 def _media_chunk_keys(hashes: DataFrame, n_chunks: int = 8) -> DataFrame:
@@ -2312,7 +2148,7 @@ def media_ingest_apply(
     than the persisted ledger and silently admit every near-copy
     (zero probe hits), so mismatched calls fail loudly instead --
     the same first-ingest-fixes-the-layout rule as n_sidecar_parts."""
-    from ..functions.dedup import connected_components, hamming_chunk_pairs
+    from ..functions.dedup import hamming_chunk_pairs
     from ..functions.multimodal import (
         _FRAME_SHIFT,
         _MAX_PACKABLE_ID,
@@ -2514,15 +2350,7 @@ def media_ingest_apply(
     within = within_parts[0].unionByName(within_parts[1]).unionByName(
         within_parts[2]
     ).localCheckpoint(eager=True)
-    if within.isEmpty():
-        canon_ids, n_within_dups, dup_members = signed_ids, 0, None
-    else:
-        comp = connected_components(within, nodes=signed_ids, id_col=id_col)
-        canon_ids = comp.filter(F.col(id_col) == F.col("cluster_id")).select(id_col)
-        dup_members = comp.filter(F.col(id_col) != F.col("cluster_id")).select(
-            id_col, "cluster_id"
-        ).localCheckpoint(eager=True)
-        n_within_dups = dup_members.count()
+    canon_ids, dup_members, n_within_dups = _collapse_within(within, signed_ids, id_col)
     canon_hashes = hashes.join(canon_ids, id_col, "left_semi").localCheckpoint(
         eager=True
     )
@@ -2531,47 +2359,25 @@ def media_ingest_apply(
     # sidecar partition buckets (opt-in): each probe collects its
     # (batch-sized) bucket set and the scan partition-prunes to those
     use_buckets = n_sidecar_parts is not None
+    chunk_bucket = id_bucket = None
     if use_buckets:
         chunk_bucket = F.pmod(
             F.xxhash64(F.col("media_type"), F.col("pos"), F.col("val")),
             F.lit(n_sidecar_parts),
         )
         id_bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sidecar_parts))
-
-    def _check_layout(table: str) -> None:
-        has = "__bucket" in wh.read(table).columns
-        if has != use_buckets:
-            raise ValueError(
-                f"{table} layout mismatch: table is "
-                f"{'bucketed' if has else 'unpartitioned'} but this call "
-                f"passed n_sidecar_parts={n_sidecar_parts}; the sidecar "
-                f"layout is fixed at first ingest"
-            )
+    _check_layout(wh, (chunks_table, phash_table), n_sidecar_parts)
 
     # -- cross-batch probe ------------------------------------------
     matched = None
     cross_dup_canon = None
     if wh.exists(chunks_table):
-        _check_layout(chunks_table)
         probe_keys = canon_chunks.select(
             "media_type", "pos", "val"
         ).distinct().localCheckpoint(eager=True)
-        ledger_chunks = wh.read(chunks_table)
-        if use_buckets:
-            probe_buckets = [
-                r["b"]
-                for r in probe_keys.select(chunk_bucket.alias("b"))
-                .distinct()
-                .collect()
-            ]
-            # prune only when the batch leaves most partitions untouched
-            if len(probe_buckets) <= n_sidecar_parts * 0.8:
-                ledger_chunks = ledger_chunks.filter(
-                    F.col("__bucket").isin(probe_buckets)
-                )
-            ledger_chunks = ledger_chunks.drop("__bucket")
-        hits = _ledger_hits(
-            ledger_chunks, probe_keys, ["media_type", "pos", "val"]
+        hits = _probe_sidecar(
+            wh, chunks_table, probe_keys, ["media_type", "pos", "val"],
+            chunk_bucket, n_sidecar_parts,
         )
         from pyspark.sql import Window
 
@@ -2604,19 +2410,9 @@ def media_ingest_apply(
             cand_ids = cand_ids.localCheckpoint(
                 eager=True
             )  # read twice: bucket-set collect + the broadcast semi
-        _check_layout(phash_table)
-        ledger_hashes = wh.read(phash_table)
-        if use_buckets:
-            hash_buckets = [
-                r["b"]
-                for r in cand_ids.select(id_bucket.alias("b")).distinct().collect()
-            ]
-            if len(hash_buckets) <= n_sidecar_parts * 0.8:
-                ledger_hashes = ledger_hashes.filter(
-                    F.col("__bucket").isin(hash_buckets)
-                )
-            ledger_hashes = ledger_hashes.drop("__bucket")
-        corpus_hashes = _ledger_hits(ledger_hashes, cand_ids, [id_col])
+        corpus_hashes = _probe_sidecar(
+            wh, phash_table, cand_ids, [id_col], id_bucket, n_sidecar_parts
+        )
         a = canon_hashes.select(
             F.col(id_col).alias("id_a"), F.col("frame_no").alias("fa"),
             F.col("mhash").alias("h_a"),
@@ -2665,60 +2461,34 @@ def media_ingest_apply(
         new_chunks = new_chunks.withColumn("__bucket", chunk_bucket).repartition(
             "__bucket"
         )
-    n_new = new_rows.count()
 
-    if not wh.exists(corpus_table):
-        wh.create_table(corpus_table, batch.schema)
-    sidecar_parts = ["__bucket"] if use_buckets else None
-    if not wh.exists(phash_table):
-        wh.create_table(phash_table, new_hashes.schema, partition_by=sidecar_parts)
-    else:
-        _check_layout(phash_table)
-    if not wh.exists(chunks_table):
-        wh.create_table(chunks_table, new_chunks.schema, partition_by=sidecar_parts)
-    else:
-        _check_layout(chunks_table)
-    extra = list(extra_appends or [])
-    dup_links = _dup_links(matched, dup_members, id_col)
-    if dupes_table is not None and dup_links is not None:
-        dupes = batch.join(dup_links, id_col)
-        if not wh.exists(dupes_table):
-            wh.create_table(dupes_table, dupes.schema)
-        extra.append((dupes_table, dupes))
-    n_rejected = 0
+    appends = [
+        (corpus_table, new_rows),
+        (phash_table, new_hashes),
+        (chunks_table, new_chunks),
+    ]
     if gate_on:
+        # appended even when empty, so the table exists from the FIRST
+        # gated ingest: empty means healthy, never gate-off (the
+        # monitor-table precedent)
         rejected = rejected_parts[0]
         for rp in rejected_parts[1:]:
             rejected = rejected.unionByName(rp)
-        rejected = rejected.localCheckpoint(eager=True)
-        n_rejected = rejected.count()
-        # created at FIRST gated ingest (not first rejection): a
-        # monitoring consumer can always read it, and empty means
-        # healthy -- never gate-off (the monitor-table precedent)
-        if not wh.exists(rejected_table):
-            wh.create_table(rejected_table, rejected.schema)
-        if n_rejected:
-            extra.append((rejected_table, rejected))
+        appends.append((rejected_table, rejected))  # index 3: n_rejected
     if monitor_table is not None:
         # over-cap bucket audit rows (hamming_bucket_stats per family on
         # the SAME batch hash frame the pair joins read): corpus-wide
         # saturation here is the blank-media pre-filter signal measured
         # in SCALE.md r13 -- landed in the SAME transaction so a batch's
-        # verdicts and its saturation evidence commit atomically. The
-        # frame is batch-sized; most batches emit ZERO rows. The table
-        # is created at FIRST ingest (not first saturation), so a
-        # monitoring consumer can always read it and empty means
-        # healthy, never monitoring-off (r13 review fix).
+        # verdicts and its saturation evidence commit atomically. Most
+        # batches emit ZERO rows; the table still exists from the FIRST
+        # ingest, so empty means healthy, never monitoring-off.
         monitor = (
             monitor_parts[0]
             .unionByName(monitor_parts[1])
             .unionByName(monitor_parts[2])
-            .localCheckpoint(eager=True)
         )
-        if not wh.exists(monitor_table):
-            wh.create_table(monitor_table, monitor.schema)
-        if not monitor.isEmpty():
-            extra.append((monitor_table, monitor))
+        appends.append((monitor_table, monitor))
     if embed_index is not None:
         # incremental cross-modal index maintenance (r15): the ADMITTED
         # rows embed through the one encoder seam, assign against the
@@ -2726,23 +2496,16 @@ def media_ingest_apply(
         # posture -- periodic rebuilds own distribution drift), and the
         # assignment rows land in the SAME transaction as the corpus
         # append, so the searchable index and the corpus can never
-        # disagree about what was ingested. The index must be PRE-BUILT
-        # (build_ivf_index needs training vectors); a missing index
-        # fails loudly here, before any state changes. Geometry (dims /
-        # columns) comes from the index's own build_config -- never
-        # from caller knobs that could drift from the stored codebook.
+        # disagree about what was ingested. Geometry (dims / columns)
+        # comes from the index's own build_config (checked at the front
+        # door) -- never from caller knobs that could drift from the
+        # stored codebook.
         import json as _json
 
         from ..functions.multimodal import embed_media
         from ..functions.similarity import _assign_against, with_quantized
 
-        icfg_rows = wh.read(f"{embed_index}.build_config").collect()
-        if not icfg_rows:
-            raise ValueError(
-                f"embed_index {embed_index!r} has no build_config row -- "
-                "build it with build_ivf_index first"
-            )
-        icfg = _json.loads(icfg_rows[0]["config"])
+        icfg = _json.loads(wh.read(f"{embed_index}.build_config").first()["config"])
         vecs = (
             embed_media(new_rows, dims=icfg["dims"])
             .filter(F.col("embedding").isNotNull())
@@ -2767,29 +2530,21 @@ def media_ingest_apply(
             "left_anti",
         ).localCheckpoint(eager=True)
         if not assigned.isEmpty():
-            extra.append((f"{embed_index}.assignment", assigned))
+            appends.append((f"{embed_index}.assignment", assigned))
     if not cfg_pinned:
         cfg_df = wh.spark.createDataFrame(
             [tuple(cfg.values())], schema=", ".join(f"{k} int" for k in cfg)
         )
-        if not wh.exists(cfg_table):
-            wh.create_table(cfg_table, cfg_df.schema)
-        extra.append((cfg_table, cfg_df))
-    with wh.transaction(
-        [corpus_table, phash_table, chunks_table, *[t for t, _ in extra]]
-    ) as txn:
-        txn.append(corpus_table, new_rows)
-        txn.append(phash_table, new_hashes)
-        txn.append(chunks_table, new_chunks)
-        for t, df in extra:
-            txn.append(t, df)
+        appends.append((cfg_table, cfg_df))
+    appends += _dupes_appends(dupes_table, batch, matched, dup_members, id_col)
+    counts = _commit(wh, appends + list(extra_appends or []))
     return {
         "n_batch": n_batch,
         "n_unsigned": n_unsigned,
         "n_within_dups": n_within_dups,
         "n_cross_dups": n_cross_dups,
-        "n_new": n_new,
-        **({"n_rejected": n_rejected} if gate_on else {}),
+        "n_new": counts[0],
+        **({"n_rejected": counts[3]} if gate_on else {}),
     }
 
 
@@ -2900,54 +2655,24 @@ def media_ingest_stream(
     guard land in ONE warehouse transaction (replayed batches are
     exact no-ops); the optional maintenance cadence compacts the
     corpus and both sidecars post-commit."""
-    batch_log = f"{corpus_table}.ingest_log"
-    maint_state = {"since": 0}
 
-    def _maybe_maintain():
-        if maintenance_every <= 0:
-            return
-        maint_state["since"] += 1
-        if maint_state["since"] < maintenance_every:
-            return
-        maint_state["since"] = 0
-        for t in (corpus_table, f"{corpus_table}.phash", f"{corpus_table}.chunks"):
-            wh.maybe_compact(t, **(maintenance_kwargs or {}))
-
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        if not wh.exists(batch_log):
-            wh.create_table(
-                batch_log, T.StructType([T.StructField("batch_id", T.LongType())])
+    def land(batch_df, batch_id):
+        def stage(ledger_row):
+            typed = batch_df.localCheckpoint()
+            media_ingest_apply(
+                wh, corpus_table, typed,
+                dupes_table=dupes_table,
+                extra_appends=ledger_row,
+                **apply_kwargs,
             )
-        if wh.read(batch_log).filter(F.col("batch_id") == batch_id).count() > 0:
-            return
-        typed = batch_df.localCheckpoint()
-        media_ingest_apply(
-            wh, corpus_table, typed,
-            dupes_table=dupes_table,
-            extra_appends=[
-                (
-                    batch_log,
-                    spark.createDataFrame([(int(batch_id),)], "batch_id bigint"),
-                ),
-            ],
-            **apply_kwargs,
-        )
-        if ndv_cols:
-            # ingest-offered NDV ledger, post-commit -- same grain and
-            # single-writer crash argument as the text zones
-            from ..functions.sketch import update_ndv_sketches
+            return typed
 
-            update_ndv_sketches(wh, f"{corpus_table}.ndv", typed, ndv_cols)
-        _maybe_maintain()
+        return _land(wh, corpus_table, batch_id, stage)
 
-    return (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
+    return _zone_stream(
+        spark.readStream.schema(schema).parquet(source_dir), wh, checkpoint_dir, land,
+        hooks=_ndv_hooks(wh, corpus_table, ndv_cols),
+        maintain=(corpus_table, f"{corpus_table}.phash", f"{corpus_table}.chunks"),
+        maintenance_every=maintenance_every,
+        maintenance_kwargs=maintenance_kwargs,
     )

@@ -33,10 +33,10 @@ def _slow_tests() -> set:
 
 
 def _stale_slow_entries(config, items, slow: set) -> list[str]:
-    """slow_tests.txt entries naming no collected test. Only modules
-    collected whole are checked, so single-file and single-test runs
-    still work."""
-    collected = {item.nodeid.split("[")[0] for item in items}
+    """slow_tests.txt entries naming no collected test or parametrized
+    case. Only modules collected whole are checked, so single-file and
+    single-test runs still work."""
+    collected = {n for item in items for n in (item.nodeid, item.nodeid.split("[")[0])}
     modules = {nodeid.split("::")[0] for nodeid in collected}
     partial = {
         os.path.relpath(os.path.abspath(arg.split("::")[0]), config.rootpath)
@@ -64,7 +64,7 @@ def pytest_collection_modifyitems(config, items):
         reason="slow tier (tests/slow_tests.txt); set RUN_SLOW=1 to run"
     )
     for item in items:
-        if item.nodeid.split("[")[0] in slow:
+        if item.nodeid in slow or item.nodeid.split("[")[0] in slow:
             item.add_marker(marker)
 
 

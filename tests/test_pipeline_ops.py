@@ -499,6 +499,37 @@ def test_connected_components_chain_clique_singleton(spark):
     assert all(got[i] == i for i in range(300, 303))  # singletons
 
 
+def test_connected_components_raises_at_round_cap(spark, monkeypatch):
+    """Unconverged labels would silently split clusters, so hitting the
+    round cap raises. A 5-node chain spread over 8 hash partitions
+    defeats the partition-local seed and needs exactly two rounds."""
+    import pytest
+
+    from pg_auto_dw_spark.functions import dedup
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(4)], "id_a: bigint, id_b: bigint"
+    )
+    confs = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
+        with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+            dedup.connected_components(pairs)
+        monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 2)
+        got = dedup.connected_components(pairs).collect()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert sorted(r["doc_id"] for r in got) == list(range(5))
+    assert {r["cluster_id"] for r in got} == {0}
+
+
 def test_token_budget_sample_respects_budget(spark, sf_dir):
     """Greedy hash-order sampling: per-language token sums stay within
     budget, the result is deterministic, and kept docs are a prefix in

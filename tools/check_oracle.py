@@ -54,89 +54,93 @@ def frame_fingerprint(rows: list[tuple], cols: list[str]) -> tuple[int, list[str
     return len(rows), sorted(cols), h
 
 
+def open_oracle(sf: str):
+    """DuckDB connection with one view per test table under ``sf``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
+        )
+    return con
+
+
+def first_diff(srows, scols, orows, ocols) -> list[str]:
+    """The first differing canonical line of two same-shaped results."""
+    order_s = sorted(range(len(scols)), key=lambda i: scols[i])
+    order_o = sorted(range(len(ocols)), key=lambda i: ocols[i])
+    ls = sorted("\x01".join(canon_cell(r[i]) for i in order_s) for r in srows)
+    lo = sorted("\x01".join(canon_cell(r[i]) for i in order_o) for r in orows)
+    for a, b in zip(ls, lo):
+        if a != b:
+            return [f"      spark:  {a[:300]}", f"      duckdb: {b[:300]}"]
+    return []
+
+
+def check_query(spark, con, sf: str, name: str, fn, sql: str | None) -> tuple[str, list[str]]:
+    """Run query ``name`` on Spark and its oracle ``sql`` on DuckDB.
+    Returns the status ("OK", "FAIL", or "ROWS" when there is no
+    oracle) and the report lines to print."""
+    t0 = time.time()
+    try:
+        sdf = fn(spark, sf)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:
+        return "FAIL", [f"FAIL  {name}: spark error: {e}"]
+    t_spark = time.time() - t0
+    if sql is None:
+        return "ROWS", [f"ROWS  {name}: {len(srows)} rows (no oracle) [{t_spark:.1f}s]"]
+    try:
+        res = con.execute(sql)
+        ocols = [d[0] for d in res.description]
+        orows = res.fetchall()
+    except Exception as e:
+        return "FAIL", [f"FAIL  {name}: duckdb error: {e}"]
+    sn, sc, sh = frame_fingerprint(srows, scols)
+    on, oc, oh = frame_fingerprint(orows, ocols)
+    lines = []
+    # Type-class gate (r8 VERDICT directive 2): the local str()-level
+    # canonicalization is blind to integer width, but the driver's
+    # typed/Arrow-buffer hash is not (int128 != int64 even when every
+    # value is equal — text_word_entropy, 3 rounds red). Compare the
+    # engines' declared output types and fail on hard-error diffs.
+    dtype_errs = []
+    try:
+        sdt = {k: norm_spark(v) for k, v in sdf.dtypes}
+        ddt = {r[0]: norm_duck(r[1]) for r in con.execute(f"DESCRIBE {sql}").fetchall()}
+        for c in sorted(set(sdt) | set(ddt)):
+            if classify(sdt.get(c), ddt.get(c)) == "error":
+                dtype_errs.append(f"{c}: spark={sdt.get(c)} duckdb={ddt.get(c)}")
+    except Exception as e:  # DESCRIBE can fail on exotic SQL; don't mask values
+        lines.append(f"      (dtype check skipped: {e})")
+    lines += [f"DTYPE {name}.{d}" for d in dtype_errs]
+    if (sn, sc, sh) == (on, oc, oh) and not dtype_errs:
+        return "OK", lines + [f"OK    {name}: {sn} rows [{t_spark:.1f}s]"]
+    lines.append(f"FAIL  {name}: rows {sn}/{on} cols {sc}/{oc} hash {'=' if sh == oh else '!='}")
+    if sn == on and sc == oc:
+        lines += first_diff(srows, scols, orows, ocols)
+    return "FAIL", lines
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from pg_auto_dw_spark.session import get_spark
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
-        )
-
+    con = open_oracle(args.sf)
     qmap = entrymod.queries()
     omap = entrymod.oracle_sql()
     names = args.names or list(qmap)
     failures = 0
     for name in names:
-        fn = qmap[name]
-        t0 = time.time()
-        try:
-            sdf = fn(spark, args.sf)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
-            failures += 1
-            continue
-        t_spark = time.time() - t0
-        if name not in omap:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle) [{t_spark:.1f}s]")
-            continue
-        try:
-            res = con.execute(omap[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-        except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {e}")
-            failures += 1
-            continue
-        sn, sc, sh = frame_fingerprint(srows, scols)
-        on, oc, oh = frame_fingerprint(orows, ocols)
-        # Type-class gate (r8 VERDICT directive 2): the local str()-level
-        # canonicalization is blind to integer width, but the driver's
-        # typed/Arrow-buffer hash is not (int128 != int64 even when every
-        # value is equal — text_word_entropy, 3 rounds red). Compare the
-        # engines' declared output types and fail on hard-error diffs.
-        dtype_errs = []
-        try:
-            sdt = {k: norm_spark(v) for k, v in sdf.dtypes}
-            ddt = {
-                r[0]: norm_duck(r[1])
-                for r in con.execute(f"DESCRIBE {omap[name]}").fetchall()
-            }
-            for c in sorted(set(sdt) | set(ddt)):
-                if classify(sdt.get(c), ddt.get(c)) == "error":
-                    dtype_errs.append(f"{c}: spark={sdt.get(c)} duckdb={ddt.get(c)}")
-        except Exception as e:  # DESCRIBE can fail on exotic SQL; don't mask values
-            print(f"      (dtype check skipped: {e})")
-        status = "OK  " if (sn, sc, sh) == (on, oc, oh) and not dtype_errs else "FAIL"
-        if dtype_errs:
-            for d in dtype_errs:
-                print(f"DTYPE {name}.{d}")
-        if status == "FAIL":
-            failures += 1
-            print(f"{status}  {name}: rows {sn}/{on} cols {sc}/{oc} hash {'=' if sh==oh else '!='}")
-            if sn == on and sc == oc:
-                # dump first differing line for debugging
-                order_s = sorted(range(len(scols)), key=lambda i: scols[i])
-                order_o = sorted(range(len(ocols)), key=lambda i: ocols[i])
-                ls = sorted("\x01".join(canon_cell(r[i]) for i in order_s) for r in srows)
-                lo = sorted("\x01".join(canon_cell(r[i]) for i in order_o) for r in orows)
-                for a, b in zip(ls, lo):
-                    if a != b:
-                        print(f"      spark:  {a[:300]}")
-                        print(f"      duckdb: {b[:300]}")
-                        break
-        else:
-            print(f"{status}  {name}: {sn} rows [{t_spark:.1f}s]")
+        status, lines = check_query(spark, con, args.sf, name, qmap[name], omap.get(name))
+        failures += status == "FAIL"
+        print("\n".join(lines))
     print(f"\n{len(names) - failures}/{len(names)} queries match")
     return 1 if failures else 0
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -88,8 +89,7 @@ def child(probe_dir: str) -> None:
             t0 = time.time()
             fn(spark, probe_dir).write.format("noop").mode("overwrite").save()
             times.append(round(time.time() - t0, 3))
-        times.sort()
-        out[name] = {"median": times[len(times) // 2], "reps": times}
+        out[name] = {"median": statistics.median(times), "reps": sorted(times)}
     print("CHILD_RESULT " + json.dumps({"cpus": int(cpus), "rows": out}))
     spark.stop()
 
@@ -115,6 +115,7 @@ def main() -> None:
             if line is None:
                 print(r.stdout[-3000:], file=sys.stderr)
                 print(r.stderr[-3000:], file=sys.stderr)
+                print(json.dumps(results))  # the widths that did finish
                 raise RuntimeError(f"child at {cpus} cores produced no result")
             results[cpus] = json.loads(line[len("CHILD_RESULT "):])["rows"]
         print(f"{'row':38s} {'8c med':>8s} {'32c med':>8s} {'ratio':>6s}")
