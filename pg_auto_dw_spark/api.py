@@ -287,11 +287,6 @@ class AutoDW:
         """Build-test-rollback (docs go.md): assemble the ready set and
         render the DDL that WOULD run plus planned load counts; nothing
         is persisted (build_call/dv_repo untouched, no tables created)."""
-        from .build.builder import (
-            assemble_business_keys,
-            build_object_pull,
-            ready_build_call_rows,
-        )
         from .build.ddl import hub_ddl_sql, satellite_ddl_sql
         from .build.loader import hub_stage_df
 

@@ -10,7 +10,9 @@ DataFrames; PK/FK/description facts come from the SourceRegistry
 
 Driver-side row assembly is the right altitude here: a catalog snapshot
 is metadata (one row per column, thousands at most), just as the
-reference's is. The SCD2 merge that consumes it is DataFrame-native.
+reference's is. The frame is built from an Arrow table, so it is a
+local relation: the driver-side SCD2 merge that consumes it collects it
+without running a Spark job.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .registry import SourceRegistry, synthetic_oid
+from ..warehouse import _arrow_table
 
 SNAPSHOT_SCHEMA = T.StructType(
     [
@@ -87,4 +90,4 @@ def catalog_snapshot(
                     1 if fld.name in meta.fk_columns else 0,
                 )
             )
-    return spark.createDataFrame(rows, SNAPSHOT_SCHEMA)
+    return spark.createDataFrame(_arrow_table(SNAPSHOT_SCHEMA, rows))

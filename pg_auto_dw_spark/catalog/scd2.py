@@ -3,7 +3,7 @@
 
 The reference runs one SQL script per crawl: build temp snapshot,
 UNION/EXCEPT include-exclude filtering, then four sequential DML
-statements. We compute the same final state in one DataFrame pass:
+statements. We compute the same final state in one pass over the rows:
 
 1. mark deleted   (current row, key absent from snapshot)     J8/S8
 2. close changed  (key present, any tracked col IS DISTINCT)  P6/S8
@@ -15,20 +15,27 @@ Sequential-update equivalence argument: (1) and (2)/(3) are disjoint
 (3) only touches rows not closed by (2) (closing clears current_flag,
 and the reference's update runs after the close); (4) inserts exactly
 the snapshot keys whose current row was closed or never existed. So a
-single joined pass with those predicates lands in the identical state.
+single pass over the current rows with those predicates lands in the
+identical state.
 
-Scale: the catalog table is column-grain metadata (tiny); every join
-broadcasts under AQE. The same merge shape applied to a data-scale
-SCD2 dimension would want the target bucketed by key -- noted in the
-loaders, not needed here.
+Altitude: the table is column-grain metadata -- one row per source
+column, hundreds to thousands -- just like the reference's, which a
+background worker merges in-process every 10 s. So the pass runs on the
+driver, as the snapshot itself is built there: the live files are read
+with pyarrow (``Warehouse.read_arrow``), the snapshot frame is a local
+relation (collecting it runs no Spark job), and the result is committed
+as one parquet file in a fresh generation (``Warehouse.overwrite_rows``).
+A crawl that changes nothing commits nothing. The data-grain SCD2 of a
+dimension is a different animal and stays distributed
+(build/scd2_dim.py, build/merge.py).
 """
 
 from __future__ import annotations
 
 import datetime
+import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .introspect import SNAPSHOT_SCHEMA
@@ -65,160 +72,102 @@ SOURCE_OBJECTS_SCHEMA = T.StructType(
     ]
 )
 
+_PATTERN_COLS = ("schema_name", "table_name", "column_name")
+
 
 def ensure_table(wh: Warehouse) -> None:
     wh.create_table(TABLE, SOURCE_OBJECTS_SCHEMA)
 
 
-def filter_snapshot(
-    current: DataFrame,
-    snapshot: DataFrame,
-    include: tuple[str, str, str],
-    exclude: tuple[str, str, str],
-) -> DataFrame:
-    """Include/exclude regex keyed-list semantics (queries.rs:164-194):
+def _key(row: dict) -> tuple:
+    return tuple(row[k] for k in KEYS)
 
-    keep = (keys currently tracked  UNION  keys matching include)
-           EXCEPT keys matching exclude
 
-    UNION and EXCEPT deduplicate in Postgres (SURVEY O3/O4), hence
-    ``distinct``/``subtract`` here. The 'a^' sentinel matches nothing.
-    """
-    cur_keys = (
-        current.filter((F.col("current_flag") == "Y") & (F.col("deleted_flag") == "N"))
-        .select(*KEYS)
-    )
-    inc = snapshot.filter(
-        F.col("schema_name").rlike(include[0])
-        & F.col("table_name").rlike(include[1])
-        & F.col("column_name").rlike(include[2])
-    ).select(*KEYS)
-    exc = snapshot.filter(
-        F.col("schema_name").rlike(exclude[0])
-        & F.col("table_name").rlike(exclude[1])
-        & F.col("column_name").rlike(exclude[2])
-    ).select(*KEYS)
-    keep = cur_keys.union(inc).distinct().subtract(exc)
-    return snapshot.join(keep, on=KEYS, how="inner")
+def _compile(patterns: tuple[str, str, str]) -> list[re.Pattern]:
+    """The three (schema, table, column) regexes; a bad one raises
+    ``ValueError`` naming it before anything is read or written."""
+    out = []
+    for p in patterns:
+        try:
+            out.append(re.compile(p))
+        except re.error as e:
+            raise ValueError(f"invalid source pattern {p!r}: {e}") from None
+    return out
+
+
+def _matches(row: dict, patterns: list[re.Pattern]) -> bool:
+    return all(p.search(row[c]) for p, c in zip(patterns, _PATTERN_COLS))
 
 
 def merge_snapshot(
-    wh: Warehouse,
-    snapshot: DataFrame,
-    as_of: datetime.datetime | None = None,
-    audit: bool = True,
+    wh: Warehouse, snapshot: DataFrame, as_of: datetime.datetime | None = None
 ) -> dict[str, int]:
-    """Run the 4-step SCD2 merge; returns row counts per action
-    (``audit=False`` skips the counting jobs -- the merge itself is one
-    write either way)."""
+    """Run the 4-step SCD2 merge; returns row counts per action."""
+    return _merge(wh, snapshot, as_of)
+
+
+def _merge(wh: Warehouse, snapshot: DataFrame, as_of, patterns=None) -> dict[str, int]:
+    """The merge, optionally after the include/exclude filter of
+    ``crawl`` (``patterns`` = compiled (include, exclude))."""
+    snap_rows = [r.asDict() for r in snapshot.select(*SNAPSHOT_SCHEMA.names).collect()]
     ensure_table(wh)
     # Postgres-transaction parity: the whole read-compute-write cycle
     # holds the table lock, so two concurrent merges serialize instead
     # of losing an update (reference: dv_loader.rs:59-64 runs the full
     # script in one SPI transaction).
     with wh.lock(TABLE):
-        now = F.lit(as_of).cast("timestamp") if as_of else F.current_timestamp()
-        cur = wh.read(TABLE)
-        cur_y = cur.filter(F.col("current_flag") == "Y")
-        cur_n = cur.filter(F.col("current_flag") != "Y")
-
-        snap = snapshot.select(
-            *[F.col(c).alias(f"snap_{c}") for c in snapshot.columns], F.lit(1).alias("snap_match")
-        )
-        # With audit the join feeds three consumers (audit aggregate, insert
-        # anti-join, final write) -- pin it so it computes once. Without
-        # audit there are only two consumers of this metadata-grain join and
-        # the checkpoint's materialization cost exceeds the recompute
-        # (measured: scd2_merge_state 4.96s pinned vs ~3.2s not, sf0.1).
-        j = cur_y.join(
-            snap,
-            on=[F.col(k) == F.col(f"snap_{k}") for k in KEYS],
-            how="left",
-        )
-        if audit:
-            j = j.localCheckpoint(eager=False)
-
-        matched = F.col("snap_match").isNotNull()
-        # any tracked column IS DISTINCT FROM its snapshot value (P6)
-        changed_pred = F.lit(False)
-        for c in TRACKED:
-            changed_pred = changed_pred | ~F.col(c).eqNullSafe(F.col(f"snap_{c}"))
-        changed = matched & changed_pred
-        # resurrect: deleted row reappears with any plainly-equal column (P7;
-        # null-unsafe equality chain as in queries.rs:263-276)
-        equal_pred = F.lit(False)
-        for c in TRACKED:
-            equal_pred = equal_pred | (F.col(c) == F.col(f"snap_{c}"))
-        resurrect = matched & ~changed & (F.col("deleted_flag") == "Y") & equal_pred
-
-        updated_y = j.select(
-            *[
-                F.col(c)
-                for c in cur.columns
-                if c not in ("deleted_flag", "current_flag", "valid_to")
-            ],
-            F.when(~matched, F.lit("Y"))
-            .when(resurrect, F.lit("N"))
-            .otherwise(F.col("deleted_flag"))
-            .alias("deleted_flag"),
-            F.when(changed, F.lit("N")).otherwise(F.col("current_flag")).alias("current_flag"),
-            F.when(changed, now).otherwise(F.col("valid_to")).alias("valid_to"),
-        ).select(*cur.columns)
-
-        # insert: snapshot keys whose current row was closed or never existed
-        surviving_keys = j.filter(~changed).select(*KEYS)
-        # Counted once: the count sizes the sequence window AND supplies the
-        # audit's "inserted" figure -- no second job. Pinning only pays when
-        # the audit aggregate adds a third consumer of the same lineage.
-        inserts_src = snapshot.join(surviving_keys, on=KEYS, how="left_anti")
-        if audit:
-            inserts_src = inserts_src.localCheckpoint(eager=False)
-        n_inserts = inserts_src.count()
-
-        # max existing pk attached via a broadcast scalar cross join instead
-        # of a driver collect -- keeps the merge a single job at write time
-        max_pk_df = cur.agg(
-            F.coalesce(F.max("pk_source_objects"), F.lit(0)).alias("__max_pk")
-        )
-        from ..functions.sequence import global_row_number
-
-        # contiguous pk sequence without a single-partition window
-        # (Postgres-sequence analog, utility/sql/info_tables.sql)
-        inserts = (
-            global_row_number(
-                inserts_src,
-                ["schema_name", "table_name", "column_ordinal_position"],
-                "__rn",
-                n_rows=n_inserts,
-            )
-            .crossJoin(F.broadcast(max_pk_df))
-            .withColumn("pk_source_objects", F.col("__rn") + F.col("__max_pk"))
-            .drop("__max_pk", "__rn")
-            .withColumn("column_dw_flag", F.lit("N"))
-            .withColumn("valid_from", now)
-            .withColumn("valid_to", F.lit(None).cast("timestamp"))
-            .withColumn("current_flag", F.lit("Y"))
-            .withColumn("deleted_flag", F.lit("N"))
-            .select(*cur.columns)
-        )
-
-        counts = {"deleted": 0, "closed": 0, "resurrected": 0, "inserted": n_inserts}
-        if audit:
-            # One aggregation pass for the audit counts (four separate
-            # count() jobs would re-run the join each time).
-            stats = j.agg(
-                F.sum((~matched & (F.col("deleted_flag") == "N")).cast("int")).alias("deleted"),
-                F.sum(changed.cast("int")).alias("closed"),
-                F.sum(resurrect.cast("int")).alias("resurrected"),
-            ).collect()[0]
-            counts = {
-                "deleted": stats["deleted"] or 0,
-                "closed": stats["closed"] or 0,
-                "resurrected": stats["resurrected"] or 0,
-                "inserted": n_inserts,
+        rows = wh.read_arrow(TABLE).to_pylist()
+        if patterns is not None:
+            # keep = (keys currently tracked UNION keys matching include)
+            #        EXCEPT keys matching exclude      (queries.rs:164-194)
+            include, exclude = patterns
+            keep = {
+                _key(r) for r in rows if r["current_flag"] == "Y" and r["deleted_flag"] == "N"
             }
-        final = cur_n.unionByName(updated_y).unionByName(inserts)
-        wh.overwrite(TABLE, final)
+            keep |= {_key(r) for r in snap_rows if _matches(r, include)}
+            keep -= {_key(r) for r in snap_rows if _matches(r, exclude)}
+            snap_rows = [r for r in snap_rows if _key(r) in keep]
+        snap = {_key(r): r for r in snap_rows}
+        # ``as_of`` converts as ``F.lit(as_of).cast("timestamp")`` does
+        now = as_of or datetime.datetime.now(datetime.timezone.utc)
+        counts = dict.fromkeys(("deleted", "closed", "resurrected", "inserted"), 0)
+        surviving = set()
+        for r in rows:
+            if r["current_flag"] != "Y":
+                continue
+            s = snap.get(_key(r))
+            if s is None:
+                counts["deleted"] += r["deleted_flag"] == "N"
+                r["deleted_flag"] = "Y"
+            # any tracked column IS DISTINCT FROM its snapshot value (P6)
+            elif any(r[c] != s[c] for c in TRACKED):
+                counts["closed"] += 1
+                r["current_flag"], r["valid_to"] = "N", now
+            else:
+                surviving.add(_key(r))
+                # resurrect: a deleted row reappears with any plainly-equal
+                # column (P7; null-unsafe OR chain as in queries.rs:263-276).
+                # Every column is equal here, so "plainly" means non-null.
+                if r["deleted_flag"] == "Y" and any(r[c] is not None for c in TRACKED):
+                    counts["resurrected"] += 1
+                    r["deleted_flag"] = "N"
+        # insert: snapshot keys whose current row was closed or never
+        # existed, numbered on from the largest pk (Postgres-sequence
+        # analog, utility/sql/info_tables.sql)
+        inserts = sorted(
+            (s for k, s in snap.items() if k not in surviving),
+            key=lambda s: (s["schema_name"], s["table_name"], s["column_ordinal_position"]),
+        )
+        pk = max((r["pk_source_objects"] for r in rows), default=0)
+        for i, s in enumerate(inserts, start=pk + 1):
+            rows.append(
+                {**s, "pk_source_objects": i, "column_dw_flag": "N", "valid_from": now,
+                 "valid_to": None, "current_flag": "Y", "deleted_flag": "N"}
+            )
+        counts["inserted"] = len(inserts)
+        if any(counts.values()):
+            names = SOURCE_OBJECTS_SCHEMA.names
+            wh.overwrite_rows(TABLE, [tuple(r[c] for c in names) for r in rows])
         return counts
 
 
@@ -231,8 +180,7 @@ def crawl(
 ) -> dict[str, int]:
     """One crawler iteration (reference: bgw_source_objects.rs:18-51):
     filter the snapshot by the include/exclude key-list semantics, then
-    merge. Default patterns track only already-included keys, exactly
-    like the background worker's 'a^' x6 call."""
-    ensure_table(wh)
-    filtered = filter_snapshot(wh.read(TABLE), snapshot, include, exclude)
-    return merge_snapshot(wh, filtered, as_of=as_of)
+    merge. Patterns are regexes found anywhere in the name (``rlike``);
+    default patterns track only already-included keys, exactly like the
+    background worker's 'a^' x6 call."""
+    return _merge(wh, snapshot, as_of, (_compile(include), _compile(exclude)))

@@ -1137,9 +1137,7 @@ def scd2_merge_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             (spark.sparkContext.applicationId, "scd2_state"), "autodw_scd2_", build
         ),
     )
-    merge_snapshot(
-        wh, local_relation_df(spark, snap_rows, SNAPSHOT_SCHEMA), as_of=as_of, audit=False
-    )
+    merge_snapshot(wh, local_relation_df(spark, snap_rows, SNAPSHOT_SCHEMA), as_of=as_of)
     final = wh.read("auto_dw.source_objects")
     return final.select(
         "pk_source_objects",

@@ -14,6 +14,9 @@ reference uses (SURVEY.md S5-S9):
                      catalog-sized (rows = number of source columns), so
                      a full rewrite per merge is cheap; atomicity comes
                      from generation-dir + pointer-file commit (below).
+- ``overwrite_rows`` -> the same full rewrite for a table the driver
+                     merged itself (the catalog SCD2 crawl): rows it
+                     already holds, committed as ONE parquet file.
 - ``create``      -> DDL sink (S6) with an explicit StructType.
 
 Crash safety: ``overwrite`` never renames the live directory. It writes
@@ -804,11 +807,7 @@ class Warehouse:
 
     def _rows_write(self, name: str, rows: list[tuple]):
         """``write(target) -> rows`` for a driver-side append of ``rows``."""
-        if name not in self._schemas or name in self._partitioning:
-            raise ValueError(
-                f"append_rows needs a registered, unpartitioned table; {name} is not"
-            )
-        table = _arrow_table(self._schemas[name], rows)
+        table = _arrow_table(self._driver_schema(name), rows)
 
         def write(target: str) -> int:
             if rows:
@@ -820,6 +819,14 @@ class Warehouse:
             return len(rows)
 
         return write
+
+    def _driver_schema(self, name: str) -> T.StructType:
+        """Schema of a table the driver reads or writes as Arrow."""
+        if name not in self._schemas or name in self._partitioning:
+            raise ValueError(
+                f"driver-side rows need a registered, unpartitioned table; {name} is not"
+            )
+        return self._schemas[name]
 
     def _link_tree(self, src: str, dst: str) -> None:
         """Hardlink every file under ``src`` into ``dst`` preserving the
@@ -966,6 +973,36 @@ class Warehouse:
                 writer = writer.partitionBy(*self._partitioning[name])
             writer.parquet(gen)
             self._commit_generation(name, gen)
+
+    def overwrite_rows(self, name: str, rows: list[tuple]) -> None:
+        """``overwrite`` for rows the driver already holds: they land as
+        ONE parquet file written on the driver (no Spark job, values
+        converted as ``append_rows`` converts them) in a fresh
+        generation, committed under the same lock and pointer swap."""
+        write = self._rows_write(name, rows)
+        with self.lock(name):
+            gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
+            os.makedirs(gen)
+            write(gen)
+            self._commit_generation(name, gen)
+
+    def read_arrow(self, name: str):
+        """The live table as one Arrow table of its registered schema,
+        read on the driver -- for metadata-sized, unpartitioned tables.
+        Spark writes timestamps as INT96, which Arrow reads as naive
+        values that ARE the UTC instant: they are labelled UTC, never
+        shifted, so they match what ``append_rows`` writes."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(self._driver_schema(name))
+        live = self.path(name)
+        parts = [schema.empty_table()]
+        for rel in self.data_files(name):
+            t = pq.read_table(os.path.join(live, rel), coerce_int96_timestamp_unit="us")
+            cols = [t.column(f.name).cast(f.type) for f in schema]
+            parts.append(pa.Table.from_arrays(cols, schema=schema))
+        return pa.concat_tables(parts)
 
     def data_files(self, name: str) -> dict[str, int]:
         """Live data files (path relative to the live dir -> bytes);
