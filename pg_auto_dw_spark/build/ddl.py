@@ -123,36 +123,22 @@ def satellite_schemas(
     return out
 
 
-def hub_ddl_sql(dw_schema: str, business_key: BusinessKey) -> str:
-    """ANSI rendering of the hub DDL, for logs/parity checks."""
+def ddl_sql(qualified_name: str, schema: T.StructType) -> str:
+    """ANSI rendering of a table's DDL (``name TYPE[ NOT NULL]`` per
+    column), for logs/parity checks."""
     cols = [
-        f"hub_{business_key.name}_hk STRING NOT NULL",
-        "load_ts TIMESTAMP NOT NULL",
-        "record_source STRING NOT NULL",
+        f"{f.name} {f.dataType.simpleString().upper()}" + ("" if f.nullable else " NOT NULL")
+        for f in schema.fields
     ]
-    cols += [f"{p.alias}_bk STRING" for p in business_key.business_key_part_links]
-    return (
-        f"CREATE TABLE {dw_schema}.hub_{business_key.name} (\n    "
-        + ",\n    ".join(cols)
-        + "\n)"
-    )
+    return f"CREATE TABLE {qualified_name} (\n    " + ",\n    ".join(cols) + "\n)"
+
+
+def hub_ddl_sql(dw_schema: str, business_key: BusinessKey) -> str:
+    return ddl_sql(f"{dw_schema}.hub_{business_key.name}", hub_schema(business_key))
 
 
 def satellite_ddl_sql(dw_schema: str, business_key: BusinessKey) -> dict[str, str]:
-    """ANSI rendering of each satellite DDL."""
-    out: dict[str, str] = {}
-    for key, descriptors in business_key.satellites().items():
-        cols = [
-            f"hub_{business_key.name}_hk STRING NOT NULL",
-            "load_ts TIMESTAMP NOT NULL",
-            "record_source STRING NOT NULL",
-            f"sat_{key}_hd STRING NOT NULL",
-        ]
-        for d in descriptors:
-            src = d.descriptor_link.source_column
-            spark_t = spark_type_for(src.column_type_name if src else "text")
-            cols.append(f"{d.descriptor_link.alias} {spark_t.simpleString().upper()}")
-        out[f"sat_{key}"] = (
-            f"CREATE TABLE {dw_schema}.sat_{key} (\n    " + ",\n    ".join(cols) + "\n)"
-        )
-    return out
+    return {
+        name: ddl_sql(f"{dw_schema}.{name}", schema)
+        for name, schema in satellite_schemas(business_key).items()
+    }

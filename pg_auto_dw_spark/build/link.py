@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from ..functions.hashing import pg_text_expr
 from ..warehouse import Warehouse
+from .ddl import ddl_sql
 
 
 @dataclass
@@ -61,14 +62,7 @@ def link_schema(spec: LinkSpec) -> T.StructType:
 
 
 def link_ddl_sql(dw_schema: str, spec: LinkSpec) -> str:
-    cols = [
-        f"link_{spec.name}_hk STRING NOT NULL",
-        "load_ts TIMESTAMP NOT NULL",
-        "record_source STRING NOT NULL",
-    ] + [f"hub_{u.bk_name}_hk STRING NOT NULL" for u in spec.units]
-    return (
-        f"CREATE TABLE {dw_schema}.link_{spec.name} (\n    " + ",\n    ".join(cols) + "\n)"
-    )
+    return ddl_sql(f"{dw_schema}.link_{spec.name}", link_schema(spec))
 
 
 def link_stage_df(

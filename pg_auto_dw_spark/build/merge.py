@@ -225,8 +225,8 @@ def _files_containing_keys(
     wh: Warehouse, table: str, key_col: str, keys: list, bucket_of=None
 ) -> tuple[list[str], list[str]]:
     """Split live files into (maybe-affected, provably-clean) using
-    parquet footer min/max on ``key_col`` against the sorted key list.
-    Files without usable numeric stats count as affected (never skip
+    ``Warehouse.file_ranges`` on ``key_col`` against the sorted key
+    list. Files without a footer range count as affected (never skip
     blind). One footer read per file -- metadata-sized.
 
     ``bucket_of``: when the table's (single) partition column is a
@@ -240,9 +240,7 @@ def _files_containing_keys(
     dir (a bucket_of/layout mismatch), pruning for those keys is
     abandoned and they are range-checked against every file -- a
     deletion must never silently skip a victim."""
-    import pyarrow.parquet as pq
-
-    live = wh.path(table)
+    ranges = wh.file_ranges(table, key_col)
     pcols = wh._partitioning.get(table, [])
     by_bucket: dict[str, list] | None = None
     if bucket_of is not None and len(pcols) == 1:
@@ -250,9 +248,7 @@ def _files_containing_keys(
         for k in keys:
             by_bucket.setdefault(_bucket_key(bucket_of(k)), []).append(k)
         seen_dirs = {
-            d
-            for rel in wh.data_files(table)
-            if (d := _partition_value(rel, pcols[0])) is not None
+            d for rel in ranges if (d := _partition_value(rel, pcols[0])) is not None
         }
         orphans = sorted(
             {k for b, ks in by_bucket.items() if b not in seen_dirs for k in ks}
@@ -268,34 +264,18 @@ def _files_containing_keys(
             }
     affected: list[str] = []
     clean: list[str] = []
-    for rel in wh.data_files(table):
+    for rel, rng in ranges.items():
         cand = keys
         if by_bucket is not None:
             d = _partition_value(rel, pcols[0])
             # a data file outside any partition dir is checked against
             # every key (never prune on absent layout information)
             cand = keys if d is None else by_bucket.get(d, [])
-            if not cand:
-                clean.append(rel)
-                continue
-        hit = True
-        try:
-            md = pq.ParquetFile(os.path.join(live, rel)).metadata
-            j = md.schema.names.index(key_col)
-            fmn = fmx = None
-            for i in range(md.num_row_groups):
-                st = md.row_group(i).column(j).statistics
-                if st is None or not st.has_min_max:
-                    fmn = fmx = None
-                    break
-                fmn = st.min if fmn is None else min(fmn, st.min)
-                fmx = st.max if fmx is None else max(fmx, st.max)
-            if isinstance(fmn, (int, float)) and isinstance(fmx, (int, float)):
-                # any candidate key inside [fmn, fmx]?
-                i = bisect.bisect_left(cand, fmn)
-                hit = i < len(cand) and cand[i] <= fmx
-        except (OSError, ValueError, KeyError):
-            hit = True
+        hit = bool(cand)
+        if hit and rng is not None:
+            # any candidate key inside [min, max]?
+            i = bisect.bisect_left(cand, rng[0])
+            hit = i < len(cand) and cand[i] <= rng[1]
         (affected if hit else clean).append(rel)
     return affected, clean
 

@@ -60,44 +60,6 @@ from ..warehouse import Warehouse
 SCD2_META = ("valid_from", "valid_to", "current_flag", "deleted_flag")
 
 
-def _file_key_ranges(live_dir: str, bucket_dirs: list[str], key_col: str):
-    """Per-file (min, max) of ``key_col`` from parquet footer stats for
-    every data file under the given partition dirs -- metadata-sized
-    work (one footer read per file). Returns
-    ``{rel_path: (min, max) | None}``; None = stats unavailable
-    (never prune that file)."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, tuple | None] = {}
-    for bd in bucket_dirs:
-        pdir = os.path.join(live_dir, bd)
-        if not os.path.isdir(pdir):
-            continue
-        for fn in sorted(os.listdir(pdir)):
-            if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
-                continue
-            rel = os.path.join(bd, fn)
-            try:
-                md = pq.ParquetFile(os.path.join(pdir, fn)).metadata
-                names = md.schema.names
-                j = names.index(key_col)
-                lo = hi = None
-                for i in range(md.num_row_groups):
-                    st = md.row_group(i).column(j).statistics
-                    if st is None or not st.has_min_max:
-                        lo = hi = None
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                # only numeric stats are safe to compare (string footer
-                # stats may be truncated bounds)
-                ok = isinstance(lo, (int, float)) and isinstance(hi, (int, float))
-                out[rel] = (lo, hi) if ok else None
-            except (OSError, ValueError, KeyError):
-                out[rel] = None
-    return out
-
-
 def with_bucket(
     df: DataFrame,
     key_cols: list[str],
@@ -147,26 +109,23 @@ def _plan_file_pruning(
     bucket_col: str,
 ) -> tuple[list[str], int] | None:
     """File-granularity pruning plan: intersect each touched-partition
-    file's footer key range with the batch's per-bucket key range
-    (``branges``, already collected alongside the touched-bucket set --
-    driver-side state bounded by n_buckets + file count of touched
-    partitions). Returns (files_to_read_and_rewrite, n_files_seen), or
-    None when the key isn't numeric-orderable (string footer stats can
-    be truncated bounds -- never prune on them)."""
+    file's footer key range (``Warehouse.file_ranges``) with the
+    batch's per-bucket key range (``branges``, already collected
+    alongside the touched-bucket set -- driver-side state bounded by
+    n_buckets + file count of touched partitions). Returns
+    (files_to_read_and_rewrite, n_files_seen), or None when the key
+    isn't numeric-orderable (string footer stats can be truncated
+    bounds -- never prune on them)."""
     for lo, hi in branges.values():
         if not isinstance(lo, (int, float)) or not isinstance(hi, (int, float)):
             return None
-    live = wh.path(table)
-    bucket_dirs = [f"{bucket_col}={int(b)}" for b in branges]
-    franges = _file_key_ranges(live, bucket_dirs, key_col)
+    bucket_dirs = {f"{bucket_col}={int(b)}": b for b in branges}
+    franges = wh.file_ranges(table, key_col, dirs=list(bucket_dirs))
     kept = []
     for rel, rng in franges.items():
-        b = int(rel.split("=", 1)[1].split(os.sep, 1)[0])
-        lo_hi = branges.get(b)
-        if rng is None or lo_hi is None:
-            kept.append(rel)  # no stats / stray file: must read it
-        elif not (rng[1] < lo_hi[0] or rng[0] > lo_hi[1]):
-            kept.append(rel)  # key range intersects the batch
+        lo, hi = branges[bucket_dirs[os.path.dirname(rel)]]
+        if rng is None or (rng[0] <= hi and rng[1] >= lo):
+            kept.append(rel)  # no stats, or key range intersects the batch
     return kept, len(franges)
 
 

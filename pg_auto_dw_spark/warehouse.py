@@ -3,32 +3,43 @@
 The reference materializes everything as Postgres tables in the
 ``auto_dw`` schema (reference: utility/sql/info_tables.sql). Delta Lake
 is not available in this environment, so the warehouse manages plain
-parquet directories with three write modes that cover every sink the
-reference uses (SURVEY.md S5-S9):
+parquet directories. Every write verb is defined once (``_WriteVerbs``)
+as two parts: what a fresh generation dir (``<table>__gen-<id>``)
+starts from, and a ``write(gen) -> rows`` closure that lands the new
+rows in it (SURVEY.md S5-S9):
 
-- ``append``      -> INSERT...SELECT sinks (S7). Hub/sat loads are made
-                     idempotent *structurally* (anti-join before append,
-                     reference: dv_loader.rs:177-181,339-346), so append
-                     alone never duplicates.
-- ``overwrite``   -> the SCD2 UPDATE sinks (S8). Metadata tables are
-                     catalog-sized (rows = number of source columns), so
-                     a full rewrite per merge is cheap; atomicity comes
-                     from generation-dir + pointer-file commit (below).
-- ``overwrite_rows`` -> the same full rewrite for a table the driver
-                     merged itself (the catalog SCD2 crawl): rows it
-                     already holds, committed as ONE parquet file.
-- ``create``      -> DDL sink (S6) with an explicit StructType.
+  verb                  starts from            write(gen)
+  append                live files, linked*    Spark append
+  append_rows           live files, linked*    one driver-written file
+  overwrite             empty                  Spark write
+  overwrite_rows        empty                  one driver-written file
+  overwrite_partitions  live files, linked     dynamic partition overwrite
+  replace_files         live minus drop_files  Spark write, moved in
 
-Crash safety: ``overwrite`` never renames the live directory. It writes
-a fresh generation dir (``<table>__gen-<id>``), then commits by
-atomically ``os.replace``-ing a pointer file (``<table>.live``) that
-names the live generation -- the single-transaction stand-in for the
-reference's one-script SCD2 merge (reference:
-controller/dv_loader.rs:59-64). A crash before the pointer swap leaves
-the old generation live; a crash after it leaves the new one live; in
-neither window is the table missing or half-renamed. Orphan
-generations and legacy ``.staging-*``/``.old-*`` dirs are garbage-
-collected on ``Warehouse`` init.
+  * at ``retain_generations == 1`` an append writes in place instead:
+    no generation, no lock.
+
+``append``/``append_rows`` are the INSERT...SELECT sinks (S7): hub/sat
+loads are idempotent *structurally* (anti-join before append,
+reference: dv_loader.rs:177-181,339-346). The overwrites are the SCD2
+UPDATE sinks (S8); ``create_table`` is the DDL sink (S6). A 0-row
+append leaves no generation and no commit-log entry.
+
+Commit: ``Warehouse`` makes a generation live under the table lock by
+atomically ``os.replace``-ing a pointer file (``<table>.live``) -- the
+single-transaction stand-in for the reference's one-script SCD2 merge
+(reference: controller/dv_loader.rs:59-64). A crash before the pointer
+swap leaves the old generation live; a crash after it leaves the new
+one live; in neither window is the table missing or half-renamed.
+Inside ``Warehouse.transaction`` the same verbs stage their
+generations (a later write to the same table builds on, or for an
+overwrite replaces, the staged one) and one journal commits them all.
+Orphan generations and legacy ``.staging-*``/``.old-*`` dirs are
+garbage-collected on ``Warehouse`` init.
+
+Reads: ``read``/``read_files``/``read_version`` scan with the
+registered schema; ``file_ranges`` is the one parquet-footer min/max
+scan that file pruning (``prune_files``, the merge verbs) rests on.
 
 Scale posture: data-plane tables (hubs/satellites) are written with
 ``partitionBy`` when a partition spec is registered -- at 100 TB you
@@ -50,7 +61,99 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-class Warehouse:
+class _WriteVerbs:
+    """The write verbs, each defined once: what the fresh generation
+    starts from (``carry``: None starts it empty; a set hardlinks the
+    base's files in, minus the relative paths the set names) and the
+    ``write(gen) -> rows`` closure that lands the new rows. The
+    subclass's ``_write`` decides what happens to the generation:
+    ``Warehouse`` commits it, ``_Transaction`` stages it."""
+
+    def append(self, name: str, df: DataFrame) -> int:
+        """INSERT...SELECT sink; returns the rows appended. The count is
+        an ``Observation`` on the written frame, so it rides the write
+        job itself -- callers never need a separate count (or the
+        persist that would make one cheap).
+
+        With the default retention (1) this is an in-place parquet
+        append -- the cheap hot path for hub/sat loads. Under
+        ``retain_generations > 1`` (and in a transaction) the append is
+        copy-on-write: the live files hardlink into a fresh generation
+        and the rows append there, so every retained snapshot stays
+        immutable (an in-place append would leak new files into the
+        generation dir an older version still names).
+
+        A 0-row append leaves no trace: the zero-row part file Spark
+        writes for an empty write is removed, and no generation or
+        commit-log entry is made."""
+        return self._write(
+            name, "append", self._wh._frame_write(name, df), frozenset(), in_place=True
+        )
+
+    def append_rows(self, name: str, rows: list[tuple]) -> int:
+        """Append rows the driver already holds (log lines, classifier
+        responses, a build's DVSchema) as ONE parquet file written on
+        the driver -- no Spark job. Values convert exactly as
+        ``createDataFrame(rows, schema)`` converts them: timestamps go
+        through ``TimestampType.toInternal``, so naive datetimes are
+        read in the driver's local time zone. Same rules as ``append``;
+        needs a registered schema and an unpartitioned table. Returns
+        ``len(rows)``."""
+        return self._write(
+            name, "append", self._wh._rows_write(name, rows), frozenset(), in_place=True
+        )
+
+    def overwrite(self, name: str, df: DataFrame) -> None:
+        """Crash-safe full rewrite into an empty generation. A direct
+        overwrite of the directory being read would corrupt the
+        self-referential merges (read current -> compute -> rewrite),
+        so the new generation is always written beside the live one;
+        the table is readable (old or new, never neither) at every
+        instant. Callers that read-modify-write should hold
+        ``wh.lock(name)`` around the whole cycle -- the nested
+        acquisition is reentrant."""
+        self._write(name, "overwrite", self._wh._frame_write(name, df))
+
+    def overwrite_rows(self, name: str, rows: list[tuple]) -> None:
+        """``overwrite`` for rows the driver already holds: they land as
+        ONE parquet file written on the driver (no Spark job, values
+        converted as ``append_rows`` converts them)."""
+        self._write(name, "overwrite", self._wh._rows_write(name, rows))
+
+    def overwrite_partitions(self, name: str, df: DataFrame) -> None:
+        """Partition-pruned rewrite: replace ONLY the partitions whose
+        values appear in ``df`` (Spark dynamic partition overwrite);
+        every other partition keeps its existing parquet files (shared
+        by hardlink, byte-identical) -- the write path for data-scale
+        incremental merges, where a full rewrite would rewrite 100 TB to
+        change one load date. The overwrite runs against the
+        copy-on-write generation, so a crash leaves either the old or
+        the new state fully live -- never a half-replaced partition.
+
+        Requires a registered partition spec. Because the write lands
+        in a fresh generation dir, ``df`` may freely derive from this
+        same table (no self-overwrite lineage conflict). At extreme
+        file counts the per-merge linking cost is the knob an ACID
+        table format (MERGE INTO over Delta/Iceberg manifests) replaces
+        -- see SCALE.md."""
+        write = self._wh._partitions_write(name, df)
+        self._write(name, "overwrite_partitions", write, frozenset())
+
+    def replace_files(self, name: str, df: DataFrame, drop_files: list[str]) -> None:
+        """File-granular copy-on-write replacement: the generation links
+        every live file EXCEPT ``drop_files`` (paths relative to the
+        live dir), and ``df`` (written with the table's partition spec)
+        lands in it. Commit semantics are ``overwrite_partitions``'s,
+        but the rewrite granularity is FILES: a merge that read only
+        the files whose key range intersects its batch rewrites only
+        those (the write-amplification knob at 100 TB; an ACID table
+        format's MERGE INTO replaces exactly this, see SCALE.md)."""
+        write = self._wh._files_write(name, df)
+        drop = frozenset(os.path.normpath(p) for p in drop_files)
+        self._write(name, "replace_files", write, drop)
+
+
+class Warehouse(_WriteVerbs):
     """A directory of named parquet tables with a recorded schema."""
 
     def __init__(
@@ -617,17 +720,15 @@ class Warehouse:
         self._save_meta()
 
     # -- reads ----------------------------------------------------------
-    def read(self, name: str) -> DataFrame:
-        if name in self._schemas:
-            return self.spark.read.schema(self._add_partition_fields(name)).parquet(
-                self.path(name)
-            )
-        return self.spark.read.parquet(self.path(name))
+    def _reader(self, name: str):
+        """A parquet reader carrying ``name``'s registered schema, if
+        any: partitionBy moves partition cols into directory names, and
+        the full schema keeps types stable even for an empty table."""
+        reader = self.spark.read
+        return reader.schema(self._schemas[name]) if name in self._schemas else reader
 
-    def _add_partition_fields(self, name: str) -> T.StructType:
-        # partitionBy moves partition cols into directory names; supplying
-        # the full schema keeps types stable even for an empty table.
-        return self._schemas[name]
+    def read(self, name: str) -> DataFrame:
+        return self._reader(name).parquet(self.path(name))
 
     def read_files(self, name: str, rel_paths: list[str]) -> DataFrame:
         """Read a specific subset of a partitioned table's data files
@@ -635,9 +736,7 @@ class Warehouse:
         columns derived from the directory names, so the frame has the
         same schema as ``read`` -- the scan just lists fewer files."""
         live = self.path(name)
-        reader = self.spark.read.option("basePath", live)
-        if name in self._schemas:
-            reader = reader.schema(self._add_partition_fields(name))
+        reader = self._reader(name).option("basePath", live)
         return reader.parquet(*[os.path.join(live, p) for p in rel_paths])
 
     # -- time travel ----------------------------------------------------
@@ -693,10 +792,7 @@ class Warehouse:
         committed at ``version``. The generation dir must still be
         retained -- raise (never silently read the wrong data) if the
         retention window has GCed it."""
-        d = self._version_dir(name, version)
-        if name in self._schemas:
-            return self.spark.read.schema(self._add_partition_fields(name)).parquet(d)
-        return self.spark.read.parquet(d)
+        return self._reader(name).parquet(self._version_dir(name, version))
 
     def vacuum(self, name: str, retain: int | None = None) -> dict:
         """Delta VACUUM analog: reap retained generations beyond
@@ -734,64 +830,49 @@ class Warehouse:
             self._commit_generation(name, d, action=f"rollback(to={version})")
 
     # -- writes ---------------------------------------------------------
-    def append(self, name: str, df: DataFrame) -> int:
-        """INSERT...SELECT sink; returns the rows appended. The count is
-        an ``Observation`` on the written frame, so it rides the write
-        job itself -- callers never need a separate count (or the
-        persist that would make one cheap).
+    # The verbs live in ``_WriteVerbs``; this is how a direct write
+    # stages and commits one generation, and the write closures.
+    @property
+    def _wh(self) -> Warehouse:
+        return self
 
-        With the default retention (1) this is an in-place parquet
-        append -- the cheap hot path for hub/sat loads. Under
-        ``retain_generations > 1`` the append becomes a copy-on-write
-        commit (hardlink live files into a fresh generation, append
-        there, pointer-swap) so that every retained snapshot stays
-        immutable -- an in-place append would leak new files into the
-        generation dir an older version still names.
-
-        A 0-row append into an existing table leaves no trace: the
-        zero-row part file Spark writes for an empty write is removed,
-        and no generation or commit-log entry is made."""
-        return self._append(name, self._frame_write(name, df))
-
-    def append_rows(self, name: str, rows: list[tuple]) -> int:
-        """Append rows the driver already holds (log lines, classifier
-        responses, a build's DVSchema) as ONE parquet file written on
-        the driver -- no Spark job. Values convert exactly as
-        ``createDataFrame(rows, schema)`` converts them: timestamps go
-        through ``TimestampType.toInternal``, so naive datetimes are
-        read in the driver's local time zone. Same lock, copy-on-write
-        and transaction rules as ``append``; needs a registered schema
-        and an unpartitioned table. Returns ``len(rows)``."""
-        return self._append(name, self._rows_write(name, rows))
-
-    def _append(self, name: str, write) -> int:
-        if self.retain_generations == 1:
+    def _write(self, name, action, write, carry=None, in_place=False):
+        """Stage a generation and commit it under the table lock; an
+        in-place verb at ``retain_generations == 1`` writes straight
+        into the live dir instead (no lock, no generation). The lock
+        spans write + commit, so concurrent writers serialize and
+        init-time GC in another process never reaps the generation
+        mid-write."""
+        if in_place and self.retain_generations == 1:
             return write(self.path(name))
         with self.lock(name):
-            gen, n = self._append_generation(name, self.path(name), write)
+            gen, n = self._stage(name, self.path(name), write, carry)
             if gen is not None:
-                self._commit_generation(name, gen, action="append")
+                self._commit_generation(name, gen, action)
         return n
 
-    def _append_generation(self, name: str, base: str, write) -> tuple[str | None, int]:
-        """Copy-on-write append: hardlink ``base`` into a fresh
-        generation and ``write`` the new rows there. Returns
-        (generation, rows appended); the generation is None -- and
-        removed again -- when a 0-row write would only copy ``base``."""
+    def _stage(self, name: str, base: str, write, carry) -> tuple[str | None, int]:
+        """Mint a fresh generation, start it from ``base`` as ``carry``
+        says (see ``_WriteVerbs``) and ``write`` into it. Returns
+        (generation, rows written); the generation is None -- and
+        removed again -- when a counted write added no rows to a linked
+        copy, which is then just ``base``. Only the appends count rows
+        into a linked copy; the partition verbs return None."""
         gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-        existed = os.path.isdir(base)
-        if existed:
-            self._link_tree(base, gen)
+        linked = carry is not None and os.path.isdir(base)
+        if linked:
+            self._link_tree(base, gen, carry)
         else:
             os.makedirs(gen, exist_ok=True)
         n = write(gen)
-        if n == 0 and existed:
+        if n == 0 and linked:
             shutil.rmtree(gen, ignore_errors=True)
             return None, 0
         return gen, n
 
     def _frame_write(self, name: str, df: DataFrame):
-        """``write(target) -> rows`` for a Spark append of ``df``."""
+        """``write(target) -> rows`` adding ``df``'s rows to ``target``
+        (an empty generation, for ``overwrite``) in one Spark job."""
         obs = Observation()
         writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append")
         if name in self._partitioning:
@@ -820,6 +901,39 @@ class Warehouse:
 
         return write
 
+    def _partition_writer(self, name: str, df: DataFrame, verb: str):
+        if name not in self._partitioning:
+            raise ValueError(
+                f"table {name} has no partition spec; {verb} requires one "
+                "(register it via create_table(partition_by=...))"
+            )
+        return df.write.mode("overwrite").partitionBy(*self._partitioning[name])
+
+    def _partitions_write(self, name: str, df: DataFrame):
+        """``write(gen)`` replacing the partitions ``df`` has rows in."""
+        writer = self._partition_writer(name, df, "overwrite_partitions").option(
+            "partitionOverwriteMode", "dynamic"
+        )
+        return writer.parquet
+
+    def _files_write(self, name: str, df: DataFrame):
+        """``write(gen)`` landing ``df`` next to the files already in
+        ``gen``: written through a ``_staging`` subdir (underscore-
+        hidden from every scan), then its data files move into their
+        partition dirs."""
+        writer = self._partition_writer(name, df, "replace_files")
+
+        def write(gen: str) -> None:
+            staging = os.path.join(gen, "_staging")
+            writer.parquet(staging)
+            for rel in _data_files(staging):
+                target = os.path.join(gen, rel)
+                os.makedirs(os.path.dirname(target), exist_ok=True)
+                os.replace(os.path.join(staging, rel), target)
+            shutil.rmtree(staging, ignore_errors=True)
+
+        return write
+
     def _driver_schema(self, name: str) -> T.StructType:
         """Schema of a table the driver reads or writes as Arrow."""
         if name not in self._schemas or name in self._partitioning:
@@ -828,163 +942,26 @@ class Warehouse:
             )
         return self._schemas[name]
 
-    def _link_tree(self, src: str, dst: str) -> None:
+    def _link_tree(self, src: str, dst: str, skip=frozenset()) -> None:
         """Hardlink every file under ``src`` into ``dst`` preserving the
-        directory layout. Parquet files are immutable once written, so
-        sharing inodes between generations is safe; linking is O(file
-        count) metadata ops, never a data copy. Falls back to copy2 on
-        filesystems without hardlinks (cross-device, some network FS)."""
+        directory layout, except the relative paths in ``skip``. Parquet
+        files are immutable once written, so sharing inodes between
+        generations is safe; linking is O(file count) metadata ops,
+        never a data copy. Falls back to copy2 on filesystems without
+        hardlinks (cross-device, some network FS)."""
         for walk_root, _dirs, files in os.walk(src):
-            rel = os.path.relpath(walk_root, src)
-            target = dst if rel == "." else os.path.join(dst, rel)
+            rel_dir = os.path.relpath(walk_root, src)
+            target = os.path.normpath(os.path.join(dst, rel_dir))
             os.makedirs(target, exist_ok=True)
             for fn in files:
+                if os.path.normpath(os.path.join(rel_dir, fn)) in skip:
+                    continue
                 s = os.path.join(walk_root, fn)
                 d = os.path.join(target, fn)
                 try:
                     os.link(s, d)
                 except OSError:
                     shutil.copy2(s, d)
-
-    def overwrite_partitions(self, name: str, df: DataFrame) -> None:
-        """Partition-pruned rewrite: replace ONLY the partitions whose
-        values appear in ``df`` (Spark dynamic partition overwrite);
-        every other partition keeps its existing parquet files (shared
-        by hardlink, so untouched files stay byte-identical) -- the
-        write path for data-scale incremental merges, where a full
-        generation rewrite (``overwrite``) would rewrite 100 TB to
-        change one load date.
-
-        Crash safety matches ``overwrite``: the dynamic overwrite runs
-        against a copy-on-write generation dir (untouched partitions
-        hardlinked in, O(file count) metadata ops, no data copied), and
-        the atomic pointer replace is the commit point. A crash at any
-        instant leaves either the old or the new generation fully live
-        -- never a half-replaced partition -- so rows of keys absent
-        from the batch can never be lost.
-
-        Requires a registered partition spec. Because the write lands
-        in a fresh generation dir, ``df`` may freely derive from this
-        same table (no self-overwrite lineage conflict), though callers
-        typically still pin with ``localCheckpoint`` to avoid
-        recomputing the merge. At extreme file counts the per-merge
-        linking cost is the knob an ACID table format (MERGE INTO over
-        Delta/Iceberg manifests) replaces -- see SCALE.md.
-        """
-        if name not in self._partitioning:
-            raise ValueError(
-                f"table {name} has no partition spec; overwrite_partitions "
-                "requires one (register it via create_table(partition_by=...))"
-            )
-        with self.lock(name):
-            live = self.path(name)
-            gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-            if os.path.isdir(live):
-                self._link_tree(live, gen)
-            else:
-                os.makedirs(gen, exist_ok=True)
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*self._partitioning[name])
-                .parquet(gen)
-            )
-            self._commit_generation(name, gen, action="overwrite_partitions")
-
-    def replace_files(self, name: str, df: DataFrame, drop_files: list[str]) -> None:
-        """File-granular copy-on-write replacement: build a new
-        generation hardlinking every live file EXCEPT ``drop_files``
-        (paths relative to the live dir), land ``df`` (written with the
-        table's partition spec) into the generation, then pointer-
-        commit. Commit semantics are identical to ``overwrite``/
-        ``overwrite_partitions`` -- one atomic pointer replace, either
-        the old or the new state fully live -- but the rewrite
-        granularity is FILES, not partitions: when a bucket partition
-        is large, a merge that read only the files whose key range
-        intersects its batch rewrites only those (the write-
-        amplification knob at 100 TB; an ACID table format's MERGE
-        INTO replaces exactly this, see SCALE.md).
-
-        ``df`` is written through a ``_staging`` subdir inside the
-        generation (underscore-hidden from every scan) and its data
-        files are then moved into their partition dirs -- a crash at
-        any point before the pointer swap leaves an orphan generation
-        that init-time GC reaps."""
-        if name not in self._partitioning:
-            raise ValueError(
-                f"table {name} has no partition spec; replace_files requires one"
-            )
-        with self.lock(name):
-            live = self.path(name)
-            gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-            drop = {os.path.normpath(p) for p in drop_files}
-            for walk_root, _dirs, files in os.walk(live):
-                rel_dir = os.path.relpath(walk_root, live)
-                target = gen if rel_dir == "." else os.path.join(gen, rel_dir)
-                os.makedirs(target, exist_ok=True)
-                for fn in files:
-                    rel = os.path.normpath(fn if rel_dir == "." else os.path.join(rel_dir, fn))
-                    if rel in drop:
-                        continue
-                    s = os.path.join(walk_root, fn)
-                    d = os.path.join(target, fn)
-                    try:
-                        os.link(s, d)
-                    except OSError:
-                        shutil.copy2(s, d)
-            staging = os.path.join(gen, "_staging")
-            (
-                df.write.mode("overwrite")
-                .partitionBy(*self._partitioning[name])
-                .parquet(staging)
-            )
-            for walk_root, _dirs, files in os.walk(staging):
-                rel_dir = os.path.relpath(walk_root, staging)
-                if rel_dir == ".":
-                    continue  # root holds only _SUCCESS
-                target = os.path.join(gen, rel_dir)
-                os.makedirs(target, exist_ok=True)
-                for fn in files:
-                    if fn.startswith(("_", ".")):
-                        continue
-                    os.replace(os.path.join(walk_root, fn), os.path.join(target, fn))
-            shutil.rmtree(staging, ignore_errors=True)
-            self._commit_generation(name, gen, action="replace_files")
-
-    def overwrite(self, name: str, df: DataFrame) -> None:
-        """Crash-safe full rewrite: write a new generation dir, then
-        commit it with one atomic pointer replace.
-
-        A direct overwrite of the directory being read would corrupt the
-        self-referential merges (read current -> compute -> rewrite), so
-        the new generation is always written beside the live one; the
-        table is readable (old or new, never neither) at every instant.
-
-        The per-table lock spans write+commit, so concurrent writers
-        serialize (and init-time GC in another process can never reap
-        this generation mid-write). Callers that read-modify-write
-        should hold ``wh.lock(name)`` around the whole cycle -- the
-        nested acquisition here is reentrant.
-        """
-        with self.lock(name):
-            gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-            writer = df.write.mode("overwrite")
-            if name in self._partitioning:
-                writer = writer.partitionBy(*self._partitioning[name])
-            writer.parquet(gen)
-            self._commit_generation(name, gen)
-
-    def overwrite_rows(self, name: str, rows: list[tuple]) -> None:
-        """``overwrite`` for rows the driver already holds: they land as
-        ONE parquet file written on the driver (no Spark job, values
-        converted as ``append_rows`` converts them) in a fresh
-        generation, committed under the same lock and pointer swap."""
-        write = self._rows_write(name, rows)
-        with self.lock(name):
-            gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-            os.makedirs(gen)
-            write(gen)
-            self._commit_generation(name, gen)
 
     def read_arrow(self, name: str):
         """The live table as one Arrow table of its registered schema,
@@ -1012,7 +989,7 @@ class Warehouse:
     # -- footer reads ---------------------------------------------------
     # Table-level numbers the parquet footers already hold, read on the
     # driver: metadata-sized work, no Spark job (the same kind of read
-    # ``prune_files`` does).
+    # ``file_ranges`` does).
     def _footers(self, name: str):
         live = self.path(name)
         for rel in self.data_files(name):
@@ -1052,44 +1029,45 @@ class Warehouse:
                 )
         return best
 
-    def prune_files(self, name: str, ranges: dict[str, tuple]) -> list[str]:
-        """Data-skipping file list: the live files whose parquet footer
-        min/max for EVERY column in ``ranges`` intersects the given
-        [lo, hi] (inclusive). Files without usable numeric stats are
-        kept (never prune blind). Metadata-sized work -- one footer
-        read per file; this is the manifest-stats pruning an ACID
-        format does from its metadata layer, and it composes with
-        ``compact(cluster_by=...)``: a z-ordered table yields tight
-        per-file boxes, so multi-column predicates skip most files."""
+    def file_ranges(
+        self, name: str, column: str, dirs: list[str] | None = None
+    ) -> dict[str, tuple | None]:
+        """Per live data file (path relative to the live dir), the
+        (min, max) of ``column`` over all its row groups from the
+        parquet footer -- or None when the file cannot be pruned on it:
+        the footer is unreadable, the column is absent, a row group
+        lacks min/max, or the stats are not numeric (string stats may
+        be truncated bounds). ``dirs`` restricts the scan to files
+        directly under those relative dirs (e.g. ``["b=3"]``). One
+        footer read per file, no Spark job: the per-file stats an ACID
+        format keeps in its manifests, and the one footer scan every
+        pruning path (``prune_files``, the merge verbs) rests on."""
         live = self.path(name)
-        keep: list[str] = []
-        for rel in self.data_files(name):
-            ok = True
-            try:
-                md = pq.ParquetFile(os.path.join(live, rel)).metadata
-                names = md.schema.names
-                for col, (lo, hi) in ranges.items():
-                    j = names.index(col)
-                    fmn = fmx = None
-                    for i in range(md.num_row_groups):
-                        st = md.row_group(i).column(j).statistics
-                        if st is None or not st.has_min_max:
-                            fmn = fmx = None
-                            break
-                        fmn = st.min if fmn is None else min(fmn, st.min)
-                        fmx = st.max if fmx is None else max(fmx, st.max)
-                    if not isinstance(fmn, (int, float)) or not isinstance(
-                        fmx, (int, float)
-                    ):
-                        continue  # no stats -> cannot prune on this column
-                    if fmx < lo or fmn > hi:
-                        ok = False
-                        break
-            except (OSError, ValueError, KeyError):
-                ok = True
-            if ok:
-                keep.append(rel)
-        return keep
+        dirs = None if dirs is None else {os.path.normpath(d) for d in dirs}
+        return {
+            rel: _footer_range(os.path.join(live, rel), column)
+            for rel in self.data_files(name)
+            if dirs is None or os.path.dirname(rel) in dirs
+        }
+
+    def prune_files(self, name: str, ranges: dict[str, tuple]) -> list[str]:
+        """Data-skipping file list: the live files whose ``file_ranges``
+        for EVERY column in ``ranges`` intersect the given [lo, hi]
+        (inclusive); a file without a range on a column cannot be
+        pruned on it (never prune blind). This is the manifest-stats
+        pruning an ACID format does from its metadata layer, and it
+        composes with ``compact(cluster_by=...)``: a z-ordered table
+        yields tight per-file boxes, so multi-column predicates skip
+        most files."""
+        per_col = [(self.file_ranges(name, c), lo, hi) for c, (lo, hi) in ranges.items()]
+        return [
+            rel
+            for rel in self.data_files(name)
+            if all(
+                (r := fr.get(rel)) is None or (r[0] <= hi and r[1] >= lo)
+                for fr, lo, hi in per_col
+            )
+        ]
 
     def read_pruned(self, name: str, ranges: dict[str, tuple]) -> DataFrame:
         """Read only the files ``prune_files`` keeps, then apply the
@@ -1227,92 +1205,34 @@ class Warehouse:
         }
 
 
-class _Transaction:
-    """Write surface inside ``Warehouse.transaction``: stages each
-    table's new generation without touching the live pointer; the
-    owning context manager journals + swaps on clean exit."""
+class _Transaction(_WriteVerbs):
+    """Write surface inside ``Warehouse.transaction``: the same verbs,
+    but each stages its generation without touching the live pointer;
+    the owning context manager journals + swaps on clean exit."""
 
     def __init__(self, wh: Warehouse, names: list[str]):
         self._wh = wh
         self._names = set(names)
         self._staged: dict[str, str] = {}
 
-    def _check(self, name: str) -> None:
+    def _write(self, name, action, write, carry=None, in_place=False):
+        """Stage ``name``'s generation. Writes within one transaction
+        COMPOSE: a linked write builds on the already-staged state, not
+        the pre-transaction live dir (append-after-append keeps both
+        batches; merge-after-append sees the appended rows), and an
+        overwrite replaces it. The superseded staged generation is
+        removed."""
         if name not in self._names:
             raise ValueError(
                 f"table {name} was not declared in transaction({sorted(self._names)})"
             )
-
-    def _fresh_gen(self, name: str) -> str:
-        return self._wh._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-
-    def _base_dir(self, name: str) -> str:
-        """Writes within one transaction COMPOSE: a second write to the
-        same table builds on the already-staged state, not the
-        pre-transaction live dir (append-after-append must keep both
-        batches; merge-after-append must see the appended rows)."""
-        return self._staged.get(name) or self._wh.path(name)
-
-    def _swap_staged(self, name: str, gen: str) -> None:
         old = self._staged.get(name)
-        if old is not None and old != gen:
-            shutil.rmtree(old, ignore_errors=True)
-        self._staged[name] = gen
-
-    def overwrite(self, name: str, df) -> None:
-        """Stage a full rewrite of ``name`` (commits on txn exit); any
-        earlier staged state of this table is replaced, as a full
-        overwrite semantically must."""
-        self._check(name)
-        gen = self._fresh_gen(name)
-        writer = df.write.mode("overwrite")
-        if name in self._wh._partitioning:
-            writer = writer.partitionBy(*self._wh._partitioning[name])
-        writer.parquet(gen)
-        self._swap_staged(name, gen)
-
-    def append(self, name: str, df) -> int:
-        """Stage an append (commits with the transaction): the current
-        staged-or-live files hardlink into a fresh generation, new rows
-        append there -- the INSERT...SELECT leg of a whole-load
-        transaction, so hub+sat appends and a dimension merge can land
-        atomically together (reference parity: the entire load script
-        in one transaction, dv_loader.rs:59-64). Returns the rows
-        appended; a 0-row append stages nothing."""
-        self._check(name)
-        return self._stage_append(name, self._wh._frame_write(name, df))
-
-    def append_rows(self, name: str, rows: list[tuple]) -> int:
-        """``Warehouse.append_rows`` staged into the transaction."""
-        self._check(name)
-        return self._stage_append(name, self._wh._rows_write(name, rows))
-
-    def _stage_append(self, name: str, write) -> int:
-        gen, n = self._wh._append_generation(name, self._base_dir(name), write)
+        gen, n = self._wh._stage(name, old or self._wh.path(name), write, carry)
         if gen is not None:
-            self._swap_staged(name, gen)
+            if old is not None:
+                shutil.rmtree(old, ignore_errors=True)
+            self._staged[name] = gen
         return n
-
-    def overwrite_partitions(self, name: str, df) -> None:
-        """Stage a partition-pruned rewrite (CoW hardlink + dynamic
-        overwrite, same shape as Warehouse.overwrite_partitions),
-        layered over any earlier staged state of this table."""
-        self._check(name)
-        if name not in self._wh._partitioning:
-            raise ValueError(f"table {name} has no partition spec")
-        gen = self._fresh_gen(name)
-        base = self._base_dir(name)
-        if os.path.isdir(base):
-            self._wh._link_tree(base, gen)
-        else:
-            os.makedirs(gen, exist_ok=True)
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*self._wh._partitioning[name])
-            .parquet(gen)
-        )
-        self._swap_staged(name, gen)
 
     def _commit(self) -> None:
         import json
@@ -1367,6 +1287,25 @@ def _data_files(root: str) -> dict[str, int]:
             rel = fn if rel_dir == "." else os.path.join(rel_dir, fn)
             out[rel] = os.path.getsize(os.path.join(walk_root, fn))
     return out
+
+
+def _footer_range(path: str, column: str) -> tuple | None:
+    """(min, max) of ``column`` over every row group of one parquet
+    file's footer; None unless every row group has numeric min/max."""
+    try:
+        md = pq.read_metadata(path)
+        j = md.schema.names.index(column)
+        lo = hi = None
+        for i in range(md.num_row_groups):
+            st = md.row_group(i).column(j).statistics
+            if st is None or not st.has_min_max:
+                return None
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+    except (OSError, ValueError, KeyError):
+        return None
+    numeric = isinstance(lo, (int, float)) and isinstance(hi, (int, float))
+    return (lo, hi) if numeric else None
 
 
 def _drop_empty_files(root: str, before: set[str]) -> None:

@@ -39,6 +39,14 @@ def test_contract_surface_exists():
         assert required <= params, f"{op} missing {required - params}"
 
 
+def test_contract_footer_stats_surface():
+    """A port also re-implements the one footer-stats read every file-
+    pruning path rests on: per-file (min, max) of a column, which a
+    table format's manifests already hold."""
+    params = set(inspect.signature(Warehouse.file_ranges).parameters)
+    assert {"name", "column", "dirs"} <= params
+
+
 def test_contract_semantics_roundtrip(spark, warehouse_dir):
     """The behavioral contract: registered partition spec survives
     reopen; append/overwrite/overwrite_partitions compose; reads see
