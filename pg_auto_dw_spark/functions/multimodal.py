@@ -1278,14 +1278,14 @@ def media_dup_clusters(
     the SemDeDup semantic pairs (``media_semantic_near_dup_pairs``;
     pass ``semantic_threshold=None`` for a perceptual-only, exactly
     SQL-replayable assignment), run through the shared
-    ``dedup.connected_components`` min-label propagation with every
+    ``dedup.connected_components`` clustering with every
     media row as a node -- so singletons get their own cluster and
     ``cluster_id`` is always the min member id, i.e. THE canonical.
     This is the media twin of ``corpus.cluster_assignments``; feed it
     to ``assemble_media_text_pairs`` so captions of deduped media
     follow their canonical. Scale shape: each pair family is the
-    capped pigeonhole/LSH generator it always was; CC state is one
-    narrow (id, label) table.
+    capped pigeonhole/LSH generator it always was; CC runs on the
+    driver while the pairs fit ``dedup.CC_DRIVER_EDGES``.
 
     ``media_types`` restricts which pair families run: each family
     kernel is an eagerly-checkpointed Arrow pass over the whole frame

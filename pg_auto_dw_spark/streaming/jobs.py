@@ -1444,8 +1444,9 @@ def _collapse_within(within: DataFrame, signed_ids: DataFrame, id_col: str):
     """Verified within-batch pairs -> (canonical ids, cluster members
     with their ``cluster_id`` or None, member count): connected
     components, min-id canonical per cluster. The common batch has no
-    within-dups and skips the CC rounds entirely (they cost ~2 jobs
-    per round even on an empty edge set)."""
+    within-dups and skips clustering entirely: the ``isEmpty`` probe is
+    one job, while clustering an empty edge set still reads it, pins
+    the members and counts them."""
     from ..functions.dedup import connected_components
 
     if within.isEmpty():

@@ -968,7 +968,9 @@ class Warehouse(_WriteVerbs):
         read on the driver -- for metadata-sized, unpartitioned tables.
         Spark writes timestamps as INT96, which Arrow reads as naive
         values that ARE the UTC instant: they are labelled UTC, never
-        shifted, so they match what ``append_rows`` writes."""
+        shifted, so they match what ``append_rows`` writes. The result
+        is one chunk: ``createDataFrame`` drops the rows after an empty
+        chunk, and ``create_table``'s zero-row part file makes one."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -979,7 +981,7 @@ class Warehouse(_WriteVerbs):
             t = pq.read_table(os.path.join(live, rel), coerce_int96_timestamp_unit="us")
             cols = [t.column(f.name).cast(f.type) for f in schema]
             parts.append(pa.Table.from_arrays(cols, schema=schema))
-        return pa.concat_tables(parts)
+        return pa.concat_tables(parts).combine_chunks()
 
     def data_files(self, name: str) -> dict[str, int]:
         """Live data files (path relative to the live dir -> bytes);

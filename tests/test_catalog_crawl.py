@@ -37,14 +37,16 @@ def _snapshot(spark, tables):
 
 def _wait_for_listener(sc):
     """Job events reach the status store asynchronously, in order: once
-    a later job shows up, every earlier one has too."""
-    sc.setJobGroup("crawl-canary", "crawl-canary")
+    a later job shows up, every earlier one has too. Each call waits on
+    its own canary group, so a second call cannot see the first one's."""
+    group = f"canary-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
     try:
         sc.parallelize([1], 1).count()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     deadline = time.monotonic() + 30
-    while not sc.statusTracker().getJobIdsForGroup("crawl-canary"):
+    while not sc.statusTracker().getJobIdsForGroup(group):
         assert time.monotonic() < deadline, "canary job never reached the status store"
         time.sleep(0.05)
 

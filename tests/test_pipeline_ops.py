@@ -1,6 +1,7 @@
 """Training-data pipeline operators: pieces not fully covered by the
 oracle gate (near-pair generators, multimodal feature vectors)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pg_auto_dw_spark.functions.dedup import (
@@ -475,11 +476,15 @@ def test_global_row_number_both_paths(spark, sf_dir):
     assert global_row_number(df.filter(F.lit(False)), ["k"], "rn").count() == 0
 
 
-def test_connected_components_chain_clique_singleton(spark):
-    """Min-label clustering: a 40-node chain (worst case for plain
-    propagation -- pointer jumping must converge it within the round
-    budget), a clique, and singletons from the node set."""
+@pytest.mark.parametrize("bound", [0, 10**9], ids=["spark", "driver"])
+def test_connected_components_chain_clique_singleton(spark, monkeypatch, bound):
+    """Min-label clustering in both regimes: a 40-node chain (worst case
+    for plain propagation -- pointer jumping must converge it within the
+    round budget), a clique, and singletons from the node set."""
+    from pg_auto_dw_spark.functions import dedup
     from pg_auto_dw_spark.functions.dedup import connected_components
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_EDGES", bound)
 
     chain = [(i, i + 1) for i in range(100, 140)]          # component min 100
     clique = [(a, b) for a in range(200, 205) for b in range(a + 1, 205)]
@@ -506,6 +511,8 @@ def test_connected_components_raises_at_round_cap(spark, monkeypatch):
     import pytest
 
     from pg_auto_dw_spark.functions import dedup
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_EDGES", 0)
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(4)], "id_a: bigint, id_b: bigint"

@@ -100,3 +100,22 @@ def test_maybe_compact_triggers_on_small_file_pressure(spark, warehouse_dir):
     assert after["small_files"] <= 16
     # data intact through the rewrite
     assert wh.read("m.t").count() == 2100
+
+
+def test_read_arrow_hands_spark_every_row(spark, warehouse_dir):
+    """``createDataFrame`` drops an Arrow table's rows after an empty
+    chunk, and a created table holds a zero-row part file, so
+    ``read_arrow`` must return one chunk."""
+    import pyarrow.parquet as pq
+
+    wh = Warehouse(spark, warehouse_dir)
+    wh.create_table("c.r", SCHEMA)
+    wh.append_rows("c.r", [(1, "a", 0), (2, "b", 0)])
+    wh.append_rows("c.r", [(3, "c", 1)])
+    wh.append("c.r", spark.createDataFrame([(4, "d", 1)], SCHEMA))
+    live = wh.path("c.r")
+    sizes = [pq.read_metadata(f"{live}/{rel}").num_rows for rel in wh.data_files("c.r")]
+    assert 0 in sizes and len(sizes) >= 4
+    got = wh.read_arrow("c.r")
+    assert {c.num_chunks for c in got.columns} == {1}
+    assert spark.createDataFrame(got).count() == wh.read("c.r").count() == 4
