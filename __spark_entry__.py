@@ -29,8 +29,8 @@ from pg_auto_dw_spark import queries_catalog
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: DV build+load on sf0.001 customer; returns the hub."""
+    from pg_auto_dw_spark.build.builder import load_business_key
     from pg_auto_dw_spark.build.ddl import hub_schema, satellite_schemas
-    from pg_auto_dw_spark.build.loader import load_hub, load_satellite
     from pg_auto_dw_spark.queries_catalog import customer_business_key
     from pg_auto_dw_spark.session import prepare
     from pg_auto_dw_spark.sources import load_table
@@ -45,8 +45,7 @@ def entry(spark: SparkSession) -> DataFrame:
         wh.create_table(f"dw.{name}", schema)
     source = load_table(spark, sf_dir, "customer")
     load_ts = datetime.datetime(2024, 6, 1)
-    load_hub(wh, source, bk, load_ts=load_ts)
-    load_satellite(wh, source, bk, "customer", load_ts=load_ts)
+    load_business_key(wh, source, bk, load_ts=load_ts)
     hub = wh.read("dw.hub_customer")
     # The driver collect()s this result; year-0001 ghost load_ts does not
     # fit in Python datetime / Arrow ns timestamps, so emit it as text.

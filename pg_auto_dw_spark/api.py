@@ -16,7 +16,6 @@ anti-join loads are idempotent, so any schedule is safe (SURVEY 2.9).
 from __future__ import annotations
 
 import datetime
-import hashlib
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +27,7 @@ from .build.builder import (
     assemble_business_keys,
     build_and_load,
     build_object_pull,
+    load_business_key,
     ready_build_call_rows,
 )
 from .catalog.introspect import catalog_snapshot
@@ -35,6 +35,7 @@ from .catalog.registry import SourceRegistry
 from .catalog.scd2 import SOURCE_OBJECTS_SCHEMA, crawl as scd2_crawl
 from .classify.client import Classifier, DeterministicStub
 from .classify.pending import source_table_prompts
+from .functions.hashing import hash_text
 from .model.dv_schema import DVSchema
 from .model.status import (
     BUILD_CALL_SCHEMA,
@@ -247,27 +248,31 @@ class AutoDW:
             return self._go_push_table(status, load_ts=load_ts)
         return self._go_build(load_ts=load_ts)
 
-    def _go_build(self, load_ts: datetime.datetime | None = None) -> str:
-        build_id = str(uuid.uuid4())
+    def _plan(self, build_id: str) -> tuple[list, list]:
+        """The ready set and the business keys it builds, shared by a
+        build and a DryRun: one collect of the ready build_call rows
+        (queries.rs:324-415) and one pull over them as an in-memory
+        build_call (queries.rs:417-438), ordered by
+        fk_transformer_responses."""
         so = self.wh.read("auto_dw.source_objects")
         tr = self.wh.read("auto_dw.transformer_responses")
-        bc_rows = ready_build_call_rows(so, tr, self.confidence_threshold, build_id)
+        ready = ready_build_call_rows(so, tr, self.confidence_threshold, build_id)
+        rows = sorted(ready.collect(), key=lambda r: r["fk_transformer_responses"])
+        if not rows:
+            return [], []
+        bc = self.spark.createDataFrame(rows, ready.schema)
+        pulled = build_object_pull(bc, tr, so, build_id, self.system_id).collect()
+        return rows, assemble_business_keys(pulled)
+
+    def _go_build(self, load_ts: datetime.datetime | None = None) -> str:
+        build_id = str(uuid.uuid4())
+        rows, business_keys = self._plan(build_id)
         max_pk = self.wh.max_value("auto_dw.build_call", "pk_build_call") or 0
-        from .functions.sequence import global_row_number
-
-        bc = (
-            global_row_number(bc_rows, ["fk_transformer_responses"], "__rn")
-            .withColumn("pk_build_call", F.col("__rn") + F.lit(max_pk))
-            .drop("__rn")
-            .withColumn("created_at", F.lit(self._clock()).cast("timestamp"))
-            .select([f.name for f in BUILD_CALL_SCHEMA.fields])
+        now = self._clock()
+        self.wh.append_rows(
+            "auto_dw.build_call",
+            [(max_pk + i + 1, *r, now) for i, r in enumerate(rows)],
         )
-        self.wh.append("auto_dw.build_call", bc)
-
-        pulled = build_object_pull(
-            self.wh.read("auto_dw.build_call"), tr, so, build_id, self.system_id
-        ).collect()
-        business_keys = assemble_business_keys(pulled)
         dv = DVSchema(dw_schema=self.dw_schema, business_keys=business_keys)
         add_target_columns(dv)
 
@@ -290,34 +295,16 @@ class AutoDW:
         from .build.ddl import hub_ddl_sql, satellite_ddl_sql
         from .build.loader import hub_stage_df
 
-        so = self.wh.read("auto_dw.source_objects")
-        tr = self.wh.read("auto_dw.transformer_responses")
-        # same pull as a real build, but over an in-memory build_call that
-        # is never persisted (build-test-rollback)
-        ready = ready_build_call_rows(so, tr, self.confidence_threshold, "dry-run")
-        ready_rows = [(r["fk_transformer_responses"], "dry-run") for r in ready.collect()]
-        if not ready_rows:
-            self._log("go", "INFO", "DryRun completed: 0 business keys.")
-            return "DryRun | 0 business key(s)"
-        bc = self.spark.createDataFrame(
-            ready_rows, "fk_transformer_responses BIGINT, build_id STRING"
-        )
-        pulled = build_object_pull(bc, tr, so, "dry-run", self.system_id).collect()
-        business_keys = assemble_business_keys(pulled)
+        _, business_keys = self._plan("dry-run")
         ddl: list[str] = []
         plan: list[str] = []
         for bk in business_keys:
             ddl.append(hub_ddl_sql(self.dw_schema, bk))
             ddl.extend(satellite_ddl_sql(self.dw_schema, bk).values())
-            schema_name, table_name = bk.source_table()
-            n = hub_stage_df(self.resolve_source(schema_name, table_name), bk).count()
+            n = hub_stage_df(self.resolve_source(*bk.source_table()), bk).count()
             plan.append(f"hub_{bk.name}: {n} keys staged")
-        msg = (
-            "DryRun | "
-            + f"{len(business_keys)} business key(s); "
-            + "; ".join(plan)
-            + ("\n" + "\n".join(ddl) if ddl else "")
-        )
+        msg = "DryRun | " + "; ".join([f"{len(business_keys)} business key(s)", *plan])
+        msg += "".join("\n" + d for d in ddl)
         self._log("go", "INFO", f"DryRun completed: {len(business_keys)} business keys.")
         return msg
 
@@ -325,9 +312,8 @@ class AutoDW:
         self, qualified_table: str, load_ts: datetime.datetime | None = None
     ) -> str:
         """go('Push-Table', 'schema.table'): re-load one source table
-        through the latest deployed DVSchema (docs go.md)."""
-        from .build.loader import load_hub, load_satellite
-
+        through the latest deployed DVSchema (docs go.md), each business
+        key in one transaction."""
         dv = self.latest_dv_schema()
         if dv is None:
             return "Push-Table | No deployed DVSchema found. Run go() first."
@@ -335,14 +321,11 @@ class AutoDW:
         for bk in dv.business_keys:
             s, t = bk.source_table()
             if (s.lower(), t.lower()) == (schema_name, table_name):
-                source = self.resolve_source(s, t)
-                n_hub = load_hub(self.wh, source, bk, dw_schema=dv.dw_schema, load_ts=load_ts)
-                n_sats = {
-                    key: load_satellite(
-                        self.wh, source, bk, key, dw_schema=dv.dw_schema, load_ts=load_ts
-                    )
-                    for key in bk.satellites()
-                }
+                counts = load_business_key(
+                    self.wh, self.resolve_source(s, t), bk, dv.dw_schema, load_ts
+                )
+                n_hub = counts.pop(f"hub_{bk.name}")
+                n_sats = {key.removeprefix("sat_"): n for key, n in counts.items()}
                 msg = f"Push-Table | {qualified_table}: hub +{n_hub}, sats {n_sats}"
                 self._log("go", "INFO", msg)
                 return msg
@@ -508,7 +491,7 @@ class AutoDW:
     @staticmethod
     def hash(text: str) -> str:
         """auto_dw.hash (src/lib.rs:153-157): lowercase hex sha256."""
-        return hashlib.sha256(text.encode()).hexdigest()
+        return hash_text(text)
 
     def _log(self, process: str, level: str, message: str) -> None:
         pk = (self.wh.max_value("auto_dw.log", "pk_log") or 0) + 1

@@ -29,22 +29,16 @@ from .loader import load_hub, load_satellite
 
 
 def ready_build_call_rows(
-    source_objects: DataFrame,
-    responses: DataFrame,
-    threshold: str,
-    build_id: str,
-    build_flag: str = "Build",
-    build_status: str = "RTD",
-    status: str = "Ready to Deploy",
+    source_objects: DataFrame, responses: DataFrame, threshold: str, build_id: str
 ) -> DataFrame:
     """insert_into_build_call's SELECT (queries.rs:324-415): transformer
-    response pks whose column status matches."""
+    response pks whose column is Ready to Deploy, flagged Build/RTD."""
     prep = status_prep(source_objects, responses, threshold)
-    return prep.filter(F.col("status") == status).select(
+    return prep.filter(F.col("status") == "Ready to Deploy").select(
         F.col("pk_transformer_responses").alias("fk_transformer_responses"),
         F.lit(build_id).alias("build_id"),
-        F.lit(build_flag).alias("build_flag"),
-        F.lit(build_status).alias("build_status"),
+        F.lit("Build").alias("build_flag"),
+        F.lit("RTD").alias("build_status"),
     )
 
 
@@ -178,6 +172,35 @@ def add_target_columns(dv: DVSchema) -> None:
                 )
 
 
+def load_business_key(
+    wh,
+    source: DataFrame,
+    business_key: BusinessKey,
+    dw_schema: str = "dw",
+    load_ts: datetime.datetime | None = None,
+) -> dict[str, int]:
+    """The reference's one-transaction load script
+    (controller/dv_loader.rs:59-64 runs hub+satellite inserts in ONE
+    Postgres transaction): the hub and every satellite of
+    ``business_key`` land in one ``wh.transaction`` commit. Returns the
+    rows appended per target (``hub_<name>``, ``sat_<key>``).
+
+    The anti-joins already make a crashed load re-runnable; the
+    transaction also removes the window where the hub shows keys whose
+    satellite rows are not yet visible -- readers see the batch entirely
+    or not at all (at pointer-swap granularity; see SCALE.md on
+    cross-table read isolation)."""
+    hub = f"hub_{business_key.name}"
+    tables = [hub] + [f"sat_{key}" for key in business_key.satellites()]
+    with wh.transaction([f"{dw_schema}.{t}" for t in tables]) as txn:
+        counts = {hub: load_hub(wh, source, business_key, dw_schema, load_ts, writer=txn.append)}
+        for key in business_key.satellites():
+            counts[f"sat_{key}"] = load_satellite(
+                wh, source, business_key, key, dw_schema, load_ts, writer=txn.append
+            )
+    return counts
+
+
 def build_and_load(
     wh,
     resolve_source,
@@ -185,7 +208,8 @@ def build_and_load(
     load_ts: datetime.datetime | None = None,
     partition_by_load_date: bool = False,
 ) -> dict[str, int]:
-    """DDL + full load for a DVSchema. resolve_source(schema, table) ->
+    """DDL + full load for a DVSchema, one ``load_business_key``
+    transaction per business key. resolve_source(schema, table) ->
     DataFrame. Returns appended-row counts per target table.
 
     ``partition_by_load_date`` creates date-partitioned hubs/satellites
@@ -210,13 +234,6 @@ def build_and_load(
         )
         for name, schema in satellite_schemas(bk, partitioned=partition_by_load_date).items():
             wh.create_table(f"{dv.dw_schema}.{name}", schema, partition_by=part)
-        schema_name, table_name = bk.source_table()
-        source = resolve_source(schema_name, table_name)
-        counts[f"hub_{bk.name}"] = load_hub(
-            wh, source, bk, dw_schema=dv.dw_schema, load_ts=load_ts
-        )
-        for key in bk.satellites():
-            counts[f"sat_{key}"] = load_satellite(
-                wh, source, bk, key, dw_schema=dv.dw_schema, load_ts=load_ts
-            )
+        source = resolve_source(*bk.source_table())
+        counts.update(load_business_key(wh, source, bk, dv.dw_schema, load_ts))
     return counts

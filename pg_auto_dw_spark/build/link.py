@@ -25,12 +25,12 @@ import datetime
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.hashing import pg_text_expr
+from ..functions.hashing import key_text
 from ..warehouse import Warehouse
 from .ddl import ddl_sql
+from .loader import _append_new, _stage
 
 
 @dataclass
@@ -68,38 +68,16 @@ def link_ddl_sql(dw_schema: str, spec: LinkSpec) -> str:
 def link_stage_df(
     source: DataFrame, spec: LinkSpec, load_ts: datetime.datetime | None = None
 ) -> DataFrame:
-    src_types = dict(source.dtypes)
-
-    def rendered(cols: list[str]):
-        return [pg_text_expr(F.col(c), src_types.get(c, "string")) for c in cols]
-
-    from .loader import _load_ts_col
-
-    # Dedup on the PRE-hash joined key strings and hash afterwards:
-    # link_hk = sha256(joined), so dropDuplicates(joined) keeps exactly
-    # the rows dropDuplicates(link_hk) kept, but the dedup shuffle
-    # carries ~30B of rendered key text per row instead of four 64-char
-    # hex digests (~270B) -- a 5-10x staging-shuffle reduction, the
-    # term that dominates link loads at warehouse scale. (Dedup must
-    # use the JOINED string, not the raw part tuple: concat_ws skips
-    # NULLs, so distinct part tuples can join -- and hash -- equal.)
-    all_parts = []
-    unit_joins = []
-    for u in spec.units:
-        parts = rendered(u.source_columns)
-        all_parts.extend(parts)
-        unit_joins.append(F.concat_ws(",", *parts).alias(f"__j_{u.bk_name}"))
-    staged = source.select(
-        F.concat_ws(",", *all_parts).alias("__j_link"), *unit_joins
-    ).dropDuplicates(["__j_link"])
-    return staged.select(
-        F.sha2(F.col("__j_link"), 256).alias(f"link_{spec.name}_hk"),
-        _load_ts_col(load_ts).alias("load_ts"),
-        F.lit(spec.schema_name).alias("record_source"),
-        *[
-            F.sha2(F.col(f"__j_{u.bk_name}"), 256).alias(f"hub_{u.bk_name}_hk")
-            for u in spec.units
-        ],
+    """Staged link rows, one per link key: link_hk over every unit's
+    columns, plus each referenced hub's key hash."""
+    types = dict(source.dtypes)
+    link_cols = [c for u in spec.units for c in u.source_columns]
+    return _stage(
+        source,
+        {f"link_{spec.name}_hk": key_text(link_cols, types)},
+        spec.schema_name,
+        load_ts,
+        derived={f"hub_{u.bk_name}_hk": key_text(u.source_columns, types) for u in spec.units},
     )
 
 
@@ -113,8 +91,6 @@ def load_link(
     """Create-if-missing + anti-join insert of new link keys. Returns
     rows appended, as the append observes them on the write."""
     table = f"{dw_schema}.link_{spec.name}"
-    hk = f"link_{spec.name}_hk"
     wh.create_table(table, link_schema(spec))
     staged = link_stage_df(source, spec, load_ts=load_ts)
-    new_rows = staged.join(wh.read(table).select(hk), on=hk, how="left_anti")
-    return wh.append(table, new_rows.select(*link_schema(spec).names))
+    return _append_new(wh, table, staged, [f"link_{spec.name}_hk"])

@@ -11,6 +11,11 @@ DataFrame transforms:
 - sat load: hash key + hash-diff over descriptors -> anti-join on
   (hk, hd) -> append (dv_loader.rs:325-357).
 
+Every staging frame (hub, satellite, link, multi-source hub) comes out
+of one projection, ``_stage``, and every load appends through one
+anti-join leg, ``_append_new``. ``builder.load_business_key`` runs a
+business key's hub and satellite legs in one transaction.
+
 Scale notes (100 TB posture):
 
 - The anti-join is the one shuffle in this pipeline. Both sides hash on
@@ -18,8 +23,9 @@ Scale notes (100 TB posture):
   construction -- no skew, and AQE picks broadcast when the target side
   is still small. With date-partitioned hubs/sats, the target scan
   prunes to nothing on first load.
-- Everything stays in whole-stage codegen: sha2/concat_ws are JVM
-  built-ins; there is no Python in the load path.
+- Everything stays in whole-stage codegen: the key text and its hash
+  (``functions.hashing``) are JVM built-ins; there is no Python in the
+  load path.
 - Each load leg is ONE write action, like the reference's one
   INSERT...SELECT: the appended-row count is observed on the write
   (``Warehouse.append``), so nothing is persisted or counted first, and
@@ -33,47 +39,98 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import pg_text_expr
+from ..functions.hashing import hash_text, key_text, render, sha256_hex
 from ..model.dv_schema import BusinessKey
 from ..warehouse import Warehouse
 
-GHOST_LOAD_TS = datetime.datetime(1, 1, 1, 0, 0, 0)
 GHOST_LOAD_TS_STR = "0001-01-01 00:00:00"
 GHOST_RECORD_SOURCE = "SYSTEM"
-
-
-def _ghost_ts_col() -> Column:
-    # '0001-01-01'::TIMESTAMP (dv_loader.rs:121,128). Parsed JVM-side from
-    # a string: a Python datetime literal would shift +2 days crossing the
-    # py4j boundary (hybrid->proleptic Gregorian calendar rebase).
-    return F.to_timestamp(F.lit(GHOST_LOAD_TS_STR))
-
-
-def _load_ts_col(load_ts: datetime.datetime | None) -> Column:
-    # CURRENT_TIMESTAMP AT TIME ZONE 'UTC' (dv_loader.rs:173); callers
-    # pass a fixed ts for deterministic/oracle runs.
-    return F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
+_GHOST_KEYS = ("-1", "-2")
 
 
 def ghost_records_df(source: DataFrame, business_key: BusinessKey) -> DataFrame:
     """The -1/-2 system rows (dv_loader.rs:110-135): hk = sha256('-1'|'-2'),
     load_ts = 0001-01-01, record_source = 'SYSTEM', every bk part = the
     sentinel value. Expressed as a union of two literal rows (O5)."""
-    spark = source.sparkSession
     hk = f"hub_{business_key.name}_hk"
     parts = [f"{p.alias}_bk" for p in business_key.business_key_part_links]
-    rows = []
-    for sentinel in ("-1", "-2"):
-        rows.append(tuple([sentinel] + [sentinel] * len(parts)))
-    df = spark.createDataFrame(rows, ["sentinel"] + parts)
-    return df.select(
-        F.sha2(F.col("sentinel"), 256).alias(hk),
-        _ghost_ts_col().alias("load_ts"),
+    rows = [(hash_text(k), *[k] * len(parts)) for k in _GHOST_KEYS]
+    return source.sparkSession.createDataFrame(rows, [hk, *parts]).select(
+        hk,
+        # '0001-01-01'::TIMESTAMP (dv_loader.rs:121,128). Parsed JVM-side
+        # from a string: a Python datetime literal would shift +2 days
+        # crossing the py4j boundary (hybrid->proleptic calendar rebase).
+        F.to_timestamp(F.lit(GHOST_LOAD_TS_STR)).alias("load_ts"),
         F.lit(GHOST_RECORD_SOURCE).alias("record_source"),
-        *[F.col(p) for p in parts],
+        *parts,
+    )
+
+
+def _stage(
+    source: DataFrame,
+    ids: dict[str, Column],
+    record_source: str,
+    load_ts: datetime.datetime | None,
+    carry: dict[str, Column] | None = None,
+    derived: dict[str, Column] | None = None,
+) -> DataFrame:
+    """The one staging projection behind every vault load. ``ids`` and
+    ``derived`` map each output hash column to its key text
+    (``hashing.key_text``); ``carry`` maps plain output columns to their
+    expressions. Rows with equal ``ids`` texts are dropped as duplicates
+    -- the anti-join only removes rows already in the target, so
+    without this a non-unique source would append one key or version
+    twice in one load -- and every text is hashed AFTER that exchange.
+
+    Why the text and not the digest: hash = sha256(text), so dropping
+    duplicate texts keeps exactly the rows dropping duplicate digests
+    keeps, while the shuffle carries ~30B of rendered key per row
+    instead of a 64-char digest per hash column (5-10x narrower, the
+    term that dominates staging at warehouse scale). It must be the
+    joined text, not the part tuple: concat_ws skips NULLs, so distinct
+    tuples can join -- and hash -- equal.
+
+    Output: the first id, load_ts (``load_ts``, else the current
+    timestamp: CURRENT_TIMESTAMP AT TIME ZONE 'UTC', dv_loader.rs:173),
+    record_source, the other ids, the derived hashes, the carry columns.
+    """
+    texts = {**ids, **(derived or {})}
+    carry = carry or {}
+    pre = source.select(
+        *[t.alias(f"__{n}") for n, t in texts.items()],
+        *[c.alias(n) for n, c in carry.items()],
+    ).dropDuplicates([f"__{n}" for n in ids])
+    first, *rest = texts
+    ts = F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
+    return pre.select(
+        sha256_hex(F.col(f"__{first}")).alias(first),
+        ts.alias("load_ts"),
+        F.lit(record_source).alias("record_source"),
+        *[sha256_hex(F.col(f"__{n}")).alias(n) for n in rest],
+        *carry,
+    )
+
+
+def _hub_stage(
+    source: DataFrame,
+    business_key: BusinessKey,
+    load_ts: datetime.datetime | None,
+    source_index: int,
+) -> DataFrame:
+    """Hub rows of the source that every part link's
+    ``source_columns[source_index]`` describes."""
+    links = business_key.business_key_part_links
+    cols = [p.source_columns[source_index].column_name for p in links]
+    types = dict(source.dtypes)
+    return _stage(
+        source,
+        {f"hub_{business_key.name}_hk": key_text(cols, types)},
+        links[0].source_columns[source_index].schema_name,
+        load_ts,
+        carry={f"{p.alias}_bk": t for p, t in zip(links, render(cols, types))},
     )
 
 
@@ -81,46 +138,15 @@ def hub_stage_df(
     source: DataFrame,
     business_key: BusinessKey,
     load_ts: datetime.datetime | None = None,
-    distinct_keys: bool = True,
 ) -> DataFrame:
     """Staged hub rows from a source DataFrame (dv_loader.rs:160-176).
 
     hk = sha256(concat_ws(',', part::text...)); record_source = source
     schema name (dv_loader.rs:169-175). The reference relies on source
-    PK uniqueness instead of de-duplicating; we drop duplicate keys
-    explicitly (``distinct_keys``) so a non-unique source can't corrupt
-    the hub -- semantics identical on unique sources.
-    """
-    hk_name = f"hub_{business_key.name}_hk"
-    schema_name, _ = business_key.source_table()
-    src_types = dict(source.dtypes)
-    part_cols = []
-    part_exprs = []
-    for p in business_key.business_key_part_links:
-        col_name = p.source_columns[0].column_name
-        rendered = pg_text_expr(F.col(col_name), src_types.get(col_name, "string"))
-        part_cols.append(rendered.alias(f"{p.alias}_bk"))
-        part_exprs.append(rendered)
-    if not distinct_keys:
-        return source.select(
-            F.sha2(F.concat_ws(",", *part_exprs), 256).alias(hk_name),
-            _load_ts_col(load_ts).alias("load_ts"),
-            F.lit(schema_name).alias("record_source"),
-            *part_cols,
-        )
-    # Dedup on the PRE-hash joined key string and hash afterwards: the
-    # hk is sha256(joined), so dropDuplicates(joined) keeps exactly the
-    # rows dropDuplicates(hk) kept while the dedup shuffle carries the
-    # short rendered key instead of a 64-char digest per row (see
-    # link.link_stage_df for the full rationale; joined string, not raw
-    # parts -- concat_ws skips NULLs).
-    pre = source.select(F.concat_ws(",", *part_exprs).alias("__j"), *part_cols)
-    return pre.dropDuplicates(["__j"]).select(
-        F.sha2(F.col("__j"), 256).alias(hk_name),
-        _load_ts_col(load_ts).alias("load_ts"),
-        F.lit(schema_name).alias("record_source"),
-        *[F.col(f"{p.alias}_bk") for p in business_key.business_key_part_links],
-    )
+    PK uniqueness instead of de-duplicating; duplicate keys are dropped
+    here so a non-unique source can't corrupt the hub -- semantics
+    identical on unique sources."""
+    return _hub_stage(source, business_key, load_ts, 0)
 
 
 def satellite_stage_df(
@@ -131,62 +157,70 @@ def satellite_stage_df(
 ) -> DataFrame:
     """Staged satellite rows (dv_loader.rs:325-357): hub hash key +
     hash-diff over this satellite's descriptor columns + the descriptor
-    columns themselves in source types."""
-    hk_name = f"hub_{business_key.name}_hk"
-    hd_name = f"sat_{satellite_key}_hd"
-    descriptors = business_key.satellites()[satellite_key]
-    schema_name, _ = business_key.source_table()
-    src_types = dict(source.dtypes)
-
-    key_exprs = [
-        pg_text_expr(
-            F.col(p.source_columns[0].column_name),
-            src_types.get(p.source_columns[0].column_name, "string"),
-        )
-        for p in business_key.business_key_part_links
-    ]
-    desc_source_cols = [
-        d.descriptor_link.source_column.column_name
-        for d in descriptors
+    columns themselves in source types, one row per (hk, hd)."""
+    links = [
+        d.descriptor_link
+        for d in business_key.satellites()[satellite_key]
         if d.descriptor_link.source_column
     ]
-    desc_exprs = [
-        pg_text_expr(F.col(c), src_types.get(c, "string")) for c in desc_source_cols
-    ]
-    desc_out = [
-        F.col(d.descriptor_link.source_column.column_name).alias(d.descriptor_link.alias)
-        for d in descriptors
-        if d.descriptor_link.source_column
-    ]
-    # within-batch dedup on (hk, hd): the anti-join only removes rows
-    # already in the target, so without this a non-unique source would
-    # append identical versions twice in one load (same hardening as
-    # hub_stage_df's distinct_keys). Dedup runs on the PRE-hash joined
-    # strings and the digests are computed after the shuffle (see
-    # hub_stage_df / link_stage_df for the shuffle-width rationale).
-    desc_aliases = [
-        d.descriptor_link.alias for d in descriptors if d.descriptor_link.source_column
-    ]
-    pre = source.select(
-        F.concat_ws(",", *key_exprs).alias("__jk"),
-        F.concat_ws(",", *desc_exprs).alias("__jd"),
-        *desc_out,
-    ).dropDuplicates(["__jk", "__jd"])
-    return pre.select(
-        F.sha2(F.col("__jk"), 256).alias(hk_name),
-        _load_ts_col(load_ts).alias("load_ts"),
-        F.lit(schema_name).alias("record_source"),
-        F.sha2(F.col("__jd"), 256).alias(hd_name),
-        *[F.col(a) for a in desc_aliases],
+    key_cols = [p.source_columns[0].column_name for p in business_key.business_key_part_links]
+    desc_cols = [link.source_column.column_name for link in links]
+    types = dict(source.dtypes)
+    return _stage(
+        source,
+        {
+            f"hub_{business_key.name}_hk": key_text(key_cols, types),
+            f"sat_{satellite_key}_hd": key_text(desc_cols, types),
+        },
+        business_key.source_table()[0],
+        load_ts,
+        carry={link.alias: F.col(c) for link, c in zip(links, desc_cols)},
     )
 
 
 def _with_partition_cols(wh: Warehouse, table: str, df: DataFrame) -> DataFrame:
     """Add the load_date partition column when the target table is
     date-partitioned (100 TB layout, SCALE.md)."""
-    if "load_date" in [c for c in wh._partitioning.get(table, [])]:
+    if "load_date" in wh._partitioning.get(table, []):
         df = df.withColumn("load_date", F.to_date("load_ts"))
     return df
+
+
+def _append_new(wh: Warehouse, table: str, staged: DataFrame, on: list[str], sink=None) -> int:
+    """The one anti-join leg (dv_loader.rs:177-181,339-346): append the
+    staged rows whose ``on`` key the live table lacks, through ``sink``
+    (default ``wh.append``). Returns the rows appended, as the sink
+    observes them on the write. The anti-join always reads the LIVE
+    table -- correct inside a transaction, where each table is staged
+    by one leg whose rows are key-novel by construction."""
+    existing = wh.read(table)
+    new_rows = _with_partition_cols(wh, table, staged).join(
+        existing.select(*on), on=on, how="left_anti"
+    )
+    return (sink or wh.append)(table, new_rows.select(*existing.columns))
+
+
+def _load_hub_rows(
+    wh: Warehouse,
+    business_key: BusinessKey,
+    dw_schema: str,
+    staged: DataFrame,
+    sink=None,
+) -> int:
+    """Ghost-init, then the anti-join append of ``staged`` hub rows."""
+    table = f"{dw_schema}.hub_{business_key.name}"
+    hk = f"hub_{business_key.name}_hk"
+    sink = sink or wh.append
+    appended = 0
+    # Ghost init only when the hub is empty (dv_loader.rs:111-118 A4).
+    if wh.row_count(table) == 0:
+        ghosts = ghost_records_df(staged, business_key)
+        appended += sink(table, _with_partition_cols(wh, table, ghosts))
+        # The ghosts own the keys '-1'/'-2', as the reference's NOT EXISTS
+        # skips them after its ghost insert. Filtered here because inside
+        # a transaction the anti-join reads a live hub without the ghosts.
+        staged = staged.filter(~F.col(hk).isin([hash_text(k) for k in _GHOST_KEYS]))
+    return appended + _append_new(wh, table, staged, [hk], sink)
 
 
 def load_hub(
@@ -198,25 +232,10 @@ def load_hub(
     writer=None,
 ) -> int:
     """Ghost-init + anti-join insert of new hub keys. Returns rows
-    appended, as the sink observes them on the write. ``writer``
-    overrides the append sink (a transaction's ``txn.append`` for
-    atomic whole-load commits); anti-joins always read the LIVE table
-    -- correct inside a transaction because hub appends are key-novel
-    by construction."""
-    table = f"{dw_schema}.hub_{business_key.name}"
-    sink = writer or wh.append
-    hk = f"hub_{business_key.name}_hk"
-    appended = 0
-    # Ghost init only when the hub is empty (dv_loader.rs:111-118 A4).
-    if wh.row_count(table) == 0:
-        ghosts = _with_partition_cols(wh, table, ghost_records_df(source, business_key))
-        appended += sink(table, ghosts)
-    staged = _with_partition_cols(
-        wh, table, hub_stage_df(source, business_key, load_ts=load_ts)
-    )
-    existing = wh.read(table)
-    new_rows = staged.join(existing.select(hk), on=hk, how="left_anti")
-    return appended + sink(table, new_rows.select(*existing.columns))
+    appended. ``writer`` overrides the append sink (a transaction's
+    ``txn.append``, as ``builder.load_business_key`` passes)."""
+    staged = hub_stage_df(source, business_key, load_ts=load_ts)
+    return _load_hub_rows(wh, business_key, dw_schema, staged, writer)
 
 
 def load_satellite(
@@ -231,47 +250,13 @@ def load_satellite(
     """Anti-join (hk, hd) insert of new/changed satellite rows
     (dv_loader.rs:339-346). Returns rows appended. ``writer`` as in
     ``load_hub``."""
-    table = f"{dw_schema}.sat_{satellite_key}"
-    sink = writer or wh.append
-    hk = f"hub_{business_key.name}_hk"
-    hd = f"sat_{satellite_key}_hd"
-    staged = _with_partition_cols(
-        wh, table, satellite_stage_df(source, business_key, satellite_key, load_ts=load_ts)
+    return _append_new(
+        wh,
+        f"{dw_schema}.sat_{satellite_key}",
+        satellite_stage_df(source, business_key, satellite_key, load_ts=load_ts),
+        [f"hub_{business_key.name}_hk", f"sat_{satellite_key}_hd"],
+        writer,
     )
-    existing = wh.read(table)
-    new_rows = staged.join(existing.select(hk, hd), on=[hk, hd], how="left_anti")
-    return sink(table, new_rows.select(*existing.columns))
-
-
-def load_dv_atomic(
-    wh: Warehouse,
-    source: DataFrame,
-    business_key: BusinessKey,
-    dw_schema: str = "dw",
-    load_ts: datetime.datetime | None = None,
-) -> dict[str, int]:
-    """The reference's one-transaction load script over the Warehouse
-    (controller/dv_loader.rs:59-64 runs hub+satellite inserts in ONE
-    Postgres transaction): the hub and every satellite land in one
-    multi-table commit. Per-table idempotency (anti-join) already makes
-    a crashed load re-runnable; the transaction additionally removes
-    the WINDOW where the hub shows keys whose satellite rows are not
-    yet visible -- readers see the batch entirely or not at all (at
-    pointer-swap granularity; see SCALE.md on cross-table read
-    isolation)."""
-    tables = [f"{dw_schema}.hub_{business_key.name}"] + [
-        f"{dw_schema}.sat_{key}" for key in business_key.satellites()
-    ]
-    counts: dict[str, int] = {}
-    with wh.transaction(tables) as txn:
-        counts[f"hub_{business_key.name}"] = load_hub(
-            wh, source, business_key, dw_schema, load_ts, writer=txn.append
-        )
-        for key in business_key.satellites():
-            counts[f"sat_{key}"] = load_satellite(
-                wh, source, business_key, key, dw_schema, load_ts, writer=txn.append
-            )
-    return counts
 
 
 def load_hub_multi(
@@ -292,48 +277,17 @@ def load_hub_multi(
     sources carry the same key, the lower source index wins
     deterministically; then the usual anti-join append.
     """
-    table = f"{dw_schema}.hub_{business_key.name}"
     hk = f"hub_{business_key.name}_hk"
-    appended = 0
-    if wh.row_count(table) == 0:
-        ghosts = _with_partition_cols(
-            wh, table, ghost_records_df(sources[0][0], business_key)
-        )
-        appended += wh.append(table, ghosts)
-
-    staged_parts = []
+    union = None
     for priority, (source, src_idx) in enumerate(sources):
-        src_types = dict(source.dtypes)
-        part_cols, part_exprs = [], []
-        for p in business_key.business_key_part_links:
-            col_name = p.source_columns[src_idx].column_name
-            rendered = pg_text_expr(F.col(col_name), src_types.get(col_name, "string"))
-            part_cols.append(rendered.alias(f"{p.alias}_bk"))
-            part_exprs.append(rendered)
-        schema_name = business_key.business_key_part_links[0].source_columns[
-            src_idx
-        ].schema_name
-        staged_parts.append(
-            source.select(
-                F.sha2(F.concat_ws(",", *part_exprs), 256).alias(hk),
-                _load_ts_col(load_ts).alias("load_ts"),
-                F.lit(schema_name).alias("record_source"),
-                *part_cols,
-                F.lit(priority).alias("__prio"),
-            )
+        staged = _hub_stage(source, business_key, load_ts, src_idx).withColumn(
+            "__prio", F.lit(priority)
         )
-    union = staged_parts[0]
-    for s in staged_parts[1:]:
-        union = union.unionByName(s)
-    from pyspark.sql import Window
-
+        union = staged if union is None else union.unionByName(staged)
     w = Window.partitionBy(hk).orderBy("__prio")
     staged = (
         union.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__prio")
     )
-    staged = _with_partition_cols(wh, table, staged)
-    existing = wh.read(table)
-    new_rows = staged.join(existing.select(hk), on=hk, how="left_anti")
-    return appended + wh.append(table, new_rows.select(*existing.columns))
+    return _load_hub_rows(wh, business_key, dw_schema, staged)

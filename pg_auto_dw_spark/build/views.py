@@ -26,8 +26,7 @@ from pyspark.sql import functions as F
 
 from ..model.dv_schema import BusinessKey
 from ..warehouse import Warehouse
-
-GHOST_SOURCE = "SYSTEM"
+from .loader import GHOST_RECORD_SOURCE
 
 
 def current_satellite(sat: DataFrame, hub_hk: str, hd_col: str) -> DataFrame:
@@ -46,7 +45,7 @@ def business_view(
     descriptor values from every satellite (ghost records excluded)."""
     hk = f"hub_{business_key.name}_hk"
     hub = wh.read(f"{dw_schema}.hub_{business_key.name}").filter(
-        F.col("record_source") != GHOST_SOURCE
+        F.col("record_source") != GHOST_RECORD_SOURCE
     )
     out = hub.select(
         hk, *[f"{p.alias}_bk" for p in business_key.business_key_part_links]
@@ -82,7 +81,7 @@ def pit_table(
         F.to_timestamp(F.col("as_of")).alias("as_of")
     )
     hub = wh.read(f"{dw_schema}.hub_{business_key.name}").filter(
-        F.col("record_source") != GHOST_SOURCE
+        F.col("record_source") != GHOST_RECORD_SOURCE
     )
     base = hub.select(hk).crossJoin(F.broadcast(spine))
     out = base

@@ -1,4 +1,5 @@
-"""Hash-key / hash-diff primitives (SURVEY.md F1/F2).
+"""Hash-key / hash-diff primitives (SURVEY.md F1/F2): the one place
+business-key text is rendered, joined and hashed.
 
 The reference defines one scalar UDF ``auto_dw.hash(text)`` = lowercase
 hex SHA-256 (reference: extension/src/lib.rs:153-157) and concatenates
@@ -20,6 +21,8 @@ scientific notation, e.g. 1.0E7).
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -53,25 +56,31 @@ def pg_text_expr(col: Column, spark_type: str) -> Column:
     return col.cast("string")
 
 
-def hash_key(cols: list[Column] | list[str], types: list[str] | None = None) -> Column:
-    """Business-key hash: sha256(concat_ws(',', parts...)) lowercase hex.
-
-    Mirrors hub-load key hashing (reference: dv_loader.rs:170-172) where
-    BK parts are rendered ::TEXT, comma-joined with NULLs skipped, then
-    passed through auto_dw.hash (src/lib.rs:153-157).
-    """
-    rendered = []
-    for i, c in enumerate(cols):
-        c = F.col(c) if isinstance(c, str) else c
-        typ = types[i] if types else "string"
-        rendered.append(pg_text_expr(c, typ))
-    return F.sha2(F.concat_ws(",", *rendered), 256)
+def render(cols: list[str], types: dict[str, str]) -> list[Column]:
+    """Each named column as ``value::TEXT`` (``pg_text_expr``); a column
+    ``types`` does not name renders as a string."""
+    return [pg_text_expr(F.col(c), types.get(c, "string")) for c in cols]
 
 
-def hash_diff(cols: list[Column] | list[str], types: list[str] | None = None) -> Column:
-    """Satellite hash-diff over descriptor columns (dv_loader.rs:331-336).
+def key_text(cols: list[str], types: dict[str, str]) -> Column:
+    """The text the reference hashes: the rendered parts comma-joined
+    with NULLs skipped, ``ARRAY_TO_STRING(ARRAY[a::TEXT, ...], ',')``
+    (dv_loader.rs:170-172 for a business key, :331-336 for a hash-diff)."""
+    return F.concat_ws(",", *render(cols, types))
 
-    Same rendering/concat rules as hash_key; the reference uses one
-    hash function for both roles.
-    """
-    return hash_key(cols, types)
+
+def sha256_hex(text: Column) -> Column:
+    """``auto_dw.hash(text)`` (src/lib.rs:153-157): lowercase hex SHA-256."""
+    return F.sha2(text, 256)
+
+
+def hash_text(text: str) -> str:
+    """``auto_dw.hash(text)`` on the driver: the digest ``sha256_hex``
+    computes in the JVM, for a text the driver already holds."""
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
+def hash_key(cols: list[str], types: dict[str, str]) -> Column:
+    """Business-key hash or hash-diff: ``sha256_hex(key_text(...))`` --
+    the reference uses one hash function for both roles."""
+    return sha256_hex(key_text(cols, types))

@@ -3210,8 +3210,8 @@ def dv_round_trip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics are lossless."""
     import tempfile
 
+    from .build.builder import load_business_key
     from .build.ddl import hub_schema, satellite_schemas
-    from .build.loader import load_hub, load_satellite
     from .build.views import business_view
     from .warehouse import Warehouse
 
@@ -3221,8 +3221,7 @@ def dv_round_trip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name, schema in satellite_schemas(bk).items():
         wh.create_table(f"dw.{name}", schema)
     src = load_table(spark, sf_dir, "customer")
-    load_hub(wh, src, bk, load_ts=LOAD_TS)
-    load_satellite(wh, src, bk, "customer", load_ts=LOAD_TS)
+    load_business_key(wh, src, bk, load_ts=LOAD_TS)
     return business_view(wh, bk)
 
 

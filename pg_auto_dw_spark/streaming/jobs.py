@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.hashing import hash_key, render
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -533,17 +535,6 @@ def scd2_dim_stream(
     return _start_stream(staged, checkpoint_dir, sink=sink)
 
 
-def _hash_cols(schema: T.StructType, cols: list[str]):
-    """PG-text-rendered hash over the named columns -- the SAME
-    hash_key/hash_diff rendering the batch loaders use, so batch and
-    streaming loads of one table produce identical hashes (a raw
-    string cast would diverge on doubles >= 1e7 and on timestamps)."""
-    from ..functions.hashing import hash_key
-
-    types = {f.name: f.dataType.simpleString() for f in schema.fields}
-    return hash_key([F.col(c) for c in cols], [types[c] for c in cols])
-
-
 def incremental_hub_stream(
     spark: SparkSession,
     source_dir: str,
@@ -556,13 +547,17 @@ def incremental_hub_stream(
     """Streaming hub load: hash new keys as files arrive; exactly-once
     per key via stateful dropDuplicates on the hash (the streaming twin
     of the batch anti-join, dv_loader.rs:177-181). State is bounded by
-    the number of distinct keys."""
+    the number of distinct keys. Keys render and hash through the batch
+    loaders' renderer (``functions.hashing``), so batch and streaming
+    loads of one table write the same ``_bk`` text and hashes (a raw
+    string cast would diverge on doubles >= 1e7 and on timestamps)."""
     stream = spark.readStream.schema(source_schema).parquet(source_dir)
+    types = dict(stream.dtypes)
     staged = stream.select(
-        _hash_cols(source_schema, key_cols).alias("hub_hk"),
+        hash_key(key_cols, types).alias("hub_hk"),
         F.current_timestamp().alias("load_ts"),
         F.lit(record_source).alias("record_source"),
-        *[F.col(c).cast("string").alias(f"{c}_bk") for c in key_cols],
+        *[t.alias(f"{c}_bk") for c, t in zip(key_cols, render(key_cols, types))],
     ).dropDuplicates(["hub_hk"])
     return _start_stream(staged, checkpoint_dir, output_dir=output_dir)
 
@@ -612,11 +607,12 @@ def incremental_satellite_stream(
     if ts_col is not None and ts_col not in out_cols:
         out_cols.append(ts_col)
     stream = spark.readStream.schema(source_schema).parquet(source_dir)
+    types = dict(stream.dtypes)
     staged = stream.select(
-        _hash_cols(source_schema, key_cols).alias("hub_hk"),
+        hash_key(key_cols, types).alias("hub_hk"),
         F.current_timestamp().alias("load_ts"),
         F.lit(record_source).alias("record_source"),
-        _hash_cols(source_schema, hash_diff_cols).alias("sat_hd"),
+        hash_key(hash_diff_cols, types).alias("sat_hd"),
         *[F.col(c) for c in out_cols],
     )
     if watermark:

@@ -453,8 +453,6 @@ class Warehouse(_WriteVerbs):
         """(table -> generation basename) union over live journals --
         generations a pending transaction has committed-but-not-swapped;
         GC must never reap these."""
-        import json
-
         out: dict[str, str] = {}
         try:
             entries = os.listdir(self.root)
@@ -462,11 +460,9 @@ class Warehouse(_WriteVerbs):
             return out
         for e in entries:
             if e.startswith("_txn-") and e.endswith(".journal"):
-                try:
-                    with open(os.path.join(self.root, e)) as f:
-                        out.update(json.load(f)["tables"])
-                except (OSError, ValueError, KeyError):
-                    continue
+                j = _read_journal(os.path.join(self.root, e))
+                if j is not None:
+                    out.update(j["tables"])
         return out
 
     def _recover_transactions(self) -> None:
@@ -497,16 +493,11 @@ class Warehouse(_WriteVerbs):
                 if not (e.startswith("_txn-") and e.endswith(".journal")):
                     continue
                 jpath = os.path.join(self.root, e)
-                import json
-
-                try:
-                    with open(jpath) as f:
-                        j = json.load(f)
-                    tables = j["tables"]
-                except (OSError, ValueError, KeyError):
+                j = _read_journal(jpath)
+                if j is None:
                     continue
                 expect = j.get("expect", {})
-                for name, gen_base in tables.items():
+                for name, gen_base in j["tables"].items():
                     gen = os.path.join(self.root, gen_base)
                     with self.lock(name):
                         cur = os.path.basename(os.path.abspath(self.path(name)))
@@ -1274,6 +1265,32 @@ class _Transaction(_WriteVerbs):
         with contextlib.suppress(OSError):
             os.unlink(jpath)
         self._staged = {}
+
+
+def _read_journal(path: str) -> dict | None:
+    """A transaction journal's contents, or None when it is gone -- the
+    benign race where a commit unlinks its journal between a directory
+    listing and this open. A journal is written whole (tmp file, fsync,
+    rename), so one that cannot be parsed was damaged outside this
+    module: raise rather than skip it, since skipping would let GC reap
+    the generations it names and recovery leave its tables half
+    committed."""
+    import json
+
+    try:
+        with open(path) as f:
+            j = json.load(f)
+        readable = isinstance(j["tables"], dict)
+    except FileNotFoundError:
+        return None
+    except (ValueError, KeyError, TypeError):
+        readable = False
+    if not readable:
+        raise RuntimeError(
+            f"unreadable transaction journal {path}: restore it, or check the "
+            "generations it names and remove it by hand"
+        )
+    return j
 
 
 def _data_files(root: str) -> dict[str, int]:

@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pg_auto_dw_spark.build.loader import load_dv_atomic
+from pg_auto_dw_spark.build.builder import load_business_key
 from pg_auto_dw_spark.warehouse import Warehouse
 from tests.test_end_to_end import LOAD_TS, make_autodw
 from tests.test_loader import _setup
@@ -69,10 +69,10 @@ def test_zero_row_append_leaves_no_trace(spark, warehouse_dir, mode):
 
 def test_atomic_rerun_commits_nothing_and_returns_ints(spark, warehouse_dir, sf_dir):
     wh, bk, source = _setup(spark, warehouse_dir, sf_dir)
-    first = load_dv_atomic(wh, source, bk, load_ts=LOAD_TS)
+    first = load_business_key(wh, source, bk, load_ts=LOAD_TS)
     tables = [f"dw.{t}" for t in first]
     before = {t: _state(wh, t) for t in tables}
-    again = load_dv_atomic(wh, source, bk, load_ts=LOAD_TS)
+    again = load_business_key(wh, source, bk, load_ts=LOAD_TS)
     assert first["hub_customer"] == wh.row_count("dw.hub_customer")
     assert set(again.values()) == {0}
     assert all(type(n) is int for n in [*first.values(), *again.values()])

@@ -117,6 +117,27 @@ def test_no_unbounded_sql_cache_in_package():
             )
 
 
+def test_vault_hashing_only_in_hashing_module():
+    """Policy guard: business-key text is rendered, joined and hashed in
+    one place, ``functions/hashing.py`` -- a second ``concat_ws``/``sha2``
+    in the vault builders is how batch, streaming and oracle hashes
+    drift apart."""
+    import os
+    import re
+
+    build = os.path.join(os.path.dirname(__file__), "..", "pg_auto_dw_spark", "build")
+    for fn in sorted(os.listdir(build)):
+        if not fn.endswith(".py"):
+            continue
+        with open(os.path.join(build, fn)) as f:
+            code = "\n".join(ln.split("#")[0] for ln in f.read().splitlines())
+        found = re.findall(r"\bF\.(sha2|concat_ws)\(", code)
+        assert not found, (
+            f"build/{fn} calls F.{found[0]}(: render and hash business keys "
+            "through functions/hashing.py (key_text, sha256_hex, hash_key)"
+        )
+
+
 def test_dv_staging_dedup_shuffles_prehash_strings(spark, sf_dir):
     """Hub/sat/link staging dedups on the short pre-hash joined key and
     computes sha256 AFTER the exchange: at warehouse scale the dedup
@@ -126,7 +147,7 @@ def test_dv_staging_dedup_shuffles_prehash_strings(spark, sf_dir):
     listed BEFORE the first Exchange's subtree output -- i.e. no sha2
     in any project below the exchange."""
     from pg_auto_dw_spark.build.link import link_stage_df
-    from pg_auto_dw_spark.build.loader import hub_stage_df
+    from pg_auto_dw_spark.build.loader import hub_stage_df, satellite_stage_df
     from pg_auto_dw_spark.queries_catalog import (
         customer_business_key,
         lineitem_link_spec,
@@ -137,6 +158,7 @@ def test_dv_staging_dedup_shuffles_prehash_strings(spark, sf_dir):
     for df in (
         link_stage_df(li, lineitem_link_spec()),
         hub_stage_df(cust, customer_business_key()),
+        satellite_stage_df(cust, customer_business_key(), "customer"),
     ):
         plan = _plan(df)
         # formatted explain lists operators leaves-last in the tree

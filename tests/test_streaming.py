@@ -203,6 +203,57 @@ def test_stream_and_batch_hashes_agree(spark, sf_dir, tmp_path):
     assert stream_hashes == batch_hashes
 
 
+def test_stream_and_batch_hub_render_keys_alike(spark, tmp_path):
+    """The streaming hub writes each ``_bk`` column as the batch hub
+    does (``value::TEXT``): a double key >= 1e7 in plain notation with
+    two decimals, a timestamp key with microseconds -- not Spark's raw
+    string cast ('1.23456785E7', no fraction)."""
+    import datetime
+    import random
+
+    from pg_auto_dw_spark.build.loader import hub_stage_df
+    from pg_auto_dw_spark.build.spec import business_key_from_spec
+
+    rng = random.Random(7)
+    t0 = datetime.datetime(2024, 6, 1, 12, 0, 0)
+    rows = [(12345678.5, t0)] + [
+        (
+            round(rng.uniform(-1e9, 1e9), 2),
+            t0 + datetime.timedelta(seconds=rng.randrange(10**7), microseconds=rng.randrange(10**6)),
+        )
+        for _ in range(40)
+    ]
+    schema = T.StructType(
+        [T.StructField("k", T.DoubleType()), T.StructField("ts", T.TimestampType())]
+    )
+    base = spark.createDataFrame(rows, schema)
+    src_dir = str(tmp_path / "src")
+    base.write.parquet(src_dir)
+    q = incremental_hub_stream(
+        spark,
+        src_dir,
+        source_schema=schema,
+        key_cols=["k", "ts"],
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        output_dir=str(tmp_path / "hub"),
+    )
+    q.awaitTermination(120)
+    stream = {
+        (r["hub_hk"], r["k_bk"], r["ts_bk"])
+        for r in spark.read.parquet(str(tmp_path / "hub")).collect()
+    }
+
+    bk = business_key_from_spec(
+        "main", "t", "t", [("k", "double precision"), ("ts", "timestamp")], []
+    )
+    batch = {
+        (r["hub_t_hk"], r["k_bk"], r["ts_bk"]) for r in hub_stage_df(base, bk).collect()
+    }
+    assert len(batch) == len(rows)
+    assert stream == batch
+    assert any(r[1:] == ("12345678.50", "2024-06-01 12:00:00.000000") for r in stream)
+
+
 def test_satellite_stream_rejects_reserved_descriptor_names(spark, tmp_path):
     import pytest
 

@@ -148,6 +148,49 @@ def test_recovery_legacy_journal_without_expect_still_rolls_forward(
     assert not os.path.isfile(jpath)
 
 
+@pytest.mark.parametrize(
+    "text", ['{"tables": {"dv.hub": "dv__hub__gen-', '{"expect": {}}', '["dv.hub"]']
+)
+def test_unreadable_journal_fails_loudly(spark, warehouse_dir, text):
+    """A journal is written whole (tmp, fsync, rename), so one that does
+    not parse was damaged outside the warehouse: init and GC raise
+    instead of skipping it and reaping the generations it may name."""
+    wh = _setup(spark, warehouse_dir)
+    gen = wh._base("dv.hub") + "__gen-" + uuid.uuid4().hex[:8]
+    _df(spark, "j_hub").write.mode("overwrite").parquet(gen)
+    jpath = os.path.join(warehouse_dir, "_txn-badc0de.journal")
+    with open(jpath, "w") as f:
+        f.write(text)
+    with pytest.raises(RuntimeError, match="unreadable transaction journal"):
+        wh._journal_tables()
+    with pytest.raises(RuntimeError, match="unreadable transaction journal"):
+        Warehouse(spark, warehouse_dir)
+    assert os.path.isdir(gen) and os.path.isfile(jpath)
+    assert _vals(wh, "dv.hub") == {f"old_hub{i}" for i in range(4)}
+
+
+def test_vanished_journal_and_tmp_journal_are_skipped(spark, warehouse_dir, monkeypatch):
+    """A journal unlinked by its commit between the directory listing and
+    the open is skipped, and a leftover ``.journal.tmp`` (a crash before
+    the journal's rename, i.e. an aborted transaction) is ignored."""
+    wh = _setup(spark, warehouse_dir)
+    with open(os.path.join(warehouse_dir, "_txn-0badf00d.journal.tmp"), "w") as f:
+        f.write('{"tables": {"dv.hub"')
+    listdir = os.listdir
+    root = os.path.abspath(warehouse_dir)
+
+    def with_vanished(path="."):
+        names = listdir(path)
+        return names + ["_txn-9one.journal"] if os.path.abspath(path) == root else names
+
+    monkeypatch.setattr(os, "listdir", with_vanished)
+    wh2 = Warehouse(spark, warehouse_dir)  # recovery and GC both list the root
+    assert wh2._journal_tables() == {}
+    monkeypatch.undo()
+    assert _vals(wh2, "dv.hub") == {f"old_hub{i}" for i in range(4)}
+    assert _vals(wh2, "dv.sat") == {f"old_sat{i}" for i in range(4)}
+
+
 def test_transaction_partitioned_merge_and_undeclared_guard(spark, warehouse_dir):
     pschema = T.StructType(SCHEMA.fields + [T.StructField("b", T.LongType())])
     wh = Warehouse(spark, warehouse_dir)
@@ -290,12 +333,12 @@ def test_transaction_staged_append_is_atomic_with_overwrite(spark, warehouse_dir
 
 
 def test_atomic_dv_load_all_or_nothing(spark, warehouse_dir, monkeypatch):
-    """load_dv_atomic: hub + satellites land in one commit; a failure
+    """load_business_key: hub + satellites land in one commit; a failure
     mid-load leaves NOTHING visible; the re-run completes everything
     and matches the non-atomic loaders' final state."""
-    import pg_auto_dw_spark.build.loader as loader_mod
+    import pg_auto_dw_spark.build.builder as builder_mod
+    from pg_auto_dw_spark.build.builder import load_business_key
     from pg_auto_dw_spark.build.ddl import hub_schema, satellite_schemas
-    from pg_auto_dw_spark.build.loader import load_dv_atomic
     from pg_auto_dw_spark.queries_catalog import customer_business_key
     from pg_auto_dw_spark.sources import load_table
 
@@ -307,19 +350,19 @@ def test_atomic_dv_load_all_or_nothing(spark, warehouse_dir, monkeypatch):
     cust = load_table(spark, "/root/testdata/sf0.001", "customer")
 
     # sabotage the satellite leg on the first attempt
-    real_load_satellite = loader_mod.load_satellite
+    real_load_satellite = builder_mod.load_satellite
 
     def boom(*a, **k):
         raise RuntimeError("satellite leg failed")
 
-    monkeypatch.setattr(loader_mod, "load_satellite", boom)
+    monkeypatch.setattr(builder_mod, "load_satellite", boom)
     with pytest.raises(RuntimeError, match="satellite leg failed"):
-        load_dv_atomic(wh, cust, bk)
-    monkeypatch.setattr(loader_mod, "load_satellite", real_load_satellite)
+        load_business_key(wh, cust, bk)
+    monkeypatch.setattr(builder_mod, "load_satellite", real_load_satellite)
     # the hub leg ran before the crash, but NOTHING is visible
     assert wh.read(f"dw.hub_{bk.name}").count() == 0
 
-    counts = load_dv_atomic(wh, cust, bk)
+    counts = load_business_key(wh, cust, bk)
     n_cust = cust.count()
     assert counts[f"hub_{bk.name}"] == n_cust + 2  # ghosts + every key
     hub_n = wh.read(f"dw.hub_{bk.name}").count()
@@ -327,6 +370,6 @@ def test_atomic_dv_load_all_or_nothing(spark, warehouse_dir, monkeypatch):
     for key in bk.satellites():
         assert wh.read(f"dw.sat_{key}").count() > 0
     # idempotent: a second atomic run appends nothing
-    counts2 = load_dv_atomic(wh, cust, bk)
+    counts2 = load_business_key(wh, cust, bk)
     assert all(v == 0 for v in counts2.values())
     assert wh.read(f"dw.hub_{bk.name}").count() == hub_n
