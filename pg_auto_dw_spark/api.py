@@ -19,7 +19,6 @@ import datetime
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .build.builder import (
@@ -32,9 +31,9 @@ from .build.builder import (
 )
 from .catalog.introspect import catalog_snapshot
 from .catalog.registry import SourceRegistry
-from .catalog.scd2 import SOURCE_OBJECTS_SCHEMA, crawl as scd2_crawl
+from .catalog.scd2 import SOURCE_OBJECTS_SCHEMA, crawl as scd2_crawl, tracked
 from .classify.client import Classifier, DeterministicStub
-from .classify.pending import source_table_prompts
+from .classify.pending import source_table_prompts, tables_requiring_transformation
 from .functions.hashing import hash_text
 from .model.dv_schema import DVSchema
 from .model.status import (
@@ -44,7 +43,7 @@ from .model.status import (
     source_table_df,
 )
 from .session import prepare
-from .warehouse import Warehouse
+from .warehouse import Warehouse, local_frame
 
 DV_REPO_SCHEMA = T.StructType(
     [
@@ -62,6 +61,10 @@ LOG_SCHEMA = T.StructType(
         T.StructField("level", T.StringType(), True),
         T.StructField("message", T.StringType(), True),
     ]
+)
+
+HEALTH_SCHEMA = T.StructType(
+    [T.StructField(name, T.StringType()) for name in ("component", "status", "detail")]
 )
 
 CONTEXT_SCHEMA = T.StructType(
@@ -154,8 +157,7 @@ class AutoDW:
         import decimal
         import json
 
-        so = self.wh.read("auto_dw.source_objects")
-        tr = self.wh.read("auto_dw.transformer_responses")
+        so, tr = self._metadata()
         prompts = source_table_prompts(so, tr).collect()
         all_rows = []
         for p in prompts:
@@ -176,11 +178,7 @@ class AutoDW:
                 r["pk_source_objects"]: (
                     f"{r['schema_name']}.{r['table_name']}.{r['column_name']}".lower()
                 )
-                for r in so.filter(
-                    (F.col("current_flag") == "Y") & (F.col("deleted_flag") == "N")
-                )
-                .select("pk_source_objects", "schema_name", "table_name", "column_name")
-                .collect()
+                for r in tracked(so.to_pylist())
             }
             for r in all_rows:
                 ctx = overrides.get(pk_names.get(r.fk_source_objects, ""))
@@ -213,19 +211,19 @@ class AutoDW:
         return len(data)
 
     # -- status views ---------------------------------------------------
-    def source_column(self) -> DataFrame:
-        return source_column_df(
-            self.wh.read("auto_dw.source_objects"),
-            self.wh.read("auto_dw.transformer_responses"),
-            self.confidence_threshold,
+    def _metadata(self):
+        """(source_objects, transformer_responses) as Arrow tables: the
+        status, pending and go() passes run on the driver over them."""
+        return (
+            self.wh.read_arrow("auto_dw.source_objects"),
+            self.wh.read_arrow("auto_dw.transformer_responses"),
         )
 
+    def source_column(self) -> DataFrame:
+        return source_column_df(*self._metadata(), self.confidence_threshold)
+
     def source_table(self) -> DataFrame:
-        return source_table_df(
-            self.wh.read("auto_dw.source_objects"),
-            self.wh.read("auto_dw.transformer_responses"),
-            self.confidence_threshold,
-        )
+        return source_table_df(*self._metadata(), self.confidence_threshold)
 
     # -- build + load ---------------------------------------------------
     def go(
@@ -250,19 +248,14 @@ class AutoDW:
 
     def _plan(self, build_id: str) -> tuple[list, list]:
         """The ready set and the business keys it builds, shared by a
-        build and a DryRun: one collect of the ready build_call rows
-        (queries.rs:324-415) and one pull over them as an in-memory
-        build_call (queries.rs:417-438), ordered by
-        fk_transformer_responses."""
-        so = self.wh.read("auto_dw.source_objects")
-        tr = self.wh.read("auto_dw.transformer_responses")
-        ready = ready_build_call_rows(so, tr, self.confidence_threshold, build_id)
-        rows = sorted(ready.collect(), key=lambda r: r["fk_transformer_responses"])
-        if not rows:
-            return [], []
-        bc = self.spark.createDataFrame(rows, ready.schema)
-        pulled = build_object_pull(bc, tr, so, build_id, self.system_id).collect()
-        return rows, assemble_business_keys(pulled)
+        build and a DryRun, on the driver: the build_call rows
+        (fk_transformer_responses, build_id, flag, status) of the ready
+        columns (queries.rs:324-415), ordered by
+        fk_transformer_responses, and the pull over them
+        (queries.rs:417-438)."""
+        ready = ready_build_call_rows(*self._metadata(), self.confidence_threshold)
+        rows = [(r["pk_transformer_responses"], build_id, "Build", "RTD") for r in ready]
+        return rows, assemble_business_keys(build_object_pull(ready, self.system_id))
 
     def _go_build(self, load_ts: datetime.datetime | None = None) -> str:
         build_id = str(uuid.uuid4())
@@ -334,21 +327,15 @@ class AutoDW:
     def health(self) -> DataFrame:
         """auto_dw.health() (docs health.md): one row per automation
         component with its state."""
-        so = self.wh.read("auto_dw.source_objects")
-        tr = self.wh.read("auto_dw.transformer_responses")
-        bc = self.wh.read("auto_dw.build_call")
-        tracked = so.filter(
-            (F.col("current_flag") == "Y") & (F.col("deleted_flag") == "N")
-        ).count()
-        from .classify.pending import tables_requiring_transformation
-
-        pending = tables_requiring_transformation(so, tr).count()
-        builds = bc.select("build_id").distinct().count()
+        so, tr = self._metadata()
+        columns = len(tracked(so.to_pylist()))
+        pending = len(tables_requiring_transformation(so, tr))
+        builds = len(set(self.wh.read_arrow("auto_dw.build_call")["build_id"].to_pylist()))
         rows = [
             (
                 "catalog_crawl",
-                "OK" if tracked else "IDLE",
-                f"{tracked} column(s) tracked",
+                "OK" if columns else "IDLE",
+                f"{columns} column(s) tracked",
             ),
             (
                 "transformer",
@@ -357,7 +344,7 @@ class AutoDW:
             ),
             ("builder", "OK" if builds else "IDLE", f"{builds} build(s) deployed"),
         ]
-        return self.spark.createDataFrame(rows, ["component", "status", "detail"])
+        return local_frame(HEALTH_SCHEMA, rows)
 
     # -- live settings (utility/guc.rs:33-126 analog) -------------------
     _CONFIG_KEYS = (
@@ -461,8 +448,12 @@ class AutoDW:
         name = "auto_dw.dv_repo"
         key = (self.wh.path(name), sorted(self.wh.data_files(name).items()))
         if self._dv_cache is None or self._dv_cache[0] != key:
-            rows = self.wh.read(name).orderBy(F.col("insert_time").desc()).limit(1).collect()
-            self._dv_cache = (key, rows[0]["schema"] if rows else None)
+            # newest insert_time, NULLs last (ORDER BY insert_time DESC)
+            rows = self.wh.read_arrow(name).to_pylist()
+            newest = max(
+                rows, key=lambda r: (r["insert_time"] is not None, r["insert_time"]), default=None
+            )
+            self._dv_cache = (key, newest["schema"] if newest else None)
         return DVSchema.from_json(self._dv_cache[1]) if self._dv_cache[1] else None
 
     def create_views(self) -> list[str]:

@@ -13,7 +13,6 @@ from __future__ import annotations
 import datetime
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..model.dv_schema import (
     BusinessKey,
@@ -23,55 +22,34 @@ from ..model.dv_schema import (
     DescriptorLink,
     DVSchema,
 )
-from ..model.status import status_prep
+from ..model.status import RTD, status_rows
 from .ddl import hub_schema, satellite_schemas
 from .loader import load_hub, load_satellite
 
 
-def ready_build_call_rows(
-    source_objects: DataFrame, responses: DataFrame, threshold: str, build_id: str
-) -> DataFrame:
-    """insert_into_build_call's SELECT (queries.rs:324-415): transformer
-    response pks whose column is Ready to Deploy, flagged Build/RTD."""
-    prep = status_prep(source_objects, responses, threshold)
-    return prep.filter(F.col("status") == "Ready to Deploy").select(
-        F.col("pk_transformer_responses").alias("fk_transformer_responses"),
-        F.lit(build_id).alias("build_id"),
-        F.lit("Build").alias("build_flag"),
-        F.lit("RTD").alias("build_status"),
-    )
+_PULLED = (
+    "schema_name", "table_name", "business_key_name", "column_name", "column_type_name",
+    "table_oid", "column_ordinal_position",
+)
 
 
-def build_object_pull(
-    build_call: DataFrame,
-    responses: DataFrame,
-    source_objects: DataFrame,
-    build_id: str,
-    system_id: int,
-) -> DataFrame:
+def ready_build_call_rows(source_objects, responses, threshold: str) -> list[dict]:
+    """insert_into_build_call's SELECT (queries.rs:324-415) over the
+    Arrow tables: the status rows of the columns that are Ready to
+    Deploy, ordered by their response pk (fk_transformer_responses)."""
+    rows = status_rows(source_objects, responses, threshold)
+    ready = [r for r in rows if r["status"] == RTD]
+    return sorted(ready, key=lambda r: r["pk_transformer_responses"])
+
+
+def build_object_pull(ready: list[dict], system_id: int) -> list[dict]:
     """queries.rs:417-438: build_call -> responses -> source_objects
-    chained left joins (J7) + system id cross join (J6/S3)."""
-    bc = build_call.filter(F.col("build_id") == build_id)
-    j = bc.join(
-        responses,
-        bc["fk_transformer_responses"] == responses["pk_transformer_responses"],
-        "left",
-    ).join(
-        source_objects,
-        responses["fk_source_objects"] == source_objects["pk_source_objects"],
-        "left",
-    )
-    return j.select(
-        F.col("schema_name").cast("string"),
-        F.col("table_name").cast("string"),
-        F.col("category").cast("string").alias("column_category"),
-        F.col("business_key_name").cast("string"),
-        F.col("column_name").cast("string"),
-        F.col("column_type_name").cast("string"),
-        F.lit(system_id).cast("bigint").alias("system_id"),
-        F.col("table_oid").cast("bigint"),
-        F.col("column_ordinal_position").cast("int"),
-    )
+    (J7) + the system id (J6/S3). A ready row already carries its
+    latest response and its catalog row, so the joins are a projection."""
+    return [
+        {**{c: r[c] for c in _PULLED}, "column_category": r["category"], "system_id": system_id}
+        for r in ready
+    ]
 
 
 def assemble_business_keys(rows: list) -> list[BusinessKey]:

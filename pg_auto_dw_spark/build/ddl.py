@@ -46,12 +46,13 @@ _PG_TO_SPARK: dict[str, T.DataType] = {
 }
 
 
-def spark_type_for(type_name: str) -> T.DataType:
+def spark_type_for(type_name: str, column: str | None = None) -> T.DataType:
     """Map a catalog type-name string to a Spark type (F10 analog --
     the reference carries types as strings from format_type,
     model/queries.rs:100). Accepts both PG-ish names and Spark
     simpleString/DDL names (incl. complex types like array<float>):
-    the snapshot records simpleString, and a wrong fallback here would
+    the snapshot records simpleString. A name neither parses raises
+    ``ValueError`` naming it and ``column``: a string fallback would
     declare a satellite column as string while the loader writes the
     native type -- corrupting the table on the second read."""
     t = type_name.strip().lower()
@@ -73,8 +74,8 @@ def spark_type_for(type_name: str) -> T.DataType:
         # Spark DDL names: float, tinyint, binary, array<...>, map<...>,
         # struct<...> -- anything simpleString/format_type could emit.
         return T.DataType.fromDDL(t)
-    except Exception:
-        return T.StringType()
+    except Exception as e:
+        raise ValueError(f"unknown source type {type_name!r} of column {column!r}") from e
 
 
 def hub_schema(business_key: BusinessKey, partitioned: bool = False) -> T.StructType:
@@ -109,14 +110,9 @@ def satellite_schemas(
             T.StructField(f"sat_{key}_hd", T.StringType(), False),
         ]
         for d in descriptors:
-            src = d.descriptor_link.source_column
-            fields.append(
-                T.StructField(
-                    d.descriptor_link.alias,
-                    spark_type_for(src.column_type_name if src else "text"),
-                    True,
-                )
-            )
+            src, alias = d.descriptor_link.source_column, d.descriptor_link.alias
+            kind = spark_type_for(src.column_type_name if src else "text", alias)
+            fields.append(T.StructField(alias, kind, True))
         if partitioned:
             fields.append(T.StructField("load_date", T.DateType(), True))
         out[f"sat_{key}"] = T.StructType(fields)

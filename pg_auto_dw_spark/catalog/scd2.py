@@ -79,6 +79,11 @@ def ensure_table(wh: Warehouse) -> None:
     wh.create_table(TABLE, SOURCE_OBJECTS_SCHEMA)
 
 
+def tracked(rows: list[dict]) -> list[dict]:
+    """The current, non-deleted column versions among ``rows``."""
+    return [r for r in rows if r["current_flag"] == "Y" and r["deleted_flag"] == "N"]
+
+
 def _key(row: dict) -> tuple:
     return tuple(row[k] for k in KEYS)
 
@@ -121,9 +126,7 @@ def _merge(wh: Warehouse, snapshot: DataFrame, as_of, patterns=None) -> dict[str
             # keep = (keys currently tracked UNION keys matching include)
             #        EXCEPT keys matching exclude      (queries.rs:164-194)
             include, exclude = patterns
-            keep = {
-                _key(r) for r in rows if r["current_flag"] == "Y" and r["deleted_flag"] == "N"
-            }
+            keep = {_key(r) for r in tracked(rows)}
             keep |= {_key(r) for r in snap_rows if _matches(r, include)}
             keep -= {_key(r) for r in snap_rows if _matches(r, exclude)}
             snap_rows = [r for r in snap_rows if _key(r) in keep]

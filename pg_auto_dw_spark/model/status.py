@@ -1,24 +1,42 @@
-"""Status engine: latest-response resolution + window flags + CASE
+"""Status engine: latest-response resolution + per-table flags + CASE
 ladder (SURVEY.md W1/W2/A2/F4; reference: extension/src/model/
 queries.rs:441-532, identical prep inside insert_into_build_call at
 :324-415).
 
+Altitude: one pass on the driver, as the SCD2 merge (catalog/scd2.py).
+``auto_dw.source_objects`` holds one row per source-column version --
+about 10^4-10^6 rows even for a large warehouse -- and
+``auto_dw.transformer_responses`` one row per classification, so both
+are read with pyarrow (``Warehouse.read_arrow``) and the views go back
+to Spark as local relations, which collect without a Spark job.
+``source_column_df``, ``source_table_df`` and the go() ready set
+(``build.builder.ready_build_call_rows``) all read ``status_rows``.
+
 Exact-parity notes:
 
-- latest response per column is MAX(pk) + self-join (A2), kept as in
-  the reference instead of row_number so tie behavior is identical;
-- ``(confidence_score * 100)::INT::TEXT`` must be computed in decimal:
-  the score column is DECIMAL(3,2) end-to-end, because double
-  arithmetic (0.85*100 -> 84.999...) would truncate differently;
-- status_response uses null-propagating concat (Postgres ``||``), NOT
-  concat_ws.
+- the latest response per column is the one with MAX(pk) (A2), as the
+  reference's MAX(pk) + self-join, not the newest ``created_at``;
+- ``(confidence_score * 100)::INT::TEXT`` is computed in ``Decimal``
+  and truncated: in float, 0.29 * 100 is 28.999...;
+- status_response uses null-propagating concat (Postgres ``||``): a
+  NULL model_name, category or reason gives NULL, not '-';
+- comparisons follow SQL three-valued logic: a test with a NULL operand
+  is not true, so a NULL category with a passing score is 'Requires
+  Attention';
+- the threshold is parsed as ``cast(text AS decimal(3,2))`` parses it:
+  trimmed, rounded half-up to two places, an error where it does not
+  fit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from decimal import ROUND_HALF_UP, Decimal, InvalidOperation
+
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..catalog.scd2 import tracked
+from ..warehouse import local_frame
 
 TRANSFORMER_RESPONSES_SCHEMA = T.StructType(
     [
@@ -44,167 +62,128 @@ BUILD_CALL_SCHEMA = T.StructType(
     ]
 )
 
+_COLUMN_VIEW = ("schema", "table", "column", "status", "confidence_level", "status_response")
+SOURCE_COLUMN_SCHEMA = T.StructType([T.StructField(n, T.StringType()) for n in _COLUMN_VIEW])
+SOURCE_TABLE_SCHEMA = T.StructType(
+    [T.StructField(n, T.StringType()) for n in ("schema", "table", "status")]
+    + [T.StructField("n_columns", T.LongType())]
+)
+
 BKP = "Business Key Part"
+RTD = "Ready to Deploy"
+QUEUED = "Queued for Processing"
+ATTENTION = "Requires Attention"
+AWAIT_BK = "Awaiting Business Key (BK)"
+AWAIT_LINK = "Awaiting Link Implementation"
+# source_table's rollup: the least advanced column status names the table
+TABLE_STATUS = (ATTENTION, QUEUED, RTD + " - Awaiting", RTD)
 
 
-def latest_responses(responses: DataFrame) -> DataFrame:
-    """Latest transformer response per source column: MAX(pk) GROUP BY fk
-    then self-join (reference: queries.rs:332-340)."""
-    mx = responses.groupBy("fk_source_objects").agg(
-        F.max("pk_transformer_responses").alias("__max_pk")
-    )
-    return responses.join(
-        mx,
-        responses["pk_transformer_responses"] == mx["__max_pk"],
-        "inner",
-    ).drop("__max_pk", mx["fk_source_objects"])
+def threshold_decimal(text: str) -> Decimal:
+    """The confidence threshold as ``cast(text AS decimal(3,2))`` gives
+    it; raises ``ValueError`` where the (ANSI) cast raises."""
+    try:
+        d = Decimal(str(text).strip()).quantize(Decimal("0.01"), ROUND_HALF_UP)
+    except InvalidOperation:
+        d = Decimal("NaN")
+    if not d.is_finite() or abs(d) >= 10:
+        raise ValueError(f"confidence threshold {text!r} is not a decimal(3,2)")
+    return d
 
 
-def _pct(score: Column) -> Column:
-    # (score * 100)::INT::TEXT || '%' -- decimal-exact (queries.rs:385)
-    return F.concat(
-        (score * 100).cast("int").cast("string"), F.lit("%")
-    )
+def latest_responses(responses) -> dict:
+    """fk_source_objects -> its latest transformer response (a dict): the
+    one with MAX(pk) (reference: queries.rs:332-340)."""
+    latest: dict = {}
+    for r in responses.to_pylist():
+        cur = latest.get(r["fk_source_objects"])
+        if cur is None or r["pk_transformer_responses"] > cur["pk_transformer_responses"]:
+            latest[r["fk_source_objects"]] = r
+    return latest
 
 
-def status_prep(
-    source_objects: DataFrame, responses: DataFrame, threshold: str
-) -> DataFrame:
-    """source_object_status_prep + status ladder (queries.rs:341-438).
+def nulls_first(*names):
+    """Sort key over dict rows: ascending by ``names``, NULLs first (as
+    Spark's ``orderBy`` and ``array_sort``)."""
+    return lambda r: tuple((r[n] is not None, r[n]) for n in names)
 
-    threshold is the GUC string (e.g. "0.8"); compared in decimal.
-    """
-    thr = F.lit(threshold).cast("decimal(3,2)")
-    s = source_objects.filter(
-        (F.col("current_flag") == "Y") & (F.col("deleted_flag") == "N")
-    )
-    t = latest_responses(responses)
-    j = s.join(t, s["pk_source_objects"] == t["fk_source_objects"], "left")
 
-    w = Window.partitionBy("schema_name", "table_name")
-    bk_hold = F.max(
-        F.when(
-            (F.col("category") == BKP) & (F.col("confidence_score") < thr), 1
-        ).otherwise(0)
-    ).over(w)
-    bkp_cnt = F.sum(F.when(F.col("category") == BKP, 1).otherwise(0)).over(w)
+def _status(category, ready: bool, bk_hold: int, bkp_cnt: int) -> str:
+    """The ladder (queries.rs:366-382) for a scored column."""
+    if not ready or category is None:
+        return ATTENTION
+    hold = category != BKP and bk_hold == 1
+    if bkp_cnt > 1:  # composite key: links
+        return f"{RTD} - {AWAIT_BK}, {AWAIT_LINK}" if hold else f"{RTD} - {AWAIT_LINK}"
+    return f"{RTD} - {AWAIT_BK}" if hold else RTD
 
-    score = F.col("confidence_score")
-    cat = F.col("category")
-    prep = j.select(
-        s["pk_source_objects"],
-        "pk_transformer_responses",
-        "schema_name",
-        "table_name",
-        "column_name",
-        "column_ordinal_position",
-        "confidence_score",
-        "reason",
-        "category",
-        "model_name",
-        bk_hold.alias("bk_hold"),
-        bkp_cnt.alias("bkp_cnt"),
-    )
 
-    status = (
-        F.when(score.isNull(), "Queued for Processing")
-        # Links
-        .when(
-            (cat == BKP) & (score >= thr) & (F.col("bkp_cnt") > 1),
-            "Ready to Deploy - Awaiting Link Implementation",
+def status_rows(source_objects, responses, threshold: str) -> list[dict]:
+    """source_object_status_prep + the status ladder (queries.rs:341-438)
+    over the Arrow tables: one dict per current, non-deleted column, with
+    its catalog columns, its latest response's columns, ``bk_hold`` and
+    ``bkp_cnt`` (per schema + table), ``status``, ``confidence_level``
+    and ``status_response``. ``threshold`` is the setting's text."""
+    thr = threshold_decimal(threshold)
+    latest = latest_responses(responses)
+    blank = dict.fromkeys(responses.column_names)
+    rows = [
+        {**latest.get(s["pk_source_objects"], blank), **s}
+        for s in tracked(source_objects.to_pylist())
+    ]
+    flags: dict[tuple, tuple[int, int]] = {}
+    for r in rows:
+        key, bkp = (r["schema_name"], r["table_name"]), r["category"] == BKP
+        low = bkp and r["confidence_score"] is not None and r["confidence_score"] < thr
+        hold, cnt = flags.get(key, (0, 0))
+        flags[key] = (max(hold, int(low)), cnt + bkp)
+    for r in rows:
+        r["bk_hold"], r["bkp_cnt"] = flags[r["schema_name"], r["table_name"]]
+        score, cat = r["confidence_score"], r["category"]
+        if score is None:
+            r.update(status=QUEUED, confidence_level="-", status_response="-")
+            continue
+        ready = score >= thr
+        pct = f"{int(score * 100)}%"
+        r["status"] = _status(cat, ready, r["bk_hold"], r["bkp_cnt"])
+        r["confidence_level"] = pct
+        model, reason = r["model_name"], r["reason"]
+        r["status_response"] = (
+            None
+            if model is None or cat is None or reason is None
+            else f"Status: {RTD if ready else ATTENTION}: Model: {model} categorized this column "
+            f"as a {cat} with a confidence of {pct}.  Model Reasoning: {reason}"
         )
-        .when(
-            (cat != BKP) & (score >= thr) & (F.col("bk_hold") == 0) & (F.col("bkp_cnt") > 1),
-            "Ready to Deploy - Awaiting Link Implementation",
-        )
-        .when(
-            (cat != BKP) & (score >= thr) & (F.col("bk_hold") == 1) & (F.col("bkp_cnt") > 1),
-            "Ready to Deploy - Awaiting Business Key (BK), Awaiting Link Implementation",
-        )
-        # Hubs
-        .when((cat == BKP) & (score >= thr), "Ready to Deploy")
-        .when((cat != BKP) & (score >= thr) & (F.col("bk_hold") == 0), "Ready to Deploy")
-        .when(
-            (cat != BKP) & (score >= thr) & (F.col("bk_hold") == 1),
-            "Ready to Deploy - Awaiting Business Key (BK)",
-        )
-        .otherwise("Requires Attention")
-    )
-
-    confidence_level = F.when(score.isNotNull(), _pct(score)).otherwise(F.lit("-"))
-
-    inner_status = (
-        F.when(score.isNull(), "Queued for Processing")
-        .when(score >= thr, "Ready to Deploy")
-        .otherwise("Requires Attention")
-    )
-    # Postgres || propagates NULLs -> F.concat (not concat_ws)
-    status_response = F.when(
-        score.isNotNull(),
-        F.concat(
-            F.lit("Status: "),
-            inner_status,
-            F.lit(": "),
-            F.lit("Model: "),
-            F.col("model_name"),
-            F.lit(" categorized this column as a "),
-            cat,
-            F.lit(" with a confidence of "),
-            _pct(score),
-            F.lit(".  "),
-            F.lit("Model Reasoning: "),
-            F.col("reason"),
-        ),
-    ).otherwise(F.lit("-"))
-
-    return prep.withColumn("status", status).withColumn(
-        "confidence_level", confidence_level
-    ).withColumn("status_response", status_response)
+    return rows
 
 
-def source_column_df(
-    source_objects: DataFrame, responses: DataFrame, threshold: str
-) -> DataFrame:
+def source_column_df(source_objects, responses, threshold: str) -> DataFrame:
     """auto_dw.source_column() output (reference: src/lib.rs:113-151,
     queries.rs:441-532): 6 columns ordered by schema, table, ordinal."""
-    so = status_prep(source_objects, responses, threshold)
-    return so.orderBy("schema_name", "table_name", "column_ordinal_position").select(
-        F.col("schema_name").alias("schema"),
-        F.col("table_name").alias("table"),
-        F.col("column_name").alias("column"),
-        "status",
-        "confidence_level",
-        "status_response",
+    rows = sorted(
+        status_rows(source_objects, responses, threshold),
+        key=nulls_first("schema_name", "table_name", "column_ordinal_position"),
+    )
+    return local_frame(
+        SOURCE_COLUMN_SCHEMA,
+        [
+            (r["schema_name"], r["table_name"], r["column_name"], r["status"],
+             r["confidence_level"], r["status_response"])
+            for r in rows
+        ],
     )
 
 
-def source_table_df(
-    source_objects: DataFrame, responses: DataFrame, threshold: str
-) -> DataFrame:
+def source_table_df(source_objects, responses, threshold: str) -> DataFrame:
     """Table-grain rollup. The reference's source_table() is a hardcoded
     demo VALUES set (queries.rs:1-7, SURVEY U3); we return the real
     aggregation its docs describe: one row per table with the least-
-    advanced column status."""
-    so = status_prep(source_objects, responses, threshold)
-    rank = (
-        F.when(F.col("status") == "Requires Attention", 0)
-        .when(F.col("status") == "Queued for Processing", 1)
-        .when(F.col("status").startswith("Ready to Deploy - "), 2)
-        .otherwise(3)
-    )
-    ranked = so.withColumn("__rank", rank)
-    agg = ranked.groupBy("schema_name", "table_name").agg(
-        F.min("__rank").alias("__min_rank"), F.count(F.lit(1)).alias("n_columns")
-    )
-    status = (
-        F.when(F.col("__min_rank") == 0, "Requires Attention")
-        .when(F.col("__min_rank") == 1, "Queued for Processing")
-        .when(F.col("__min_rank") == 2, "Ready to Deploy - Awaiting")
-        .otherwise("Ready to Deploy")
-    )
-    return agg.select(
-        F.col("schema_name").alias("schema"),
-        F.col("table_name").alias("table"),
-        status.alias("status"),
-        "n_columns",
-    ).orderBy("schema", "table")
+    advanced column status, ordered by schema, table."""
+    tables: dict[tuple, tuple[int, int]] = {}
+    for r in status_rows(source_objects, responses, threshold):
+        s, key = r["status"], (r["schema_name"], r["table_name"])
+        rank = 2 if s.startswith(RTD + " - ") else TABLE_STATUS.index(s)
+        low, n = tables.get(key, (3, 0))
+        tables[key] = (min(low, rank), n + 1)
+    rows = [(*key, TABLE_STATUS[tables[key][0]], tables[key][1]) for key in tables]
+    return local_frame(SOURCE_TABLE_SCHEMA, sorted(rows, key=nulls_first(0, 1)))

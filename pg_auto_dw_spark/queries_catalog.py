@@ -939,7 +939,7 @@ def status_source_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .model.status import source_column_df
 
     return source_column_df(
-        source_objects_df(spark), transformer_responses_df(spark), "0.8"
+        source_objects_df(spark).toArrow(), transformer_responses_df(spark).toArrow(), "0.8"
     )
 
 
@@ -967,11 +967,15 @@ def status_source_column(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def status_window_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1/W2 whole-partition window flags in isolation (queries.rs:352-363)."""
-    from .model.status import status_prep
+    from .model.status import status_rows
 
-    return status_prep(
-        source_objects_df(spark), transformer_responses_df(spark), "0.8"
-    ).select("pk_source_objects", "bk_hold", F.col("bkp_cnt").cast("bigint").alias("bkp_cnt"))
+    rows = status_rows(
+        source_objects_df(spark).toArrow(), transformer_responses_df(spark).toArrow(), "0.8"
+    )
+    return spark.createDataFrame(
+        [(r["pk_source_objects"], r["bk_hold"], r["bkp_cnt"]) for r in rows],
+        "pk_source_objects bigint, bk_hold int, bkp_cnt bigint",
+    )
 
 
 @register(
@@ -989,11 +993,15 @@ def latest_transformer_responses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 latest-per-group via MAX(pk)+self-join (queries.rs:332-340)."""
     from .model.status import latest_responses
 
-    return latest_responses(transformer_responses_df(spark)).select(
-        "pk_transformer_responses",
-        "fk_source_objects",
-        "category",
-        F.col("confidence_score").cast("double").alias("confidence_score"),
+    latest = latest_responses(transformer_responses_df(spark).toArrow())
+    return spark.createDataFrame(
+        [
+            (r["pk_transformer_responses"], r["fk_source_objects"], r["category"],
+             float(r["confidence_score"]))
+            for r in latest.values()
+        ],
+        "pk_transformer_responses bigint, fk_source_objects bigint, category string, "
+        "confidence_score double",
     )
 
 
@@ -2878,7 +2886,8 @@ def pending_tables_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(100, 1, "2024-04-02"), (101, 3, "2024-05-02")],
         ["pk_transformer_responses", "fk_source_objects", "created_at"],
     )
-    return tables_requiring_transformation(so, tr)
+    pending = tables_requiring_transformation(so.toArrow(), tr.toArrow())
+    return spark.createDataFrame([(oid,) for oid in pending], "table_oid bigint")
 
 
 _PROMPT_SO_SQL = """
@@ -2939,7 +2948,7 @@ def source_table_prompt_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = spark.createDataFrame(
         [], "pk_transformer_responses BIGINT, fk_source_objects BIGINT, created_at STRING"
     )
-    return source_table_prompts(so, tr)
+    return source_table_prompts(so.toArrow(), tr.toArrow())
 
 
 @register(

@@ -1359,3 +1359,9 @@ def _arrow_table(schema: T.StructType, rows: list[tuple]):
             values = [f.dataType.toInternal(v) for v in values]
         arrays.append(pa.array(values, type=af.type))
     return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def local_frame(schema: T.StructType, rows: list[tuple]) -> DataFrame:
+    """Rows the driver holds as a DataFrame over a local relation of the
+    active session: collecting it runs no Spark job."""
+    return SparkSession.active().createDataFrame(_arrow_table(schema, rows))

@@ -214,8 +214,8 @@ def test_distributed_classification_matches_driver_side(spark, sf_dir, tmp_path)
     adw.register_source("main", "supplier", load_table(spark, sf_dir, "supplier"))
     adw.source_include("main")
 
-    so = adw.wh.read("auto_dw.source_objects")
-    tr = adw.wh.read("auto_dw.transformer_responses")
+    so = adw.wh.read_arrow("auto_dw.source_objects")
+    tr = adw.wh.read_arrow("auto_dw.transformer_responses")
     prompts = source_table_prompts(so, tr)
     dist = classify_prompts_distributed(prompts, DeterministicStub, "m").collect()
 

@@ -26,7 +26,18 @@ def test_spark_type_for_covers_spark_ddl_names(spark):
     assert spark_type_for("map<string,int>") == T.MapType(T.StringType(), T.IntegerType())
     assert spark_type_for("varchar(10)") == T.StringType()
     assert spark_type_for("numeric(3,2)") == T.DecimalType(3, 2)
-    assert spark_type_for("no_such_type") == T.StringType()
+    with pytest.raises(ValueError, match=r"'no_such_type' of column 'c'"):
+        spark_type_for("no_such_type", "c")
+
+
+def test_unknown_descriptor_type_fails_the_satellite_schema(spark):
+    """A type name no mapping parses names itself and its column instead
+    of declaring the satellite column as string."""
+    bk = business_key_from_spec(
+        "main", "t", "t", [("id", "bigint")], [("geom", "geometry_blob", False)]
+    )
+    with pytest.raises(ValueError, match=r"'geometry_blob' of column 'geom'"):
+        satellite_schemas(bk)
 
 
 def test_float_descriptor_satellite_roundtrips(spark, warehouse_dir, sf_dir):
