@@ -33,7 +33,9 @@ from .catalog.introspect import catalog_snapshot
 from .catalog.registry import SourceRegistry
 from .catalog.scd2 import SOURCE_OBJECTS_SCHEMA, crawl as scd2_crawl, tracked
 from .classify.client import Classifier, DeterministicStub
-from .classify.pending import source_table_prompts, tables_requiring_transformation
+# source_table_prompts stays importable here: callers look the
+# pending-prompt frame up on this module
+from .classify.pending import prompt_rows, source_table_prompts, tables_requiring_transformation  # noqa: F401
 from .functions.hashing import hash_text
 from .model.dv_schema import DVSchema
 from .model.status import (
@@ -158,14 +160,13 @@ class AutoDW:
         import json
 
         so, tr = self._metadata()
-        prompts = source_table_prompts(so, tr).collect()
         all_rows = []
-        for p in prompts:
+        for _, column_links, details in prompt_rows(so, tr):
             links = {
                 link["Column Ordinal Position"]: link["PK Source Objects"]
-                for link in json.loads(p["table_column_links"])["Column Links"]
+                for link in json.loads(column_links)["Column Links"]
             }
-            all_rows.extend(self.classifier.classify_table(p["table_details"], links))
+            all_rows.extend(self.classifier.classify_table(details, links))
         if not all_rows:
             return 0
         # apply update_context() sensitivity overrides (U6): context on

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .registry import SourceRegistry, synthetic_oid
-from ..warehouse import _arrow_table
+from ..warehouse import local_frame
 
 SNAPSHOT_SCHEMA = T.StructType(
     [
@@ -90,4 +90,4 @@ def catalog_snapshot(
                     1 if fld.name in meta.fk_columns else 0,
                 )
             )
-    return spark.createDataFrame(_arrow_table(SNAPSHOT_SCHEMA, rows))
+    return local_frame(SNAPSHOT_SCHEMA, rows, spark)

@@ -22,8 +22,9 @@ Altitude: the table is column-grain metadata -- one row per source
 column, hundreds to thousands -- just like the reference's, which a
 background worker merges in-process every 10 s. So the pass runs on the
 driver, as the snapshot itself is built there: the live files are read
-with pyarrow (``Warehouse.read_arrow``), the snapshot frame is a local
-relation (collecting it runs no Spark job), and the result is committed
+with pyarrow (``Warehouse.read_arrow``), the snapshot's rows come from
+the Arrow table behind its local relation (``warehouse.driver_rows``: no
+call into the JVM; any other frame is collected), and the result is committed
 as one parquet file in a fresh generation (``Warehouse.overwrite_rows``).
 A crawl that changes nothing commits nothing. The data-grain SCD2 of a
 dimension is a different animal and stays distributed
@@ -39,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .introspect import SNAPSHOT_SCHEMA
-from ..warehouse import Warehouse
+from ..warehouse import Warehouse, driver_rows
 
 TABLE = "auto_dw.source_objects"
 KEYS = ["schema_oid", "table_oid", "column_ordinal_position"]
@@ -114,7 +115,7 @@ def merge_snapshot(
 def _merge(wh: Warehouse, snapshot: DataFrame, as_of, patterns=None) -> dict[str, int]:
     """The merge, optionally after the include/exclude filter of
     ``crawl`` (``patterns`` = compiled (include, exclude))."""
-    snap_rows = [r.asDict() for r in snapshot.select(*SNAPSHOT_SCHEMA.names).collect()]
+    snap_rows = driver_rows(snapshot, SNAPSHOT_SCHEMA.names)
     ensure_table(wh)
     # Postgres-transaction parity: the whole read-compute-write cycle
     # holds the table lock, so two concurrent merges serialize instead

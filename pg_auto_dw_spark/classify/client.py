@@ -308,13 +308,9 @@ class DeterministicStub:
 
     @staticmethod
     def _details(prompt: str) -> dict:
-        start = prompt.index('{"Schema Name"')
-        depth = 0
-        for i in range(start, len(prompt)):
-            depth += {"{": 1, "}": -1}.get(prompt[i], 0)
-            if depth == 0:
-                return json.loads(prompt[start : i + 1])
-        raise ValueError("no details JSON found")
+        """The table-details JSON object the prompt embeds (ValueError
+        when there is none)."""
+        return json.JSONDecoder().raw_decode(prompt, prompt.index('{"Schema Name"'))[0]
 
     @staticmethod
     def _column_facts(details: dict, col_no: int):

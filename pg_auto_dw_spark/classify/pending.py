@@ -10,9 +10,11 @@ by ordinal position (array_agg ORDER BY).
 Altitude: one pass on the driver over the Arrow tables
 (``Warehouse.read_arrow``), as the status engine (model/status.py):
 ``auto_dw.source_objects`` holds one row per source-column version,
-about 10^4-10^6 rows even for a large warehouse. The prompts go back to
-Spark as a local relation, which collects without a Spark job. The JSON
-is byte for byte what Spark's ``to_json`` wrote for the same rows.
+about 10^4-10^6 rows even for a large warehouse. ``classify_pending``
+hands ``prompt_rows`` straight to the classifier; ``source_table_prompts``
+returns them to Spark as a local relation, which collects without a
+Spark job. The JSON is byte for byte what Spark's ``to_json`` wrote for
+the same rows.
 """
 
 from __future__ import annotations
@@ -85,6 +87,11 @@ def _details(c: dict) -> str | None:
 
 
 def source_table_prompts(source_objects, responses) -> DataFrame:
+    """``prompt_rows`` as a DataFrame of ``PROMPT_SCHEMA``."""
+    return local_frame(PROMPT_SCHEMA, prompt_rows(source_objects, responses))
+
+
+def prompt_rows(source_objects, responses) -> list[tuple]:
     """One row per pending table: (table_oid, table_column_links JSON,
     table_details JSON) -- mirrors queries.rs:25-62 including the
     'Column No: N Named: ... of type: ...' detail format the client's
@@ -117,7 +124,7 @@ def source_table_prompts(source_objects, responses) -> DataFrame:
             ("Column Details", [d["det"] for d in details]),
         )
         rows.append((oid, _to_json({"Column Links": link_json}), _to_json(table_json)))
-    return local_frame(PROMPT_SCHEMA, rows)
+    return rows
 
 
 def _fields(*pairs) -> dict:

@@ -54,6 +54,7 @@ import fcntl
 import os
 import shutil
 import uuid
+import weakref
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -1361,7 +1362,28 @@ def _arrow_table(schema: T.StructType, rows: list[tuple]):
     return pa.Table.from_arrays(arrays, schema=arrow_schema)
 
 
-def local_frame(schema: T.StructType, rows: list[tuple]) -> DataFrame:
-    """Rows the driver holds as a DataFrame over a local relation of the
-    active session: collecting it runs no Spark job."""
-    return SparkSession.active().createDataFrame(_arrow_table(schema, rows))
+# The Arrow table behind each frame ``local_frame`` made, for as long as
+# the frame lives: a driver pass handed one of them reads it back here
+# instead of collecting it through the JVM.
+_LOCAL_TABLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def local_frame(schema: T.StructType, rows: list[tuple], spark=None) -> DataFrame:
+    """Rows the driver holds as a DataFrame over a local relation of
+    ``spark`` (default: the active session): collecting it runs no
+    Spark job."""
+    table = _arrow_table(schema, rows)
+    df = (spark or SparkSession.active()).createDataFrame(table)
+    _LOCAL_TABLES[df] = table
+    return df
+
+
+def driver_rows(df: DataFrame, columns: list[str]) -> list[dict]:
+    """``columns`` of every row of ``df`` as dicts. A frame ``local_frame``
+    made is read from its Arrow table, with no call into the JVM; any
+    other frame is collected. For frames without timestamp columns (Arrow
+    hands those back zone-aware, ``collect`` naive)."""
+    table = _LOCAL_TABLES.get(df)
+    if table is not None:
+        return table.select(columns).to_pylist()
+    return [r.asDict() for r in df.select(*columns).collect()]

@@ -80,6 +80,28 @@ def test_noop_crawl_commits_nothing(spark, warehouse_dir):
     assert (wh.data_files(TABLE), wh.history(TABLE)) == state
 
 
+def test_merge_reads_a_local_snapshot_without_collecting(spark, warehouse_dir, monkeypatch):
+    """The frame catalog_snapshot makes is read back from its Arrow
+    table; a frame of the same rows from anywhere else is collected,
+    and both merges land the same rows."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    tables = {"t1": "a int, b string", "t2": "c int"}
+    local, other = _snapshot(spark, tables), _snapshot(spark, tables).select("*")
+    collect = DataFrame.collect
+
+    def no_collect(df):
+        raise AssertionError("the merge collected its snapshot")
+
+    monkeypatch.setattr(DataFrame, "collect", no_collect)
+    wh_local = Warehouse(spark, os.path.join(warehouse_dir, "local"))
+    assert crawl(wh_local, local, include=("s", ".*", ".*"), as_of=AS_OF)["inserted"] == 3
+    monkeypatch.setattr(DataFrame, "collect", collect)
+    wh_other = Warehouse(spark, os.path.join(warehouse_dir, "other"))
+    assert crawl(wh_other, other, include=("s", ".*", ".*"), as_of=AS_OF)["inserted"] == 3
+    assert wh_local.read_arrow(TABLE).equals(wh_other.read_arrow(TABLE))
+
+
 @pytest.mark.parametrize("side", ["include", "exclude"])
 def test_bad_pattern_raises_before_any_io(spark, warehouse_dir, side):
     wh = Warehouse(spark, warehouse_dir)

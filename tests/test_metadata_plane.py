@@ -249,6 +249,19 @@ def test_catalog_cycle_runs_no_spark_job(spark, classified):
     assert note["category"] == "Descriptor - Sensitive"
 
 
+def test_classify_pending_builds_no_frame(spark, classified, monkeypatch):
+    """The prompts go from the driver pass straight to the classifier:
+    classify_pending hands nothing to the JVM."""
+    classified.register_source("s", "t2", spark.createDataFrame([], "t_id bigint, note string"))
+    classified.crawl()
+
+    def no_frame(*_, **__):
+        raise AssertionError("classify_pending made a DataFrame")
+
+    monkeypatch.setattr(type(spark), "createDataFrame", no_frame)
+    assert classified.classify_pending() == 2
+
+
 def test_go_plan_runs_no_spark_job(spark, classified):
     (rows, business_keys), jobs = _jobs(
         spark.sparkContext, "plan-no-jobs", lambda: classified._plan("b1")
