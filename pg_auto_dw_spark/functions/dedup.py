@@ -158,18 +158,24 @@ def minhash_lsh_candidates(
        bucket stays one connected component for downstream dedup
        clustering, so no duplicate escapes the cap.
     """
-    bands = lsh_band_keys_wide(
-        minhash_signatures_wide(df, text_col, id_col, num_hashes, shingle_k),
-        id_col,
-        band_size,
     # Pin the band table: it is read 2x below (sizes + join); without a
     # pin each read would recompute the md5-per-shingle lineage. Lazy
     # localCheckpoint (RDD block pin), not persist: the r5 plan-keyed
     # SQL cache was measured 2x slower per call under the driver bench
     # (columnar cache-build cost + storage-pool eviction churn) -- see
     # similarity.brute_force_topk for the full post-mortem.
-    ).localCheckpoint(eager=False)
+    bands = _band_table(df, text_col, id_col, num_hashes, band_size, shingle_k)
+    bands = bands.localCheckpoint(eager=False)
     return band_pair_candidates(bands, id_col=id_col, max_bucket_size=max_bucket_size)
+
+
+def _band_table(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, band_size: int, shingle_k: int
+) -> DataFrame:
+    """(id, band, band_key) of each doc: its MinHash signature's band keys."""
+    return lsh_band_keys_wide(
+        minhash_signatures_wide(df, text_col, id_col, num_hashes, shingle_k), id_col, band_size
+    )
 
 
 def band_pair_candidates(
@@ -240,11 +246,14 @@ def lsh_hot_bucket_stats(
 
     Output: (band, band_key, n, pairs_exact, pairs_emitted,
     pairs_suppressed); empty when no bucket exceeds the cap."""
-    bands = lsh_band_keys_wide(
-        minhash_signatures_wide(df, text_col, id_col, num_hashes, shingle_k),
-        id_col,
-        band_size,
-    )
+    bands = _band_table(df, text_col, id_col, num_hashes, band_size, shingle_k)
+    return _over_cap_buckets(bands, max_bucket_size)
+
+
+def _over_cap_buckets(bands: DataFrame, max_bucket_size: int) -> DataFrame:
+    """``lsh_hot_bucket_stats``' rows over a band table (id, band,
+    band_key): each bucket of more than ``max_bucket_size`` ids, with
+    its all-pairs count, the star fallback's n-1 and the difference."""
     n = F.col("n")
     return (
         bands.groupBy("band", "band_key")
@@ -291,105 +300,72 @@ def _union_find(edges) -> tuple[list, list]:
     return ids, [find(x) for x in ids]
 
 
-def _partition_local_labels(edges: DataFrame, id_col: str) -> DataFrame:
-    """(id, label): the min id of each edge endpoint's PARTITION-LOCAL
-    connected component, from one ``_union_find`` pass per partition of
-    the src-repartitioned symmetric edge set (so every node's full star
-    is in one partition and its seed is at least the closed-neighborhood
-    min). A node also appearing as dst in other partitions carries
-    several local seeds; min() keeps the smallest -- every seed is an
-    id from the node's own component, so any choice is a valid label.
-    A 128 MB edge partition is a few seconds of Python -- the price of
-    skipping ~2 global shuffle rounds over the same edges."""
-    import pandas as pd
+def _star_labels(pairs: DataFrame, id_col: str) -> DataFrame:
+    """(id_col, label) for every endpoint of ``pairs``: alternating
+    large-star and small-star rounds (Kiveris et al., SoCC 2014) over
+    the undirected edges, each stored once as (hi, lo) with hi > lo,
+    until a round changes no edge; every component is then a star
+    around its min id. Raises RuntimeError after ``CC_MAX_ROUNDS``
+    rounds without converging.
 
-    id_t = edges.schema["src"].dataType.simpleString()
+    A round is two window mins, two explodes and a distinct, and no step
+    grows the size estimate that the round's checkpoint carries into the
+    next one: a union would double it every round, a self-join would
+    square it."""
+    hi, lo, m = F.col("hi"), F.col("lo"), F.col("m")
 
-    def body(batches):
-        ids, labels = _union_find(
-            pair
-            for pdf in batches
-            for pair in zip(pdf["src"].tolist(), pdf["dst"].tolist())
-        )
-        if ids:
-            yield pd.DataFrame({"id": ids, "label": labels})
+    def fan(df, *rows):
+        """Each row of ``df`` as one (hi, lo) row per (hi, lo) in ``rows``.
+        The array gets its own projection: an explode passes its input's
+        size estimate through, which would keep a window's extra column."""
+        links = [F.struct(a.alias("hi"), b.alias("lo")) for a, b in rows]
+        fans = df.select(F.array(*links).alias("e"))
+        return fans.select(F.explode("e").alias("e")).select("e.*")
 
-    return (
-        edges.repartition("src")
-        .mapInPandas(body, f"id {id_t}, label {id_t}")
-        .groupBy(F.col("id").alias(id_col))
-        .agg(F.min("label").alias("label"))
-        .localCheckpoint(eager=False)
-    )
-
-
-def _pointer_jump_labels(pairs: DataFrame, id_col: str) -> DataFrame:
-    """(id_col, label) for every endpoint of ``pairs`` as DataFrame
-    rounds: a ``_partition_local_labels`` seed, then per round the min
-    label over graph neighbors and self in one join + aggregation,
-    followed by a pointer jump (label <- label(label)), until a round
-    changes no label. Raises RuntimeError after ``CC_MAX_ROUNDS``
-    rounds without a zero-change round."""
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+    undirected = (
+        pairs.select(F.greatest("id_a", "id_b").alias("hi"), F.least("id_a", "id_b").alias("lo"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    labels = _partition_local_labels(edges, id_col)
+    edges = undirected.filter(hi != lo)
     for _ in range(CC_MAX_ROUNDS):
-        # the node's own previous label rides the aggregation as extra
-        # union rows (src, label, own=label) next to the neighbor rows
-        # (src, label, own=NULL): min(label) is the new label and
-        # min(own) recovers the old one for the change count. Every dst
-        # is active, so the join stays inner; min() partial-aggregates
-        # map-side.
-        own_t = labels.schema["label"].dataType
-        contrib = (
-            edges.join(labels, edges["dst"] == labels[id_col])
-            .select("src", "label", F.lit(None).cast(own_t).alias("own"))
-            .unionByName(
-                labels.select(
-                    F.col(id_col).alias("src"),
-                    F.col("label"),
-                    F.col("label").alias("own"),
-                )
-            )
+        # large star over the (node, neighbor) adjacency: each bigger
+        # neighbor of a node links to the min of its closed neighborhood
+        large = (
+            fan(edges, (hi, lo), (lo, hi))
+            .withColumn("m", F.least(hi, F.min(lo).over(Window.partitionBy("hi"))))
+            .filter(lo > hi)
+            .select(lo.alias("hi"), m.alias("lo"))
         )
+        # small star: a node and its smaller neighbors link to their min
+        small = large.withColumn("m", F.min(lo).over(Window.partitionBy("hi")))
         stepped = (
-            contrib.groupBy("src")
-            .agg(F.min("label").alias("label"), F.min("own").alias("old"))
-            .select(F.col("src").alias(id_col), F.col("old"), F.col("label"))
-            .localCheckpoint(eager=False)  # read by both sides of the jump
-        )
-        # pointer jump: label <- label(label) (labels only ever shrink,
-        # so jumping through the previous round's table is safe; a
-        # label is always an ACTIVE member's id, so the lookup is inner)
-        parent = stepped.select(
-            F.col(id_col).alias("p_id"), F.col("label").alias("p_label")
-        )
-        jumped = (
-            stepped.join(parent, stepped["label"] == parent["p_id"])
-            .select(
-                F.col(id_col),
-                F.col("old"),
-                F.least(F.col("label"), F.col("p_label")).alias("label"),
-            )
+            fan(small, (hi, m), (lo, m))
+            .filter(hi != lo)
+            .distinct()
             .localCheckpoint(eager=False)
         )
-        changed = jumped.filter(F.col("old") != F.col("label")).count()
-        labels = jumped.select(F.col(id_col), F.col("label"))
+        # both sets are distinct: an edge counted once is in only one
+        changed = edges.union(stepped).groupBy("hi", "lo").count().filter("count = 1").count()
+        edges = stepped
         if changed == 0:
-            return labels
+            # (lo, lo) labels each star's center; self-loop-only ids
+            # label themselves
+            return (
+                fan(edges, (hi, lo), (lo, lo))
+                .union(undirected.filter(hi == lo))
+                .groupBy(hi.alias(id_col))
+                .agg(F.min("lo").alias("label"))
+            )
     raise RuntimeError(
         f"connected_components did not converge in {CC_MAX_ROUNDS} rounds "
-        f"({changed} labels still changed in the last round)"
+        f"({changed} edges still changed in the last round)"
     )
 
 
 # Round cap of the Spark regime; hitting it means a pathological graph.
-# For scale: a graph whose longest chain has 56 nodes over shuffled ids
-# converges in 15 rounds when spread over 8 shuffle partitions.
+# For scale: shuffled-id chains of 56, 1,000 and 4,000 nodes converge in
+# 6, 10 and 11 rounds, the last round being the one that changes nothing.
 CC_MAX_ROUNDS = 25
 # Most ``pairs`` rows clustered on the driver (see connected_components).
 CC_DRIVER_EDGES = 1_000_000
@@ -411,17 +387,17 @@ def connected_components(
       back as a single-chunk Arrow local relation. No further job: with
       ``nodes=None`` the result collects without one.
     - **Spark** (more rows than ``CC_DRIVER_EDGES``): nothing more is
-      collected. Labels are seeded by a partition-local union-find, then
-      min-label rounds with pointer jumping run until a round changes
-      nothing, each round one change-count action (the min-label shape
-      of Kiveris et al., SoCC 2014). Raises RuntimeError when
+      collected. Alternating large-star/small-star rounds of plain
+      DataFrame operations (``_star_labels``, Kiveris et al., SoCC 2014)
+      run until a round changes no edge, each round one change-count
+      action; no Python runs on the workers. Raises RuntimeError when
       ``CC_MAX_ROUNDS`` rounds end without converging: unconverged
       labels would silently split clusters.
 
     The bound, 10^6 rows, is the largest size measured. On 4 cores over
     seeded graphs of 2-8-node chains, both regimes gave the same rows
-    and the driver one won at every size tried: 0.46 vs 2.28 s at
-    3*10^4 edges, 7.6 vs 17.9 s at 10^6, where driver peak RSS rose
+    and the driver one won at every size tried: 0.43 vs 4.4 s at
+    3*10^4 edges, 9.7 vs 16.8 s at 10^6, where driver peak RSS rose
     112 MB.
 
     ``nodes`` (default: ids appearing in pairs) adds singleton docs, via
@@ -443,7 +419,7 @@ def connected_components(
             pa.table({id_col: pa.array(ids, id_t), "label": pa.array(roots, id_t)})
         )
     else:
-        labels = _pointer_jump_labels(pairs, id_col)
+        labels = _star_labels(pairs, id_col)
     if nodes is None:
         out = labels
     else:

@@ -700,10 +700,11 @@ def _commit(wh, appends: list) -> list[int]:
 
 def _land(wh, table: str, batch_id: int, stage: Callable[[list], object]):
     """Replay guard: None when ``batch_id`` is already in
-    ``<table>.ingest_log``; otherwise ``stage(ledger_appends)``, which
+    ``<table>.ingest_log`` (a metadata-sized ledger, read on the driver
+    without a Spark job); otherwise ``stage(ledger_appends)``, which
     must hand the ledger appends to its ``_commit``, and its result."""
     ledger = f"{table}.ingest_log"
-    if wh.exists(ledger) and wh.read(ledger).filter(F.col("batch_id") == batch_id).count():
+    if wh.exists(ledger) and batch_id in wh.read_arrow(ledger)["batch_id"].to_pylist():
         return None
     row = wh.spark.createDataFrame([(int(batch_id),)], "batch_id bigint")
     return stage([(ledger, row)])
@@ -1558,6 +1559,7 @@ def neardup_ingest_apply(
     byte-identical resubmissions.
     """
     from ..functions.dedup import (
+        _over_cap_buckets,
         band_pair_candidates,
         lsh_band_keys_wide,
         minhash_signatures_wide,
@@ -1625,21 +1627,7 @@ def neardup_ingest_apply(
     # (`lsh_hot_bucket_stats` semantics: star fallback emits n-1 pairs)
     monitor = None
     if monitor_table is not None:
-        nn = F.col("n")
-        monitor = (
-            bands.groupBy("band", "band_key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(nn > max_probe_bucket)
-            .select(
-                "band", "band_key", nn,
-                (nn * (nn - 1) / 2).cast("long").alias("pairs_exact"),
-                (nn - 1).cast("long").alias("pairs_emitted"),
-                ((nn * (nn - 1) / 2) - (nn - 1))
-                .cast("long")
-                .alias("pairs_suppressed"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        monitor = _over_cap_buckets(bands, max_probe_bucket).localCheckpoint(eager=True)
     within_cand = band_pair_candidates(
         bands, id_col=id_col, max_bucket_size=max_probe_bucket
     )

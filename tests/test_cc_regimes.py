@@ -1,7 +1,9 @@
 """connected_components' two regimes: the driver union-find (the pairs
-fit in ``CC_DRIVER_EDGES``) and the Spark pointer-jump rounds (they do
-not). Both must give the same rows on every graph shape; the bound
-picks the regime; the driver regime costs one Spark job."""
+fit in ``CC_DRIVER_EDGES``) and the Spark large-star/small-star rounds
+(they do not). Both must give the same rows on every graph shape,
+self-loops and long chains included; the bound picks the regime; the
+driver regime costs one Spark job; the Spark rounds run no Python and
+keep the plan's size estimate flat however many rounds they take."""
 
 import random
 import time
@@ -14,8 +16,8 @@ from pg_auto_dw_spark.functions import dedup
 from tests.test_catalog_crawl import _wait_for_listener
 
 DRIVER, SPARK = 10**9, 0
-# the Spark regime spread over several partitions, so the seed is only
-# partition-local and the round loop does real work
+# the Spark regime spread over several partitions, so each round's
+# window mins and distinct shuffle across partitions
 SPREAD = {
     "spark.sql.shuffle.partitions": "8",
     "spark.sql.adaptive.coalescePartitions.enabled": "false",
@@ -58,6 +60,13 @@ def _graph(seed: int):
     return edges, take(6)
 
 
+def _chain(n: int, seed: int):
+    """Edges of one n-node chain over shuffled ids, in random orientation."""
+    rng = random.Random(seed)
+    ids = rng.sample(range(100_000), n)
+    return [(a, b) if rng.random() < 0.5 else (b, a) for a, b in zip(ids, ids[1:])]
+
+
 def _expected(edges, node_ids):
     """(id, min id of its component) by breadth-first search."""
     adj = defaultdict(set)
@@ -86,7 +95,7 @@ def _run(monkeypatch, bound, pairs, nodes=None, id_col="doc_id"):
 
 @pytest.mark.parametrize("seed, spread_out", [(3, True), (17, False)])
 def test_regimes_agree_on_seeded_graphs(request, spark, monkeypatch, seed, spread_out):
-    if spread_out:  # seed 3 has a 56-node chain: 15 rounds, the costliest case
+    if spread_out:  # seed 3 has a 56-node chain: 6 rounds, the costliest case
         request.getfixturevalue("spread")
     edges, isolated = _graph(seed)
     pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
@@ -136,15 +145,77 @@ def test_regimes_agree_on_non_ascii_string_ids(spark, spread, monkeypatch):
     assert _run(monkeypatch, SPARK, pairs, nodes, "key") == want
 
 
+@pytest.mark.parametrize(
+    "edges",
+    [
+        # an id whose only pair is a self-loop is still an edge endpoint
+        pytest.param([(7, 7), (3, 2), (2, 2), (5, 9), (9, 9)], id="self-loops"),
+        # converges under CC_MAX_ROUNDS (the Spark regime raises otherwise)
+        pytest.param(_chain(1_000, 5), id="chain-1000"),
+    ],
+)
+def test_regimes_agree_on_endpoints_only(spark, spread, monkeypatch, edges):
+    pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+    want = _expected(edges, [])
+    assert _run(monkeypatch, SPARK, pairs) == want
+    assert _run(monkeypatch, DRIVER, pairs) == want
+
+
+@pytest.fixture
+def pins(spark, monkeypatch):
+    """Physical plans of the frames pinned with localCheckpoint, in order."""
+    cls = type(spark.range(1))
+    pin = cls.localCheckpoint
+    plans = []
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return pin(df, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return plans
+
+
+def test_spark_regime_plans_no_python(spark, monkeypatch, pins):
+    """No pinned round and no result plan holds a Python node, so no
+    worker has to import this package."""
+    pairs = spark.createDataFrame(_chain(20, 1), "id_a bigint, id_b bigint")
+    nodes = spark.range(30).select(F.col("id").alias("doc_id"))
+    monkeypatch.setattr(dedup, "CC_DRIVER_EDGES", SPARK)
+    out = dedup.connected_components(pairs, nodes=nodes)
+    plans = pins + [out._jdf.queryExecution().executedPlan().toString()]
+    assert len(plans) > 3
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert not [p for p in plans if node in p], node
+
+
+def test_spark_regime_size_estimate_does_not_grow_with_rounds(spark, monkeypatch, pins):
+    """Each round's pin carries its plan's size estimate into the next
+    round, so a round that doubled it (a union) or squared it (a join of
+    the pinned frame with itself) would compound. A star and a shuffled
+    chain with as many edges get the same estimate, though the chain
+    takes more rounds."""
+    monkeypatch.setattr(dedup, "CC_DRIVER_EDGES", SPARK)
+
+    def estimate(edges):
+        pins.clear()
+        pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+        out = dedup.connected_components(pairs)
+        return len(pins), out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+    star_pins, star = estimate([(0, i) for i in range(1, 64)])
+    chain_pins, chain = estimate(_chain(64, 5))
+    assert chain_pins > star_pins + 2
+    assert chain == star
+
+
 @pytest.mark.parametrize("rows, spark_regime", [(3, False), (4, True)])
 def test_bound_picks_the_regime(spark, monkeypatch, rows, spark_regime):
     """Exactly ``CC_DRIVER_EDGES`` pairs rows stay on the driver; one
     more takes the Spark rounds."""
     calls = []
-    rounds = dedup._pointer_jump_labels
-    monkeypatch.setattr(
-        dedup, "_pointer_jump_labels", lambda *a: calls.append(a) or rounds(*a)
-    )
+    rounds = dedup._star_labels
+    monkeypatch.setattr(dedup, "_star_labels", lambda *a: calls.append(a) or rounds(*a))
     pairs = spark.createDataFrame([(i, i + 1) for i in range(rows)], "id_a bigint, id_b bigint")
     assert _run(monkeypatch, 3, pairs) == [(i, 0) for i in range(rows + 1)]
     assert bool(calls) == spark_regime

@@ -478,9 +478,9 @@ def test_global_row_number_both_paths(spark, sf_dir):
 
 @pytest.mark.parametrize("bound", [0, 10**9], ids=["spark", "driver"])
 def test_connected_components_chain_clique_singleton(spark, monkeypatch, bound):
-    """Min-label clustering in both regimes: a 40-node chain (worst case
-    for plain propagation -- pointer jumping must converge it within the
-    round budget), a clique, and singletons from the node set."""
+    """Min-id clustering in both regimes: a 40-node chain (the Spark
+    rounds must converge it within the round budget), a clique, and
+    singletons from the node set."""
     from pg_auto_dw_spark.functions import dedup
     from pg_auto_dw_spark.functions.dedup import connected_components
 
@@ -506,8 +506,9 @@ def test_connected_components_chain_clique_singleton(spark, monkeypatch, bound):
 
 def test_connected_components_raises_at_round_cap(spark, monkeypatch):
     """Unconverged labels would silently split clusters, so hitting the
-    round cap raises. A 5-node chain spread over 8 hash partitions
-    defeats the partition-local seed and needs exactly two rounds."""
+    round cap raises. A 5-node chain needs exactly three large-star/
+    small-star rounds: two to fold it into a star, one that changes
+    nothing."""
     import pytest
 
     from pg_auto_dw_spark.functions import dedup
@@ -517,22 +518,11 @@ def test_connected_components_raises_at_round_cap(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(4)], "id_a: bigint, id_b: bigint"
     )
-    confs = {
-        "spark.sql.shuffle.partitions": "8",
-        "spark.sql.adaptive.coalescePartitions.enabled": "false",
-    }
-    saved = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
-        with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
-            dedup.connected_components(pairs)
-        monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 2)
-        got = dedup.connected_components(pairs).collect()
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        dedup.connected_components(pairs)
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 3)
+    got = dedup.connected_components(pairs).collect()
     assert sorted(r["doc_id"] for r in got) == list(range(5))
     assert {r["cluster_id"] for r in got} == {0}
 

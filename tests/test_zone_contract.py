@@ -8,7 +8,8 @@ zones in streaming/jobs.py:
 - with ``maintenance_every=1`` every table the zone maintains is
   compacted after a committed batch. The plain/gated and semantic
   decontam zones take no maintenance options, so only the other four
-  are checked for it."""
+  are checked for it;
+- the replay check itself (``_land``) runs no Spark job."""
 
 import json
 
@@ -140,3 +141,21 @@ def test_maintenance_compacts_every_listed_table(spark, tmp_path, zone):
     )
     for t in maintained:
         assert "overwrite" in [h["action"] for h in wh.history(t)], t
+
+
+def test_replay_check_runs_no_spark_job(spark, tmp_path):
+    from tests.test_catalog_crawl import _wait_for_listener
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    assert jobs._land(wh, "z", 0, lambda appends: jobs._commit(wh, appends)) == [1]
+    staged = []
+    sc = spark.sparkContext
+    sc.setJobGroup("replay-no-jobs", "replay-no-jobs")
+    try:
+        assert jobs._land(wh, "z", 0, staged.append) is None
+        jobs._land(wh, "z", 1, staged.append)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    _wait_for_listener(sc)
+    assert list(sc.statusTracker().getJobIdsForGroup("replay-no-jobs")) == []
+    assert [[t for t, _ in appends] for appends in staged] == [["z.ingest_log"]]

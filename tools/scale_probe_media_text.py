@@ -4,8 +4,8 @@ What must hold at 100 TB: assembly wall tracks LINK volume (two
 equi-joins + the documents join are all shuffle-or-broadcast on narrow
 keys) and the bipartite pair-group CC tracks the DISTINCT
 (media_cluster, text_cluster) edge count with a CONSTANT round count
-(min-label propagation converges in O(log diameter); caption graphs
-are star-shaped, diameter ~2). Nothing here may scale with the cross
+(large-star/small-star rounds converge in O(log diameter) rounds;
+caption graphs are star-shaped, diameter ~2). Nothing here may scale with the cross
 product of media x documents.
 
 Frames constructed directly (the probe measures the assembly path,
