@@ -286,8 +286,10 @@ class AutoDW:
         """Build-test-rollback (docs go.md): assemble the ready set and
         render the DDL that WOULD run plus planned load counts; nothing
         is persisted (build_call/dv_repo untouched, no tables created)."""
+        import pyarrow.compute as pc
+
         from .build.ddl import hub_ddl_sql, satellite_ddl_sql
-        from .build.loader import hub_stage_df
+        from .build import loader
 
         _, business_keys = self._plan("dry-run")
         ddl: list[str] = []
@@ -295,7 +297,13 @@ class AutoDW:
         for bk in business_keys:
             ddl.append(hub_ddl_sql(self.dw_schema, bk))
             ddl.extend(satellite_ddl_sql(self.dw_schema, bk).values())
-            n = hub_stage_df(self.resolve_source(*bk.source_table()), bk).count()
+            source = self.resolve_source(*bk.source_table())
+            # distinct hub keys: from the one staging read when it fits
+            staged = loader.staged_rows(source, bk)
+            if staged is None:
+                n = loader.hub_stage_df(source, bk).count()
+            else:
+                n = pc.count_distinct(staged[f"hub_{bk.name}"][f"hub_{bk.name}_hk"]).as_py()
             plan.append(f"hub_{bk.name}: {n} keys staged")
         msg = "DryRun | " + "; ".join([f"{len(business_keys)} business key(s)", *plan])
         msg += "".join("\n" + d for d in ddl)

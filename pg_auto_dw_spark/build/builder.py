@@ -4,8 +4,9 @@ DDL -> target-column resolution -> dv_repo persistence -> load
 controller/dv_builder.rs).
 
 The ready-set is column-grain metadata, so collecting it to the driver
-(as the reference's SPI cursor does) is the correct altitude; all
-data-plane work (hub/sat loads) stays distributed.
+(as the reference's SPI cursor does) is the correct altitude. Hub and
+satellite loads stay distributed, except an incremental load small
+enough to stage on the driver (the ``loader`` module docstring).
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from ..model.dv_schema import (
 )
 from ..model.status import RTD, status_rows
 from .ddl import hub_schema, satellite_schemas
-from .loader import load_hub, load_satellite
+from .loader import load_hub, load_satellite, stage_business_key
 
 
 _PULLED = (
@@ -163,6 +164,11 @@ def load_business_key(
     ``business_key`` land in one ``wh.transaction`` commit. Returns the
     rows appended per target (``hub_<name>``, ``sat_<key>``).
 
+    When ``stage_business_key`` puts the load in the driver regime, one
+    Spark job stages every leg and each leg anti-joins and appends on
+    the driver; otherwise each leg is its own Spark anti-join write
+    (``loader`` module docstring). Both regimes append the same rows.
+
     The anti-joins already make a crashed load re-runnable; the
     transaction also removes the window where the hub shows keys whose
     satellite rows are not yet visible -- readers see the batch entirely
@@ -171,10 +177,23 @@ def load_business_key(
     hub = f"hub_{business_key.name}"
     tables = [hub] + [f"sat_{key}" for key in business_key.satellites()]
     with wh.transaction([f"{dw_schema}.{t}" for t in tables]) as txn:
-        counts = {hub: load_hub(wh, source, business_key, dw_schema, load_ts, writer=txn.append)}
+        staged = stage_business_key(wh, source, business_key, dw_schema, load_ts) or {}
+        counts = {
+            hub: load_hub(
+                wh, source, business_key, dw_schema, load_ts, writer=txn, staged=staged.get(hub)
+            )
+        }
         for key in business_key.satellites():
-            counts[f"sat_{key}"] = load_satellite(
-                wh, source, business_key, key, dw_schema, load_ts, writer=txn.append
+            sat = f"sat_{key}"
+            counts[sat] = load_satellite(
+                wh,
+                source,
+                business_key,
+                key,
+                dw_schema,
+                load_ts,
+                writer=txn,
+                staged=staged.get(sat),
             )
     return counts
 

@@ -30,7 +30,7 @@ from pyspark.sql import types as T
 from ..functions.hashing import key_text
 from ..warehouse import Warehouse
 from .ddl import ddl_sql
-from .loader import _append_new, _stage
+from .loader import _append_new, _Leg, _stage
 
 
 @dataclass
@@ -72,13 +72,13 @@ def link_stage_df(
     columns, plus each referenced hub's key hash."""
     types = dict(source.dtypes)
     link_cols = [c for u in spec.units for c in u.source_columns]
-    return _stage(
-        source,
+    leg = _Leg(
         {f"link_{spec.name}_hk": key_text(link_cols, types)},
         spec.schema_name,
-        load_ts,
-        derived={f"hub_{u.bk_name}_hk": key_text(u.source_columns, types) for u in spec.units},
+        {},
+        {f"hub_{u.bk_name}_hk": key_text(u.source_columns, types) for u in spec.units},
     )
+    return _stage(source, leg, load_ts)
 
 
 def load_link(

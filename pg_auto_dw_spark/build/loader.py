@@ -11,25 +11,63 @@ DataFrame transforms:
 - sat load: hash key + hash-diff over descriptors -> anti-join on
   (hk, hd) -> append (dv_loader.rs:325-357).
 
-Every staging frame (hub, satellite, link, multi-source hub) comes out
-of one projection, ``_stage``, and every load appends through one
-anti-join leg, ``_append_new``. ``builder.load_business_key`` runs a
-business key's hub and satellite legs in one transaction.
+What a leg stages -- its key texts, record_source and carried columns
+-- is one spec, ``_Leg`` (``_hub_leg``, ``_satellite_leg``, the link's
+in ``link.py``). In Spark every staging frame (hub, satellite, link,
+multi-source hub) comes out of one projection of it, ``_stage``, and
+every load appends through one anti-join leg, ``_append_new``.
+``builder.load_business_key`` runs a business key's hub and satellite
+legs in one transaction.
+
+A business key's load has two regimes, with one contract: the same
+rows and values appended, in the same column order, and the same
+counts returned.
+
+- **Driver** (an incremental load that fits): ONE Spark job reads every
+  leg's columns -- the same ``_Leg`` specs, hashed -- from one
+  projection of the source (``staged_rows``:
+  ``limit(STAGE_DRIVER_ROWS + 1).toArrow()``). Each
+  leg then dedups, anti-joins and appends on the driver
+  (``_append_new_rows``): the target's key columns are read
+  column-projected from the live files, and the new rows land as one
+  driver-written parquet file (``append_rows``), no Spark job.
+  Rendering and hashing still run in Spark, through
+  ``functions.hashing``.
+- **Spark** (everything else): each leg is ``_append_new``, one
+  anti-join write action: the target's key column broadcast, the dedup
+  exchange, the write -- 3 jobs per leg. It runs when the source stages
+  more than ``STAGE_DRIVER_ROWS`` rows (judged from the parquet footers
+  of a file-backed source, with no read; otherwise by the bounded
+  read), when a target's key columns
+  exceed ``spark.sql.autoBroadcastJoinThreshold`` (by footer
+  column-chunk sizes: above it the broadcast that already ships those
+  columns through the driver is off too), for date-partitioned targets,
+  and for the ghost-init load of an empty hub (the ghosts' year-0001
+  ``load_ts`` stays a JVM-parsed literal).
 
 Scale notes (100 TB posture):
 
-- The anti-join is the one shuffle in this pipeline. Both sides hash on
-  the same key (the 64-hex hash), which is uniformly distributed by
-  construction -- no skew, and AQE picks broadcast when the target side
-  is still small. With date-partitioned hubs/sats, the target scan
-  prunes to nothing on first load.
+- The bounds are measured, not guessed. Against a 1,500-key customer
+  vault (4 cores, one parquet delta of new keys, median of 3) a load
+  took, driver vs Spark regime: 10^3 rows 0.14 vs 0.97 s, 10^4 0.22 vs
+  1.10 s, 10^5 1.02 vs 2.33 s, 2*10^5 2.88 vs 3.85 s, 3*10^5 3.61 vs
+  3.98 s, 10^6 13.7 vs 12.4 s (one run). The regimes cross between
+  3*10^5 and 10^6 staged rows; ``STAGE_DRIVER_ROWS`` sits where the
+  driver still wins by 2x, at under 300 MB of driver memory. The
+  target side needs no new bound: above the broadcast threshold the
+  Spark leg's own plan stops shipping the key columns through the
+  driver.
+- At scale every leg is in the Spark regime. The anti-join is the one
+  shuffle there; both sides hash on the same uniformly distributed
+  64-hex key, so there is no skew, and with date-partitioned hubs/sats
+  the target scan prunes to nothing on first load.
 - Everything stays in whole-stage codegen: the key text and its hash
-  (``functions.hashing``) are JVM built-ins; there is no Python in the
-  load path.
-- Each load leg is ONE write action, like the reference's one
-  INSERT...SELECT: the appended-row count is observed on the write
-  (``Warehouse.append``), so nothing is persisted or counted first, and
-  the ghost check reads parquet footers instead of running a job.
+  (``functions.hashing``) are JVM built-ins; there is no Python UDF in
+  the load path.
+- The appended-row count is observed on the write (``Warehouse.append``)
+  or is the driver table's length, so nothing is persisted or counted
+  first, and the ghost check reads parquet footers instead of running
+  a job.
 - Idempotency is structural: re-running a load anti-joins everything
   away and appends 0 rows -- leaving no file or commit behind --
   matching the reference's re-run semantics.
@@ -38,7 +76,13 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import datetime
+from typing import NamedTuple
+from urllib.parse import unquote, urlparse
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -49,6 +93,12 @@ from ..warehouse import Warehouse
 GHOST_LOAD_TS_STR = "0001-01-01 00:00:00"
 GHOST_RECORD_SOURCE = "SYSTEM"
 _GHOST_KEYS = ("-1", "-2")
+
+# Rows one business key's load may stage on the driver: above it the
+# legs run in Spark. Measured (module docstring): at 10^5 staged rows
+# the driver regime is 2.3x faster; the two cross between 3*10^5 and
+# 10^6.
+STAGE_DRIVER_ROWS = 100_000
 
 
 def ghost_records_df(source: DataFrame, business_key: BusinessKey) -> DataFrame:
@@ -69,21 +119,26 @@ def ghost_records_df(source: DataFrame, business_key: BusinessKey) -> DataFrame:
     )
 
 
-def _stage(
-    source: DataFrame,
-    ids: dict[str, Column],
-    record_source: str,
-    load_ts: datetime.datetime | None,
-    carry: dict[str, Column] | None = None,
-    derived: dict[str, Column] | None = None,
-) -> DataFrame:
-    """The one staging projection behind every vault load. ``ids`` and
+class _Leg(NamedTuple):
+    """What one vault leg stages from its source: ``ids`` and
     ``derived`` map each output hash column to its key text
-    (``hashing.key_text``); ``carry`` maps plain output columns to their
-    expressions. Rows with equal ``ids`` texts are dropped as duplicates
-    -- the anti-join only removes rows already in the target, so
-    without this a non-unique source would append one key or version
-    twice in one load -- and every text is hashed AFTER that exchange.
+    (``hashing.key_text``), ``ids`` being the dedup key; ``carry`` maps
+    plain output columns to their expressions. Both regimes stage a leg
+    from this one spec: ``_stage`` in Spark, ``staged_rows`` for the
+    driver."""
+
+    ids: dict[str, Column]
+    record_source: str
+    carry: dict[str, Column]
+    derived: dict[str, Column]
+
+
+def _stage(source: DataFrame, leg: _Leg, load_ts: datetime.datetime | None) -> DataFrame:
+    """The one Spark staging projection behind every vault load. Rows
+    with equal ``leg.ids`` texts are dropped as duplicates -- the
+    anti-join only removes rows already in the target, so without this
+    a non-unique source would append one key or version twice in one
+    load -- and every text is hashed AFTER that exchange.
 
     Why the text and not the digest: hash = sha256(text), so dropping
     duplicate texts keeps exactly the rows dropping duplicate digests
@@ -97,41 +152,70 @@ def _stage(
     timestamp: CURRENT_TIMESTAMP AT TIME ZONE 'UTC', dv_loader.rs:173),
     record_source, the other ids, the derived hashes, the carry columns.
     """
-    texts = {**ids, **(derived or {})}
-    carry = carry or {}
+    texts = {**leg.ids, **leg.derived}
     pre = source.select(
         *[t.alias(f"__{n}") for n, t in texts.items()],
-        *[c.alias(n) for n, c in carry.items()],
-    ).dropDuplicates([f"__{n}" for n in ids])
+        *[c.alias(n) for n, c in leg.carry.items()],
+    ).dropDuplicates([f"__{n}" for n in leg.ids])
     first, *rest = texts
-    ts = F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
     return pre.select(
         sha256_hex(F.col(f"__{first}")).alias(first),
-        ts.alias("load_ts"),
-        F.lit(record_source).alias("record_source"),
+        _load_ts(load_ts).alias("load_ts"),
+        F.lit(leg.record_source).alias("record_source"),
         *[sha256_hex(F.col(f"__{n}")).alias(n) for n in rest],
-        *carry,
+        *leg.carry,
     )
 
 
-def _hub_stage(
-    source: DataFrame,
-    business_key: BusinessKey,
-    load_ts: datetime.datetime | None,
-    source_index: int,
-) -> DataFrame:
-    """Hub rows of the source that every part link's
-    ``source_columns[source_index]`` describes."""
+def _load_ts(load_ts: datetime.datetime | None) -> Column:
+    return F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
+
+
+def _hub_leg(source: DataFrame, business_key: BusinessKey, source_index: int) -> _Leg:
+    """The hub leg over the source that every part link's
+    ``source_columns[source_index]`` describes: hk = sha256(concat_ws(',',
+    part::text...)), record_source = that source's schema name
+    (dv_loader.rs:169-175), the rendered ``_bk`` parts."""
     links = business_key.business_key_part_links
     cols = [p.source_columns[source_index].column_name for p in links]
     types = dict(source.dtypes)
-    return _stage(
-        source,
+    return _Leg(
         {f"hub_{business_key.name}_hk": key_text(cols, types)},
         links[0].source_columns[source_index].schema_name,
-        load_ts,
-        carry={f"{p.alias}_bk": t for p, t in zip(links, render(cols, types))},
+        {f"{p.alias}_bk": t for p, t in zip(links, render(cols, types))},
+        {},
     )
+
+
+def _satellite_leg(source: DataFrame, business_key: BusinessKey, satellite_key: str) -> _Leg:
+    """The satellite leg (dv_loader.rs:325-357): hub hash key + hash-diff
+    over this satellite's descriptor columns, which it carries in
+    source types."""
+    descriptors = [
+        (d.descriptor_link.alias, d.descriptor_link.source_column.column_name)
+        for d in business_key.satellites()[satellite_key]
+        if d.descriptor_link.source_column
+    ]
+    key_cols = [p.source_columns[0].column_name for p in business_key.business_key_part_links]
+    types = dict(source.dtypes)
+    return _Leg(
+        {
+            f"hub_{business_key.name}_hk": key_text(key_cols, types),
+            f"sat_{satellite_key}_hd": key_text([c for _, c in descriptors], types),
+        },
+        business_key.source_table()[0],
+        {alias: F.col(c) for alias, c in descriptors},
+        {},
+    )
+
+
+def _legs(source: DataFrame, business_key: BusinessKey) -> dict[str, _Leg]:
+    """Every leg of a business key's load, by target table (no schema):
+    the hub, then each satellite."""
+    legs = {f"hub_{business_key.name}": _hub_leg(source, business_key, 0)}
+    for key in business_key.satellites():
+        legs[f"sat_{key}"] = _satellite_leg(source, business_key, key)
+    return legs
 
 
 def hub_stage_df(
@@ -141,12 +225,11 @@ def hub_stage_df(
 ) -> DataFrame:
     """Staged hub rows from a source DataFrame (dv_loader.rs:160-176).
 
-    hk = sha256(concat_ws(',', part::text...)); record_source = source
-    schema name (dv_loader.rs:169-175). The reference relies on source
-    PK uniqueness instead of de-duplicating; duplicate keys are dropped
-    here so a non-unique source can't corrupt the hub -- semantics
-    identical on unique sources."""
-    return _hub_stage(source, business_key, load_ts, 0)
+    The reference relies on source PK uniqueness instead of
+    de-duplicating; duplicate keys are dropped here so a non-unique
+    source can't corrupt the hub -- semantics identical on unique
+    sources."""
+    return _stage(source, _hub_leg(source, business_key, 0), load_ts)
 
 
 def satellite_stage_df(
@@ -155,27 +238,8 @@ def satellite_stage_df(
     satellite_key: str,
     load_ts: datetime.datetime | None = None,
 ) -> DataFrame:
-    """Staged satellite rows (dv_loader.rs:325-357): hub hash key +
-    hash-diff over this satellite's descriptor columns + the descriptor
-    columns themselves in source types, one row per (hk, hd)."""
-    links = [
-        d.descriptor_link
-        for d in business_key.satellites()[satellite_key]
-        if d.descriptor_link.source_column
-    ]
-    key_cols = [p.source_columns[0].column_name for p in business_key.business_key_part_links]
-    desc_cols = [link.source_column.column_name for link in links]
-    types = dict(source.dtypes)
-    return _stage(
-        source,
-        {
-            f"hub_{business_key.name}_hk": key_text(key_cols, types),
-            f"sat_{satellite_key}_hd": key_text(desc_cols, types),
-        },
-        business_key.source_table()[0],
-        load_ts,
-        carry={link.alias: F.col(c) for link, c in zip(links, desc_cols)},
-    )
+    """Staged satellite rows, one per (hk, hd)."""
+    return _stage(source, _satellite_leg(source, business_key, satellite_key), load_ts)
 
 
 def _with_partition_cols(wh: Warehouse, table: str, df: DataFrame) -> DataFrame:
@@ -186,18 +250,42 @@ def _with_partition_cols(wh: Warehouse, table: str, df: DataFrame) -> DataFrame:
     return df
 
 
-def _append_new(wh: Warehouse, table: str, staged: DataFrame, on: list[str], sink=None) -> int:
+def _append_new(wh: Warehouse, table: str, staged: DataFrame, on: list[str], writer=None) -> int:
     """The one anti-join leg (dv_loader.rs:177-181,339-346): append the
-    staged rows whose ``on`` key the live table lacks, through ``sink``
-    (default ``wh.append``). Returns the rows appended, as the sink
-    observes them on the write. The anti-join always reads the LIVE
+    staged rows whose ``on`` key the live table lacks, through
+    ``writer``'s ``append`` (default ``wh``). Returns the rows appended,
+    as the write observes them. The anti-join always reads the LIVE
     table -- correct inside a transaction, where each table is staged
     by one leg whose rows are key-novel by construction."""
     existing = wh.read(table)
     new_rows = _with_partition_cols(wh, table, staged).join(
         existing.select(*on), on=on, how="left_anti"
     )
-    return (sink or wh.append)(table, new_rows.select(*existing.columns))
+    return (writer or wh).append(table, new_rows.select(*existing.columns))
+
+
+def _key_array(table: pa.Table, on: list[str]) -> pa.Array:
+    """The ``on`` digests of each row as one string: fixed-width 64-hex
+    digests concatenate without ambiguity."""
+    cols = [table[c] for c in on]
+    joined = cols[0] if len(cols) == 1 else pc.binary_join_element_wise(*cols, "")
+    return joined.combine_chunks() if isinstance(joined, pa.ChunkedArray) else joined
+
+
+def _append_new_rows(wh: Warehouse, table: str, staged: pa.Table, on: list[str], writer=None) -> int:
+    """``_append_new`` on the driver, over a leg's table from ``staged_rows``:
+    one row per ``on`` key (the first, as ``dropDuplicates`` keeps on
+    an ordered single-partition source; equal digests are equal key
+    texts, so this drops the rows ``_stage``'s dedup drops), minus the
+    keys the live table holds (a column-projected Arrow read of its
+    files), appended through ``writer``'s ``append_rows`` as one
+    driver-written file."""
+    keys = _key_array(staged, on)
+    _, first = np.unique(keys.dictionary_encode().indices.to_numpy(), return_index=True)
+    staged, keys = staged.take(first), keys.take(first)
+    live = _key_array(wh.read_arrow(table, columns=on), on)
+    new_rows = staged.filter(pc.invert(pc.is_in(keys, value_set=live)))
+    return (writer or wh).append_rows(table, new_rows)
 
 
 def _load_hub_rows(
@@ -205,22 +293,110 @@ def _load_hub_rows(
     business_key: BusinessKey,
     dw_schema: str,
     staged: DataFrame,
-    sink=None,
+    writer=None,
 ) -> int:
     """Ghost-init, then the anti-join append of ``staged`` hub rows."""
     table = f"{dw_schema}.hub_{business_key.name}"
     hk = f"hub_{business_key.name}_hk"
-    sink = sink or wh.append
+    writer = writer or wh
     appended = 0
     # Ghost init only when the hub is empty (dv_loader.rs:111-118 A4).
     if wh.row_count(table) == 0:
         ghosts = ghost_records_df(staged, business_key)
-        appended += sink(table, _with_partition_cols(wh, table, ghosts))
+        appended += writer.append(table, _with_partition_cols(wh, table, ghosts))
         # The ghosts own the keys '-1'/'-2', as the reference's NOT EXISTS
         # skips them after its ghost insert. Filtered here because inside
         # a transaction the anti-join reads a live hub without the ghosts.
         staged = staged.filter(~F.col(hk).isin([hash_text(k) for k in _GHOST_KEYS]))
-    return appended + _append_new(wh, table, staged, [hk], sink)
+    return appended + _append_new(wh, table, staged, [hk], writer)
+
+
+def _footer_rows(source: DataFrame, bound: int) -> int | None:
+    """Rows in the local parquet files ``source`` reads, summed from
+    their footers until the sum passes ``bound``; None when it reads no
+    such file (an in-memory frame, another format or file system). An
+    estimate, not the staged count: a filter stages fewer rows, a
+    self-union more."""
+    files = source.inputFiles()
+    if not files:
+        return None
+    total = 0
+    for uri in files:
+        url = urlparse(uri)
+        if url.scheme not in ("", "file"):
+            return None
+        try:
+            total += pq.read_metadata(unquote(url.path)).num_rows
+        except (OSError, pa.ArrowInvalid):
+            return None
+        if total > bound:
+            break
+    return total
+
+
+def staged_rows(
+    source: DataFrame,
+    business_key: BusinessKey,
+    load_ts: datetime.datetime | None = None,
+) -> dict[str, pa.Table] | None:
+    """Every leg of ``business_key``'s load (``_legs``) staged from ONE
+    projection of ``source``, read in one Spark job with
+    ``limit(STAGE_DRIVER_ROWS + 1).toArrow()``: per target table, the
+    columns ``_stage`` gives it (each id and derived text hashed,
+    ``load_ts``, ``record_source``, the carry columns), neither
+    deduplicated nor filtered. None when the source stages more than
+    ``STAGE_DRIVER_ROWS`` rows; a source whose parquet footers already
+    hold more (``_footer_rows``) is not read at all."""
+    footer = _footer_rows(source, STAGE_DRIVER_ROWS)
+    if footer is not None and footer > STAGE_DRIVER_ROWS:
+        return None
+    legs = _legs(source, business_key)
+    cols = [_load_ts(load_ts).alias("load_ts")]
+    for target, leg in legs.items():
+        texts = {**leg.ids, **leg.derived}
+        cols += [sha256_hex(t).alias(f"{target}.{n}") for n, t in texts.items()]
+        cols.append(F.lit(leg.record_source).alias(f"{target}.record_source"))
+        cols += [c.alias(f"{target}.{n}") for n, c in leg.carry.items()]
+    fetched = source.select(*cols).limit(STAGE_DRIVER_ROWS + 1).toArrow()
+    if fetched.num_rows > STAGE_DRIVER_ROWS:
+        return None
+    fetched = fetched.combine_chunks()
+    out = {}
+    for target in legs:
+        names = [n for n in fetched.column_names if n.startswith(f"{target}.")]
+        out[target] = pa.table(
+            [fetched["load_ts"], *[fetched[n] for n in names]],
+            names=["load_ts", *[n.removeprefix(f"{target}.") for n in names]],
+        )
+    return out
+
+
+def stage_business_key(
+    wh: Warehouse,
+    source: DataFrame,
+    business_key: BusinessKey,
+    dw_schema: str = "dw",
+    load_ts: datetime.datetime | None = None,
+) -> dict[str, pa.Table] | None:
+    """``staged_rows`` when ``business_key``'s load runs in the driver
+    regime, else None (see the module docstring): every target is
+    registered and unpartitioned, the hub already holds its ghosts, and
+    each target's key columns fit the broadcast threshold by their
+    footer column-chunk sizes. The targets are judged before the read,
+    so a load they send to Spark runs no extra job."""
+    hk = f"hub_{business_key.name}_hk"
+    targets = {f"{dw_schema}.hub_{business_key.name}": [hk]}
+    for key in business_key.satellites():
+        targets[f"{dw_schema}.sat_{key}"] = [hk, f"sat_{key}_hd"]
+    if any(t not in wh._schemas or t in wh._partitioning for t in targets):
+        return None
+    if wh.row_count(f"{dw_schema}.hub_{business_key.name}") == 0:
+        return None
+    # spark.sql.autoBroadcastJoinThreshold, parsed to bytes (-1: off)
+    threshold = wh.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if any(wh.column_bytes(t, on) > threshold for t, on in targets.items()):
+        return None
+    return staged_rows(source, business_key, load_ts)
 
 
 def load_hub(
@@ -230,12 +406,19 @@ def load_hub(
     dw_schema: str = "dw",
     load_ts: datetime.datetime | None = None,
     writer=None,
+    staged: pa.Table | None = None,
 ) -> int:
     """Ghost-init + anti-join insert of new hub keys. Returns rows
-    appended. ``writer`` overrides the append sink (a transaction's
-    ``txn.append``, as ``builder.load_business_key`` passes)."""
-    staged = hub_stage_df(source, business_key, load_ts=load_ts)
-    return _load_hub_rows(wh, business_key, dw_schema, staged, writer)
+    appended. ``writer`` is the write surface the leg appends through
+    (default ``wh``; ``builder.load_business_key`` passes its
+    transaction). With ``staged`` (the hub's table from
+    ``stage_business_key``) the leg runs on the driver; the hub then
+    holds its ghosts already."""
+    table = f"{dw_schema}.hub_{business_key.name}"
+    if staged is not None:
+        return _append_new_rows(wh, table, staged, [f"hub_{business_key.name}_hk"], writer)
+    staged_df = hub_stage_df(source, business_key, load_ts=load_ts)
+    return _load_hub_rows(wh, business_key, dw_schema, staged_df, writer)
 
 
 def load_satellite(
@@ -246,17 +429,17 @@ def load_satellite(
     dw_schema: str = "dw",
     load_ts: datetime.datetime | None = None,
     writer=None,
+    staged: pa.Table | None = None,
 ) -> int:
     """Anti-join (hk, hd) insert of new/changed satellite rows
-    (dv_loader.rs:339-346). Returns rows appended. ``writer`` as in
-    ``load_hub``."""
-    return _append_new(
-        wh,
-        f"{dw_schema}.sat_{satellite_key}",
-        satellite_stage_df(source, business_key, satellite_key, load_ts=load_ts),
-        [f"hub_{business_key.name}_hk", f"sat_{satellite_key}_hd"],
-        writer,
-    )
+    (dv_loader.rs:339-346). Returns rows appended. ``writer`` and
+    ``staged`` as in ``load_hub``."""
+    table = f"{dw_schema}.sat_{satellite_key}"
+    on = [f"hub_{business_key.name}_hk", f"sat_{satellite_key}_hd"]
+    if staged is not None:
+        return _append_new_rows(wh, table, staged, on, writer)
+    staged_df = satellite_stage_df(source, business_key, satellite_key, load_ts=load_ts)
+    return _append_new(wh, table, staged_df, on, writer)
 
 
 def load_hub_multi(
@@ -280,7 +463,7 @@ def load_hub_multi(
     hk = f"hub_{business_key.name}_hk"
     union = None
     for priority, (source, src_idx) in enumerate(sources):
-        staged = _hub_stage(source, business_key, load_ts, src_idx).withColumn(
+        staged = _stage(source, _hub_leg(source, business_key, src_idx), load_ts).withColumn(
             "__prio", F.lit(priority)
         )
         union = staged if union is None else union.unionByName(staged)

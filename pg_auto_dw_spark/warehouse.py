@@ -91,15 +91,18 @@ class _WriteVerbs:
             name, "append", self._wh._frame_write(name, df), frozenset(), in_place=True
         )
 
-    def append_rows(self, name: str, rows: list[tuple]) -> int:
+    def append_rows(self, name: str, rows) -> int:
         """Append rows the driver already holds (log lines, classifier
-        responses, a build's DVSchema) as ONE parquet file written on
-        the driver -- no Spark job. Values convert exactly as
-        ``createDataFrame(rows, schema)`` converts them: timestamps go
+        responses, a build's DVSchema, a vault leg's new rows) as ONE
+        parquet file written on the driver -- no Spark job. ``rows`` are
+        tuples, whose values convert exactly as
+        ``createDataFrame(rows, schema)`` converts them (timestamps go
         through ``TimestampType.toInternal``, so naive datetimes are
-        read in the driver's local time zone. Same rules as ``append``;
-        needs a registered schema and an unpartitioned table. Returns
-        ``len(rows)``."""
+        read in the driver's local time zone), or an Arrow table, whose
+        columns of the schema's names are cast to its Arrow types
+        (zone-aware timestamps keep their instant). Same rules as
+        ``append``; needs a registered schema and an unpartitioned
+        table. Returns the number of rows."""
         return self._write(
             name, "append", self._wh._rows_write(name, rows), frozenset(), in_place=True
         )
@@ -878,18 +881,18 @@ class Warehouse(_WriteVerbs):
 
         return write
 
-    def _rows_write(self, name: str, rows: list[tuple]):
+    def _rows_write(self, name: str, rows):
         """``write(target) -> rows`` for a driver-side append of ``rows``."""
         table = _arrow_table(self._driver_schema(name), rows)
 
         def write(target: str) -> int:
-            if rows:
+            if table.num_rows:
                 os.makedirs(target, exist_ok=True)
                 fname = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
                 tmp = os.path.join(target, f".{fname}.tmp")  # hidden from scans
                 pq.write_table(table, tmp, compression="snappy")
                 os.replace(tmp, os.path.join(target, fname))
-            return len(rows)
+            return table.num_rows
 
         return write
 
@@ -955,22 +958,28 @@ class Warehouse(_WriteVerbs):
                 except OSError:
                     shutil.copy2(s, d)
 
-    def read_arrow(self, name: str):
-        """The live table as one Arrow table of its registered schema,
-        read on the driver -- for metadata-sized, unpartitioned tables.
-        Spark writes timestamps as INT96, which Arrow reads as naive
-        values that ARE the UTC instant: they are labelled UTC, never
-        shifted, so they match what ``append_rows`` writes. The result
-        is one chunk: ``createDataFrame`` drops the rows after an empty
-        chunk, and ``create_table``'s zero-row part file makes one."""
+    def read_arrow(self, name: str, columns: list[str] | None = None):
+        """The live table as one Arrow table of its registered schema
+        (only ``columns``, when given: each file is read projected to
+        them), read on the driver -- for metadata-sized, unpartitioned
+        tables, or a few columns of a bigger one. Spark writes
+        timestamps as INT96, which Arrow reads as naive values that ARE
+        the UTC instant: they are labelled UTC, never shifted, so they
+        match what ``append_rows`` writes. The result is one chunk:
+        ``createDataFrame`` drops the rows after an empty chunk, and
+        ``create_table``'s zero-row part file makes one."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
         schema = to_arrow_schema(self._driver_schema(name))
+        if columns is not None:
+            schema = pa.schema([schema.field(c) for c in columns])
         live = self.path(name)
         parts = [schema.empty_table()]
         for rel in self.data_files(name):
-            t = pq.read_table(os.path.join(live, rel), coerce_int96_timestamp_unit="us")
+            t = pq.read_table(
+                os.path.join(live, rel), columns=schema.names, coerce_int96_timestamp_unit="us"
+            )
             cols = [t.column(f.name).cast(f.type) for f in schema]
             parts.append(pa.Table.from_arrays(cols, schema=schema))
         return pa.concat_tables(parts).combine_chunks()
@@ -992,6 +1001,18 @@ class Warehouse(_WriteVerbs):
     def row_count(self, name: str) -> int:
         """Rows in the live table: the sum of footer ``num_rows``."""
         return sum(md.num_rows for _, md in self._footers(name))
+
+    def column_bytes(self, name: str, columns: list[str]) -> int:
+        """Uncompressed bytes of ``columns`` in the live table: the sum
+        of their footer column-chunk sizes, what a column-projected
+        read of them decodes."""
+        total = 0
+        for _, md in self._footers(name):
+            idx = [md.schema.names.index(c) for c in columns]
+            for i in range(md.num_row_groups):
+                rg = md.row_group(i)
+                total += sum(rg.column(j).total_uncompressed_size for j in idx)
+        return total
 
     def max_value(self, name: str, column: str) -> int | None:
         """Largest value of an integer column from the footers' min/max
@@ -1346,13 +1367,16 @@ def _drop_empty_files(root: str, before: set[str]) -> None:
             os.unlink(crc)
 
 
-def _arrow_table(schema: T.StructType, rows: list[tuple]):
-    """``rows`` as an Arrow table of ``schema``'s Arrow types, values
-    converted as ``createDataFrame`` converts them."""
+def _arrow_table(schema: T.StructType, rows):
+    """``rows`` as an Arrow table of ``schema``'s Arrow types: tuples
+    converted as ``createDataFrame`` converts them, or an Arrow table's
+    columns of the schema's names cast."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
+    if isinstance(rows, pa.Table):
+        return rows.select(arrow_schema.names).cast(arrow_schema)
     columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
     arrays = []
     for f, values, af in zip(schema.fields, columns, arrow_schema):

@@ -1,15 +1,18 @@
 """The one Data Vault load path: go('Push-Table') loads a business key's
-hub and satellites in one transaction, runs as many Spark jobs as the
-separate hub and satellite loads did, lets the ghost records own their
-keys, and go() numbers build_call from the ready set it collected once."""
+hub and satellites in one transaction, in one Spark job when the delta
+stages on the driver and three per leg when the legs run in Spark, lets
+the ghost records own their keys, and go() numbers build_call from the
+ready set it collected once."""
 
 import ast
 import re
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 import pg_auto_dw_spark.build.builder as builder
+from pg_auto_dw_spark.build import loader
 from pg_auto_dw_spark.build.builder import load_business_key
 from pg_auto_dw_spark.build.loader import GHOST_RECORD_SOURCE
 from tests.test_catalog_crawl import _wait_for_listener
@@ -17,10 +20,14 @@ from tests.test_end_to_end import LOAD_TS, make_autodw
 from tests.test_loader import _setup
 
 # Spark jobs one go('Push-Table') of the customer delta runs untraced,
-# the deployed DVSchema already cached: three per anti-join append (the
-# anti-join's two shuffle stages and the write) for the hub and the two
-# satellites -- the same count as the non-transactional loads before
-PUSH_TABLE_JOBS = 9
+# the deployed DVSchema already cached. Driver regime: the one staging
+# read; every anti-join and append runs on the driver.
+PUSH_TABLE_JOBS = 1
+# Spark regime (the staged-row bound one row under the source's
+# parquet footers, so no staging read): per leg -- hub and two
+# satellites -- the broadcast of the target's key columns, the dedup
+# exchange and the write.
+PUSH_TABLE_SPARK_JOBS = 9
 
 
 def _deployed(spark, warehouse_dir, sf_dir):
@@ -66,18 +73,49 @@ def test_push_table_satellite_failure_leaves_hub_untouched(
     assert sats and set(sats.values()) == {150}
 
 
-def test_push_table_job_count(spark, warehouse_dir, sf_dir):
-    adw, _ = _deployed(spark, warehouse_dir, sf_dir)
+def _push_jobs(spark, adw):
+    """(Push-Table message, Spark jobs it ran) for the customer delta.
+    The status tracker keeps a group's jobs across calls, so each call
+    gets its own group."""
     sc = spark.sparkContext
-    sc.setJobGroup("push-table-jobs", "push-table-jobs")
+    group = f"push-table-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
     try:
         msg = adw.go("Push-Table", "main.customer", load_ts=LOAD_TS)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     _wait_for_listener(sc)
+    return msg, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_push_table_job_count(spark, warehouse_dir, sf_dir):
+    adw, _ = _deployed(spark, warehouse_dir, sf_dir)
+    msg, jobs = _push_jobs(spark, adw)
     assert _counts(msg)[0] == 150
-    jobs = sc.statusTracker().getJobIdsForGroup("push-table-jobs")
-    assert len(jobs) == PUSH_TABLE_JOBS
+    assert jobs == PUSH_TABLE_JOBS
+
+
+def test_push_table_spark_regime_job_count(spark, warehouse_dir, sf_dir, monkeypatch):
+    adw, _ = _deployed(spark, warehouse_dir, sf_dir)
+    monkeypatch.setattr(loader, "STAGE_DRIVER_ROWS", 149)
+    msg, jobs = _push_jobs(spark, adw)
+    assert _counts(msg)[0] == 150
+    assert jobs == PUSH_TABLE_SPARK_JOBS
+
+
+@pytest.mark.parametrize("bound", [loader.STAGE_DRIVER_ROWS, 149], ids=["driver", "spark"])
+def test_dry_run_counts_distinct_keys(spark, warehouse_dir, sf_dir, monkeypatch, bound):
+    """DryRun counts the distinct hub keys of a source whose every row
+    is doubled, from the staging read or -- its 150-row footer over the
+    bound -- from the Spark hub stage."""
+    adw = make_autodw(spark, warehouse_dir, sf_dir)
+    adw.source_include("main", "customer")
+    adw.classify_pending()
+    source = adw.resolve_source("main", "customer")
+    adw.register_source("main", "customer", source.unionByName(source))
+    monkeypatch.setattr(loader, "STAGE_DRIVER_ROWS", bound)
+    dry = adw.go("DryRun")
+    assert dry.startswith("DryRun | 1 business key(s); hub_customer: 150 keys staged\n")
 
 
 def test_ghost_records_own_their_keys(spark, warehouse_dir, sf_dir):
